@@ -44,13 +44,16 @@ object GraftSession {
   }
 
   /** Scoped runtime-conf override: set `pairs`, run `body`, restore every
-    * key to its prior value (or unset). The one implementation of the
-    * save/set/try/finally dance the query gates need — each hand-rolled
-    * copy was a fresh opportunity for the classic capture-after-set or
-    * wrong-restore-order bug.
+    * key to its prior value, or unset it if it was unset. The one
+    * implementation of the save/set/try/finally dance the query gates need —
+    * each hand-rolled copy was a fresh opportunity for the classic
+    * capture-after-set or wrong-restore-order bug. Prior values come from
+    * `getAll`, which holds only keys actually set: `getOption` also returns
+    * defaults, and restoring one would pin the key to it.
     */
   def withConfs[A](spark: SparkSession, pairs: (String, String)*)(body: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val set = spark.conf.getAll
+    val prev = pairs.map { case (k, _) => k -> set.get(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally prev.foreach {

@@ -4,6 +4,9 @@ import graft.functions.BqFunctions
 import graft.udf._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CatalogBridge
+
+import java.lang.ref.WeakReference
 
 /** The reference's flagship 3-node pipeline, end-to-end on Spark:
   *
@@ -26,9 +29,10 @@ import org.apache.spark.sql.functions._
   * Note on the reference's `WHERE id = '{{ id }}'` (test_table_function.sql:13):
   * that Jinja splice renders at dbt-compile time; we implement the evident
   * intent — the predicate binds to the call-site argument at runtime
-  * (SURVEY.md §2 O3). The TVF is a real catalog object (`CREATE FUNCTION …
-  * RETURNS TABLE`), so Catalyst inlines the body and pushes `id = <arg>`
-  * down to the parquet scan.
+  * (SURVEY.md §2 O3), passed as a bound query parameter. The TVF is a real
+  * catalog object (`CREATE FUNCTION … RETURNS TABLE`), so Catalyst inlines
+  * the body into every calling plan. [[register]] materializes the three
+  * catalog objects once per session; each `datamart` call only invokes them.
   */
 object ReferencePipeline {
 
@@ -89,24 +93,60 @@ object ReferencePipeline {
     description = "Rows of test_table for one id, with column1 cast and column2 parsed."
   )
 
-  /** Register source view + UDF + TVF in the session catalog. */
+  /** Materialize the source view, the UDF and the TVF into `spark`'s catalog
+    * — once per session and `sfDir`, like the reference's own `function` and
+    * `table_function` nodes, which dbt materializes once and the datamart
+    * then only calls. A later call skips the DDL (and the parquet schema read
+    * behind the view) only while the session still holds the exact catalog
+    * instances the last registration for this `sfDir` created; any of them
+    * dropped or replaced, even by an identical definition, or another
+    * `sfDir`, registers again. Safe to call from concurrent threads (the
+    * [[graft.udf.ModelRunner]] pool does). `tune` applies on every call.
+    */
   def register(spark: SparkSession, sfDir: String): Unit = {
     GraftSession.tune(spark)
-    testTable(spark, sfDir).createOrReplaceTempView("test_table")
-    Materializer.materializeFunction(spark, parseDatetimeSpec, temporary = true)
-    Materializer.materializeTableFunction(spark, testTableFunctionSpec, temporary = true)
+    registrations.synchronized {
+      if (!Option(registrations.get(spark)).exists(_.holds(spark, sfDir))) {
+        testTable(spark, sfDir).createOrReplaceTempView("test_table")
+        Materializer.materializeFunction(spark, parseDatetimeSpec, temporary = true)
+        Materializer.materializeTableFunction(spark, testTableFunctionSpec, temporary = true)
+        registrations.put(spark, new Registration(sfDir, catalogObjects(spark)))
+      }
+    }
   }
 
-  /** The datamart query (/root/reference/models/datamart/test_datamart.sql:1-5)
-    * with runtime-bound TVF argument.
+  /** The catalog's own instances of the three registered objects. */
+  private def catalogObjects(spark: SparkSession): Seq[Option[AnyRef]] = {
+    val c = CatalogBridge.catalog(spark)
+    Seq(
+      c.getRawTempView("test_table"),
+      c.lookupBuiltinOrTempFunction(parseDatetimeSpec.name),
+      c.lookupBuiltinOrTempTableFunction(testTableFunctionSpec.name))
+  }
+
+  /** What one registration left in a session's catalog. The instances are
+    * held weakly: the view's plan references its session, so a strong
+    * reference here would keep the session (the map's weak key) alive.
+    */
+  private final class Registration(sfDir: String, objects: Seq[Option[AnyRef]]) {
+    private val refs = objects.map(o => new WeakReference(o.orNull))
+    def holds(spark: SparkSession, dir: String): Boolean =
+      dir == sfDir && catalogObjects(spark).zip(refs).forall { case (o, r) => o.exists(_ eq r.get) }
+  }
+
+  private val registrations = new java.util.WeakHashMap[SparkSession, Registration]()
+
+  /** The datamart query (/root/reference/models/datamart/test_datamart.sql:1-5).
+    * The TVF argument is bound as the named parameter `:id`, never spliced
+    * into the SQL text, so no id can change the query.
     */
   def datamart(spark: SparkSession, sfDir: String, id: String = "13"): DataFrame = {
     register(spark, sfDir)
     spark.sql(
-      s"""SELECT column1, datetime
-         |FROM test_table_function('${id.replace("'", "''")}')
-         |ORDER BY column1""".stripMargin
-    )
+      """SELECT column1, datetime
+        |FROM test_table_function(:id)
+        |ORDER BY column1""".stripMargin,
+      Map("id" -> id))
   }
 
   /** The datamart as a managed Table model with persisted docs — the full

@@ -100,5 +100,6 @@ object Materializer {
     materialize(spark, createTableFunctionSql(spec, database, temporary), spec.name, preHooks, postHooks)
   }
 
-  private def escape(s: String): String = s.replace("\\", "\\\\").replace("'", "\\'")
+  /** Escape `s` for a single-quoted Spark SQL string literal. */
+  private[udf] def escape(s: String): String = s.replace("\\", "\\\\").replace("'", "\\'")
 }

@@ -1,6 +1,9 @@
 package graft.udf
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.graftbridge.CatalogBridge
 
 import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
@@ -105,9 +108,10 @@ final class ModelRunner(models: Seq[Model]) {
               case Materialization.View =>
                 df.createOrReplaceTempView(m.name)
               case Materialization.Table =>
+                clearOrphanedLocation(spark, m.name)
                 withColumnComments(df, m.docs).write.mode("overwrite").saveAsTable(m.name)
                 m.docs.description.foreach { d =>
-                  spark.sql(s"COMMENT ON TABLE ${m.name} IS '${d.replace("'", "''")}'")
+                  spark.sql(s"COMMENT ON TABLE ${m.name} IS '${Materializer.escape(d)}'")
                 }
             }
             m.name -> df
@@ -149,6 +153,23 @@ final class ModelRunner(models: Seq[Model]) {
       dependents.getOrElse(n, Nil).foreach(d => if (changed.add(d)) spread(d))
     changed.toSeq.foreach(spread)
     m => changed.contains(m.name)
+  }
+
+  /** A Table model is create-or-replace, but `saveAsTable` refuses to create
+    * a table whose default location is a non-empty directory
+    * (`LOCATION_ALREADY_EXISTS`). An earlier process leaves exactly that when
+    * its catalog (in-memory by default) is gone but the warehouse kept the
+    * table's files. So when the catalog knows no table at `name`, whatever
+    * sits at that table's own default location is an orphan, and is removed.
+    */
+  private def clearOrphanedLocation(spark: SparkSession, name: String): Unit = {
+    val catalog = CatalogBridge.catalog(spark)
+    val ident = CatalystSqlParser.parseTableIdentifier(name)
+    if (!catalog.tableExists(ident)) {
+      val dir = new Path(catalog.defaultTablePath(ident))
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(dir)) fs.delete(dir, true)
+    }
   }
 
   /** Attach column comments to the schema before `saveAsTable` so

@@ -87,6 +87,18 @@ class ModelRunnerSpec extends SparkTestBase {
     spark.sql("DROP TABLE mr_doc_tbl")
   }
 
+  test("persist_docs: a table comment with quotes and backslashes persists verbatim") {
+    val text = """it's under C:\docs\ and says \'hi\'\"""
+    new ModelRunner(Seq(
+      Model("mr_esc_tbl", Nil, s => s.range(1).toDF("n"), Materialization.Table,
+            docs = ModelDocs(description = Some(text)))
+    )).run(spark)
+    val tblComment = spark.sql("DESCRIBE TABLE EXTENDED mr_esc_tbl").collect()
+      .find(_.getString(0) == "Comment").map(_.getString(1))
+    assert(tblComment.contains(text))
+    spark.sql("DROP TABLE mr_esc_tbl")
+  }
+
   test("selectChanged rebuilds changed models plus transitive dependents only") {
     def models(sigB: String) = Seq(
       Model("ch_a", Nil, _.range(1).toDF(), signature = "a-v1"),

@@ -1,5 +1,10 @@
 package graft
 
+import graft.udf.ModelRunner
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.CatalogBridge
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 class ReferencePipelineSpec extends SparkTestBase {
@@ -19,6 +24,109 @@ class ReferencePipelineSpec extends SparkTestBase {
     val a = ReferencePipeline.datamart(spark, sf, id = "13").collect().map(_.getLong(0)).toSet
     val b = ReferencePipeline.datamart(spark, sf, id = "7").collect().map(_.getLong(0)).toSet
     assert(a.nonEmpty && b.nonEmpty && a.intersect(b).isEmpty)
+  }
+
+  test("TVF argument is a bound parameter: quoting ids return no rows and cannot inject") {
+    val injection = """x\') UNION ALL SELECT CAST(column1 AS BIGINT), parse_datetime(column2) FROM test_table --"""
+    for (id <- Seq(injection, "a'b"))
+      assert(ReferencePipeline.datamart(spark, sf, id).count() == 0, id)
+  }
+
+  /** The catalog's own instances of the view, the UDF and the TVF. */
+  private def registered(s: org.apache.spark.sql.SparkSession = spark): Seq[AnyRef] = {
+    val c = CatalogBridge.catalog(s)
+    Seq(c.getRawTempView("test_table").get,
+      c.lookupBuiltinOrTempFunction("parse_datetime").get,
+      c.lookupBuiltinOrTempTableFunction("test_table_function").get)
+  }
+
+  private def sameInstances(a: Seq[AnyRef], b: Seq[AnyRef]): Boolean =
+    a.zip(b).forall { case (x, y) => x eq y }
+
+  /** The datamart's answer for `id`, computed straight from `events`. */
+  private def expected(dir: String, id: Long): Seq[Long] =
+    Tables.events(spark, dir).where(col("user_id") === id)
+      .select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+
+  private def column1(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).toSeq
+
+  test("repeated datamart calls reuse the registered catalog objects") {
+    ReferencePipeline.datamart(spark, sf, "13").collect()
+    val first = registered()
+    assert(column1(ReferencePipeline.datamart(spark, sf, "7")) == expected(sf, 7))
+    assert(column1(ReferencePipeline.datamart(spark, sf, "13")) == expected(sf, 13))
+    assert(sameInstances(registered(), first))
+  }
+
+  test("a dropped UDF or a replaced source view registers again") {
+    val want = expected(sf, 13)
+    ReferencePipeline.datamart(spark, sf, "13").collect()
+    val before = registered()
+
+    spark.sql("DROP TEMPORARY FUNCTION parse_datetime")
+    assert(column1(ReferencePipeline.datamart(spark, sf, "13")) == want)
+    val afterDrop = registered()
+    assert(!(afterDrop(1) eq before(1)))
+
+    // same name, other rows: the TVF would read these if nothing re-registered
+    spark.range(3).selectExpr("'13' AS id", "'1' AS column1", "'2024/01/01' AS column2")
+      .createOrReplaceTempView("test_table")
+    val planted = CatalogBridge.catalog(spark).getRawTempView("test_table").get
+    assert(column1(ReferencePipeline.datamart(spark, sf, "13")) == want)
+    assert(!(registered().head eq planted))
+  }
+
+  test("alternating scale directories give each directory's own answer") {
+    val other = "/root/testdata/sf0.01"
+    val want = Map(sf -> expected(sf, 13), other -> expected(other, 13))
+    assert(want(sf) != want(other))
+    for (dir <- Seq(sf, other, sf, other))
+      assert(column1(ReferencePipeline.datamart(spark, dir, "13")) == want(dir), dir)
+  }
+
+  test("a new session registers for itself") {
+    ReferencePipeline.datamart(spark, sf, "13").collect()
+    val mine = registered()
+    val fresh = spark.newSession()
+    assert(CatalogBridge.catalog(fresh).getRawTempView("test_table").isEmpty)
+    assert(column1(ReferencePipeline.datamart(fresh, sf, "13")) == expected(sf, 13))
+    assert(registered(fresh).zip(mine).forall { case (x, y) => !(x eq y) })
+    ReferencePipeline.datamart(spark, sf, "13").collect()
+    assert(sameInstances(registered(), mine))
+  }
+
+  test("two datamart Table models in one level register concurrently and both come out right") {
+    // start unregistered, so both pool threads race into register
+    spark.sql("DROP TEMPORARY FUNCTION IF EXISTS parse_datetime")
+    val models = Seq("dm_13" -> "13", "dm_7" -> "7").map { case (name, id) =>
+      ReferencePipeline.datamartModel(sf, id).copy(name = name)
+    }
+    val runner = new ModelRunner(models)
+    assert(runner.levels(models).size == 1)
+    runner.run(spark, parallelism = 4)
+    assert(spark.table("dm_13").select("column1").collect().map(_.getLong(0)).sorted.toSeq == expected(sf, 13))
+    assert(spark.table("dm_7").select("column1").collect().map(_.getLong(0)).sorted.toSeq == expected(sf, 7))
+    spark.sql("DROP TABLE dm_13")
+    spark.sql("DROP TABLE dm_7")
+  }
+
+  test("datamart model builds over an orphaned directory at its default location") {
+    spark.sql("DROP TABLE IF EXISTS test_datamart")
+    val dir = new Path(spark.conf.get("spark.sql.warehouse.dir"), "test_datamart")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new Path(dir, "stale.parquet"))
+    out.writeBytes("left by an earlier process")
+    out.close()
+
+    new ModelRunner(Seq(ReferencePipeline.datamartModel(sf))).run(spark)
+    val desc = spark.sql("DESCRIBE TABLE test_datamart").collect()
+      .map(r => r.getString(0) -> r.getString(2)).toMap
+    assert(desc("column1").contains("INT64"))
+    assert(desc("datetime").contains("civil datetime"))
+    val rows: Set[Row] = spark.table("test_datamart").collect().toSet
+    assert(rows.nonEmpty && rows == ReferencePipeline.datamart(spark, sf, "13").collect().toSet)
+    spark.sql("DROP TABLE test_datamart")
   }
 
   test("datamart model persists docs: DESCRIBE shows reference schema.yml comments") {
