@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Session construction + runtime tuning for the graft engine.
   *
-  * Design target is a large multi-executor cluster (the local[32] master is
+  * Design target is a large multi-executor cluster (the local[N] master is
   * only the test harness): AQE drives runtime re-planning (skew joins,
   * partition coalescing, broadcast demotion/promotion), shuffle partitions
   * default to the local core count rather than Spark's 200, and the session
@@ -12,8 +12,18 @@ import org.apache.spark.sql.SparkSession
   * equivalent of BigQuery's DATETIME used throughout the reference
   * (/root/reference/models/datamart/schema.yml:10) — are stable across
   * engines.
+  *
+  * Session policy is [[tune]], applied at two seams: [[local]], the session
+  * builder for every main except the Hive-catalog `tools.PersistenceMain`,
+  * applies it once; [[SparkEntry]] applies it again before each query build
+  * and before `entry`, so a session built elsewhere gets the same policy.
+  * Query builds never set it themselves. `SPARK_GRAFT_CPUS` is read only by
+  * [[cpus]].
   */
 object GraftSession {
+
+  /** Local thread count for the mains: `SPARK_GRAFT_CPUS`, or 4 when unset. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
 
   /** Runtime confs every entry point applies, including when the caller hands
     * us a session we did not build (the driver's Verify/Bench harness does
@@ -62,15 +72,15 @@ object GraftSession {
     }
   }
 
-  /** Local session for tests and ad-hoc runs. `local[N,2]`: allow ONE task
-    * retry, the production scheduler contract (clusters run
-    * spark.task.maxFailures=4; bare `local[N]` pins it to 1, which is the
-    * unrealistic setting) — q_write_retry plants a first-attempt task
-    * failure and grades exactly-once output through the retry.
+  /** Local session for the mains, the specs and the benchmark, with [[tune]]
+    * applied. `local[N,2]`: allow ONE task retry, the production scheduler
+    * contract (clusters run spark.task.maxFailures=4; bare `local[N]` pins it
+    * to 1, which is the unrealistic setting) — q_write_retry plants a
+    * first-attempt task failure and grades exactly-once output through the
+    * retry.
     */
-  def local(threads: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
+  def local(threads: Int, appName: String = "graft"): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$threads,2]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", threads.toString)

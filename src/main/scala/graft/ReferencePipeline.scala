@@ -101,10 +101,9 @@ object ReferencePipeline {
     * instances the last registration for this `sfDir` created; any of them
     * dropped or replaced, even by an identical definition, or another
     * `sfDir`, registers again. Safe to call from concurrent threads (the
-    * [[graft.udf.ModelRunner]] pool does). `tune` applies on every call.
+    * [[graft.udf.ModelRunner]] pool does).
     */
   def register(spark: SparkSession, sfDir: String): Unit = {
-    GraftSession.tune(spark)
     registrations.synchronized {
       if (!Option(registrations.get(spark)).exists(_.holds(spark, sfDir))) {
         testTable(spark, sfDir).createOrReplaceTempView("test_table")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.dedup.Dedup
 import graft.functions.Hashing
 import graft.text.TextAnalysis
@@ -564,7 +564,6 @@ object DedupQueries {
     QueryDef(
       "dedup_exact",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.documents(spark, dir)
           .groupBy(TextAnalysis.contentHash(col("text")).as("content_md5"))
           .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("canonical_id"))
@@ -591,7 +590,6 @@ object DedupQueries {
     QueryDef(
       "dedup_minhash_lsh",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // queries run sequentially; drop stale persists
         minhashPairsSpark(spark, dir)
       },
@@ -613,7 +611,6 @@ object DedupQueries {
     QueryDef(
       "dedup_containment",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // queries run sequentially; drop stale persists
         val docs = Tables.documents(spark, dir)
         val hs = Dedup.shingleHashSets(docs, ContainK).persist()
@@ -679,7 +676,6 @@ object DedupQueries {
     QueryDef(
       "dedup_clusters",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         clusterAssignments(spark, dir)
       },
@@ -700,7 +696,6 @@ object DedupQueries {
     QueryDef(
       "dedup_clusters_star",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         val labels = propagateStarLabels(
           minhashPairsSpark(spark, dir, reuseSigLanding = true)
@@ -725,7 +720,6 @@ object DedupQueries {
     QueryDef(
       "dedup_simhash",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // queries run sequentially; drop stale persists
         val docs = Tables.documents(spark, dir)
         val fps = Dedup.shingleHashSets(docs, ShingleK)
@@ -802,7 +796,6 @@ object DedupQueries {
     QueryDef(
       "dedup_fuzzy_names",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // repartition the probe side to the executor core count (round-12):
         // the part table is one small parquet file → ONE input partition,
         // and with the exploded block side broadcast the entire
@@ -859,7 +852,6 @@ object DedupQueries {
     QueryDef(
       "dedup_fuzzy_recall",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // GRADED STRATA: a deterministic content-independent hash selects
         // ~1/5 of brands (5 of TPC-H's 25); BOTH arms and the oracle apply
         // the same selection, so the grade stays EXACT within every sampled
@@ -939,7 +931,6 @@ object DedupQueries {
     QueryDef(
       "dedup_incremental",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         val (sigs, _) = minhashStages(spark, dir, reuseSigLanding = true)
         val isNew = pmod(Hashing.h32(concat(lit("inc:"), col("doc_id"))), lit(5L)) === 0L
@@ -1002,7 +993,6 @@ object DedupQueries {
     QueryDef(
       "dedup_minhash_recall",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         // repartition: same serial-map-stage fix as minhashStages
         val docs = Tables.documents(spark, dir)
@@ -1113,7 +1103,6 @@ object DedupQueries {
     QueryDef(
       "dedup_ngram_jaccard",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // queries run sequentially; drop stale persists
         val (hs, pairs) = ngramStages(spark, dir)
         pairs

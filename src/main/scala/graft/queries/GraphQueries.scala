@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -53,7 +53,6 @@ object GraphQueries {
     QueryDef(
       "q_pagerank",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // sequential query contract
         val pairs = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
           .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),
@@ -150,7 +149,6 @@ object GraphQueries {
     QueryDef(
       "q_triangles",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         val po = Tables.orders(spark, dir)
           .where(col("o_orderpriority") === "1-URGENT")
@@ -260,7 +258,6 @@ object GraphQueries {
     QueryDef(
       "q_bfs_levels",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         val pairs = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
           .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.media.Media
 import org.apache.spark.sql.functions._
 
@@ -56,7 +56,6 @@ object MediaQueries {
     QueryDef(
       "media_features",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val m = Media.mediaTable(Tables.documents(spark, dir))
         m.withColumn("frame_hashes", Media.frameHashes(col("payload"), col("n_frames")))
           .select(
@@ -91,7 +90,6 @@ object MediaQueries {
     QueryDef(
       "media_resize",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -138,7 +136,6 @@ object MediaQueries {
     QueryDef(
       "media_bmp_decode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -171,7 +168,6 @@ object MediaQueries {
     QueryDef(
       "media_ppm_decode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -204,7 +200,6 @@ object MediaQueries {
     QueryDef(
       "media_png_decode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -237,7 +232,6 @@ object MediaQueries {
     QueryDef(
       "media_gif_decode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -272,7 +266,6 @@ object MediaQueries {
     QueryDef(
       "media_y4m_frames",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -317,7 +310,6 @@ object MediaQueries {
     QueryDef(
       "media_wav_decode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -352,7 +344,6 @@ object MediaQueries {
     QueryDef(
       "media_wav_pitch",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -392,7 +383,6 @@ object MediaQueries {
     QueryDef(
       "media_wav_downsample",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -421,7 +411,6 @@ object MediaQueries {
     QueryDef(
       "media_decode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -456,7 +445,6 @@ object MediaQueries {
     QueryDef(
       "media_jpeg_coeffs",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]
@@ -499,7 +487,6 @@ object MediaQueries {
     QueryDef(
       "media_jpeg_decode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val ids = Tables.documents(spark, dir)
           .select(col("doc_id")).as[java.lang.Long]

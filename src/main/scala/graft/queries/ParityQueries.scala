@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftExtensions, GraftSession, ReferencePipeline, Tables}
+import graft.{GraftExtensions, ReferencePipeline, Tables}
 import graft.dedup.Dedup
 import graft.functions.BqFunctions
 import graft.similarity.Vectors
@@ -28,7 +28,6 @@ object ParityQueries {
     QueryDef(
       "udf_parse_datetime",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir)
         val rendered = Seq(
           "yyyy/MM/dd HH:mm:ss",
@@ -64,7 +63,6 @@ object ParityQueries {
     QueryDef(
       "udf_parse_strict",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val feed = Tables.events(spark, dir)
           .select(col("event_id"),
                   when(pmod(col("event_id"), lit(7)) === 0,
@@ -141,7 +139,6 @@ object ParityQueries {
     QueryDef(
       "q_sql_functions",
       (spark, dir) => {
-        GraftSession.tune(spark)
         GraftExtensions.register(spark)
         val k = 3 // corpus-wide shingle width (DedupQueries.ShingleK)
         Tables.documents(spark, dir)

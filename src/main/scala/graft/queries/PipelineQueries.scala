@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.functions.{Hashing, Udafs}
 import graft.text.TextAnalysis
 import org.apache.spark.sql.expressions.Window
@@ -202,7 +202,6 @@ object PipelineQueries {
     QueryDef(
       "q_curation_pipeline",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         // quality filter then representative-per-cluster among survivors;
         // the cluster landing is computed once per process by whichever
@@ -256,7 +255,6 @@ object PipelineQueries {
     QueryDef(
       "q_decontaminate",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         val hs = graft.dedup.Dedup.shingleHashSets(
           Tables.documents(spark, dir), DecontamK).persist()
@@ -295,7 +293,6 @@ object PipelineQueries {
     QueryDef(
       "q_chunk_documents",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val C = ChunkTokens
         val S = ChunkStride
         Tables.documents(spark, dir)
@@ -348,7 +345,6 @@ object PipelineQueries {
     QueryDef(
       "q_stratified_sample",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         Tables.documents(spark, dir)
           .select(col("source"), col("lang"), col("doc_id"),
@@ -382,7 +378,6 @@ object PipelineQueries {
     QueryDef(
       "q_data_mix",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val quota = MixPermille.foldRight(lit(MixDefault)) { case ((s, q), acc) =>
           when(col("source") === s, lit(q)).otherwise(acc)
         }
@@ -423,7 +418,6 @@ object PipelineQueries {
     QueryDef(
       "q_pack_sequences",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val B = 4096
         spark.catalog.clearCache() // queries run sequentially; drop stale persists
         // persist + eager count: the intra-bucket window and the offsets
@@ -496,7 +490,6 @@ object PipelineQueries {
     QueryDef(
       "q_export_pipeline",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         spark.catalog.clearCache()
         // stages 1+2: quality survivors, then the min-doc_id
@@ -690,7 +683,6 @@ object PipelineQueries {
     QueryDef(
       "q_tokenized_shards",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         spark.catalog.clearCache()
         val (reps, clusters) = curationReps(spark, dir)
@@ -818,7 +810,6 @@ object PipelineQueries {
     QueryDef(
       "q_alpha_mix",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val docs = Tables.documents(spark, dir)
         val quota = docs.groupBy(col("lang")).agg(count(lit(1)).as("n"))
@@ -878,7 +869,6 @@ object PipelineQueries {
     QueryDef(
       "q_upsample_repeat",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val fPermille = RepeatPermille.foldRight(lit(1000)) { case ((s, f), acc) =>
           when(col("source") === s, lit(f)).otherwise(acc)
         }
@@ -933,7 +923,6 @@ object PipelineQueries {
     QueryDef(
       "q_substring_cuts",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val L = CutL
         val toks = Tables.documents(spark, dir)
           .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
@@ -1045,7 +1034,6 @@ object PipelineQueries {
     QueryDef(
       "q_weighted_sample",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // queries run sequentially; drop stale persists
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), col("n_chars").cast("long").as("w"))
@@ -1119,7 +1107,6 @@ object PipelineQueries {
     QueryDef(
       "q_quality_topp",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val s = TextAnalysis.qualitySignals(col("text")).toMap
         val docs = Tables.documents(spark, dir)
           .select(col("source"), s("n_tokens").as("n_tokens"),
@@ -1191,7 +1178,6 @@ object PipelineQueries {
     QueryDef(
       "q_shard_balance",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), TextAnalysis.wsTokenCount(col("text")).cast("long").as("n_tokens"))
         val wOff = Window.orderBy(col("n_tokens").desc)

@@ -98,7 +98,6 @@ object RelationalQueries {
     QueryDef(
       "q1_pricing_summary",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // raw-nanos superset range pushes to the scan (row-group pruning at
         // scale); the exact NTZ predicate below keeps the semantics
         Tables.loadRanged(spark, dir, "lineitem", Some("l_shipdate"),
@@ -138,7 +137,6 @@ object RelationalQueries {
     QueryDef(
       "q3_shipping_priority",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val cutoff = lit("1998-01-01").cast("timestamp_ntz")
         val cutoffLdt = java.time.LocalDateTime.of(1998, 1, 1, 0, 0)
         val c = Tables.customer(spark, dir).filter(col("c_mktsegment") === "BUILDING")
@@ -170,7 +168,6 @@ object RelationalQueries {
     QueryDef(
       "q5_customer_by_region",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.customer(spark, dir)
           .join(broadcast(Tables.nation(spark, dir)), col("c_nationkey") === col("n_nationkey"))
           .join(broadcast(Tables.region(spark, dir)), col("n_regionkey") === col("r_regionkey"))
@@ -190,7 +187,6 @@ object RelationalQueries {
     QueryDef(
       "q_anti_join",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val c = Tables.customer(spark, dir)
         val o = Tables.orders(spark, dir).select("o_custkey")
         c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -208,7 +204,6 @@ object RelationalQueries {
     QueryDef(
       "q_semi_join",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val c = Tables.customer(spark, dir)
         val o = Tables.orders(spark, dir)
           .filter(col("o_orderpriority") === "1-URGENT").select("o_custkey")
@@ -232,7 +227,6 @@ object RelationalQueries {
     QueryDef(
       "q_window_rank",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc, col("o_orderkey"))
         val ws = Window.partitionBy(col("o_custkey")).orderBy(col("o_totalprice").desc, col("o_orderkey"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -263,7 +257,6 @@ object RelationalQueries {
     QueryDef(
       "q_window_funcs",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val w = Window.partitionBy(col("o_custkey"))
           .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         Tables.orders(spark, dir)
@@ -291,7 +284,6 @@ object RelationalQueries {
     QueryDef(
       "q_agg_variants",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.orders(spark, dir)
           .select(col("o_orderpriority"), col("o_orderkey"),
                   Money.cents(col("o_totalprice")).as("pc"))
@@ -321,7 +313,6 @@ object RelationalQueries {
     QueryDef(
       "q_topk_orders",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_custkey"),
                   col("o_totalprice").as("price"))
@@ -336,7 +327,6 @@ object RelationalQueries {
     QueryDef(
       "q_setops_users",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir)
         def users(t: String) = ev.filter(col("event_type") === t).select("user_id")
         val both   = users("purchase").intersect(users("click"))
@@ -364,7 +354,6 @@ object RelationalQueries {
     QueryDef(
       "q_rollup_orders",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.orders(spark, dir)
           .rollup(col("o_orderpriority"), col("o_orderstatus"))
           .agg(count(lit(1)).as("n_orders"),
@@ -379,7 +368,6 @@ object RelationalQueries {
     QueryDef(
       "q_distinct_parts",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.lineitem(spark, dir)
           .groupBy(col("l_returnflag"))
           .agg(countDistinct(col("l_partkey")).as("n_parts"),
@@ -397,7 +385,6 @@ object RelationalQueries {
     QueryDef(
       "q_sessionize",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
         Tables.events(spark, dir)
           .select(col("user_id"), col("ts"), col("event_id"),
@@ -440,7 +427,6 @@ object RelationalQueries {
     QueryDef(
       "q_session_window",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir)
           .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
         graft.streaming.Streaming.requireNoExactGapPairs(ev, "q_session_window")
@@ -486,7 +472,6 @@ object RelationalQueries {
     QueryDef(
       "q_session_window_dynamic",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.events(spark, dir)
           .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
                   col("event_type"))
@@ -529,7 +514,6 @@ object RelationalQueries {
     QueryDef(
       "q_asof_click_before_purchase",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir)
         val purchases = ev.filter(col("event_type") === "purchase")
           .select(col("event_id"), col("user_id"), col("ts").as("purchase_ts"))
@@ -554,7 +538,6 @@ object RelationalQueries {
     QueryDef(
       "q_range_join_ship_lag",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val o = Tables.orders(spark, dir)
         val l = Tables.lineitem(spark, dir)
         l.join(o, col("l_orderkey") === col("o_orderkey") &&
@@ -591,10 +574,9 @@ object RelationalQueries {
     QueryDef(
       "q_range_join_auto",
       (spark, dir) => {
-        GraftSession.tune(spark)
         graft.GraftExtensions.register(spark)
-        spark.conf.set(graft.plans.RangeJoinRule.WidthConfKey, (7L * 24 * 3600).toString)
-        try {
+        GraftSession.withConfs(spark,
+          graft.plans.RangeJoinRule.WidthConfKey -> (7L * 24 * 3600).toString) {
           val windows = Tables.orders(spark, dir)
             .where(pmod(col("o_orderkey"), lit(97)) === 0)
             .select(col("o_orderkey").as("window_id"),
@@ -608,7 +590,7 @@ object RelationalQueries {
             .agg(count(lit(1)).cast("long").as("n_hits"),
                  sum(col("cents")).cast("long").as("sum_cents"))
             .localCheckpoint(eager = true)
-        } finally spark.conf.unset(graft.plans.RangeJoinRule.WidthConfKey)
+        }
       },
       Some(s"""SELECT o_orderkey AS window_id, COUNT(*) AS n_hits,
               |       CAST(SUM(${Money.centsSql("l_extendedprice")}) AS BIGINT) AS sum_cents
@@ -632,7 +614,6 @@ object RelationalQueries {
     QueryDef(
       "q_order_stats",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val W = 1L << 16
         val base = Tables.orders(spark, dir)
           .select(col("o_orderpriority").as("grp"),
@@ -729,7 +710,6 @@ object RelationalQueries {
     QueryDef(
       "q_mad_outliers",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val W = 1L << 16
         // exact lower median (rank (n+1) div 2) of `v`, tie-broken by `k`:
         // bucket histogram -> per-grp prefix sums -> rank only the hit bucket
@@ -815,7 +795,6 @@ object RelationalQueries {
     QueryDef(
       "q_time_rollup",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.orders(spark, dir)
           .select(date_trunc("month", col("o_orderdate")).cast("date").as("month"),
                   date_trunc("quarter", col("o_orderdate")).cast("date").as("quarter"),
@@ -843,7 +822,6 @@ object RelationalQueries {
     QueryDef(
       "q_price_moments",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.lineitem(spark, dir)
           .select(col("l_returnflag"),
                   Money.cents(col("l_quantity")).as("x"),
@@ -886,7 +864,6 @@ object RelationalQueries {
     QueryDef(
       "q_outer_join",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val c = Tables.customer(spark, dir)
           .groupBy(col("c_nationkey")).agg(count(lit(1)).as("n_customers"))
         val s = Tables.supplier(spark, dir)
@@ -909,7 +886,6 @@ object RelationalQueries {
     QueryDef(
       "q_setops_all",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir)
         def users(t: String) = ev.filter(col("event_type") === t).select("user_id")
         val inter = users("purchase").intersectAll(users("click"))
@@ -935,7 +911,6 @@ object RelationalQueries {
     QueryDef(
       "q_skew_join",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir).select(col("user_id"), col("event_type"), col("value"))
         val dim = ev.select(col("user_id")).distinct()
           .withColumn("segment", concat(lit("seg"), pmod(col("user_id"), lit(5))))
@@ -976,7 +951,6 @@ object RelationalQueries {
     QueryDef(
       "q_skew_join_aqe",
       (spark, dir) => {
-        GraftSession.tune(spark)
         GraftSession.withConfs(spark,
           "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "2k",
           "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
@@ -1062,7 +1036,6 @@ object RelationalQueries {
     QueryDef(
       "q_global_sort",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir)
           .select(col("user_id"), col("event_id"), col("event_type"))
         val sorted = ev.orderBy(col("user_id"), col("event_id"))
@@ -1130,7 +1103,6 @@ object RelationalQueries {
     QueryDef(
       "q_window_spill",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // ~8 spills per event-type buffer at any corpus size (floor 64):
         // derived from the MEASURED deepest per-event_type buffer, not from
         // total/|assumed types| — a fixture with many event types would
@@ -1228,7 +1200,6 @@ object RelationalQueries {
     QueryDef(
       "q_agg_spill",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val stats = Tables.events(spark, dir)
           .agg(countDistinct(col("user_id")).as("k"), count(lit(1)).as("n")).head
         val (nKeys, nRows) = (stats.getLong(0), stats.getLong(1))
@@ -1322,7 +1293,6 @@ object RelationalQueries {
     QueryDef(
       "q_pivot_daily_events",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.events(spark, dir)
           .select(to_date(col("ts")).as("day"), col("event_type"))
           .groupBy(col("day"))
@@ -1349,7 +1319,6 @@ object RelationalQueries {
     QueryDef(
       "q_merge_upsert",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val o = Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
                   Money.cents(col("o_totalprice")).as("price_cents"))
@@ -1414,7 +1383,6 @@ object RelationalQueries {
     QueryDef(
       "q_approx_quantiles",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val acc = 10000
         val li = Tables.lineitem(spark, dir)
           .select(col("l_returnflag"), Money.cents(col("l_extendedprice")).as("price_cents"))
@@ -1511,7 +1479,6 @@ object RelationalQueries {
     QueryDef(
       "q_funnel",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir)
           .select(col("user_id"), col("event_type"), col("ts"))
         val v = ev.where(col("event_type") === "view")
@@ -1588,7 +1555,6 @@ object RelationalQueries {
     QueryDef(
       "q_retention_cohorts",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ev = Tables.events(spark, dir)
           .where(col("event_type") === "purchase")
           .select(col("user_id"), col("ts"))
@@ -1645,7 +1611,6 @@ object RelationalQueries {
     QueryDef(
       "q_bloom_semi_join",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import graft.functions.Hashing
         val m = BloomBits
         def pos(i: Int, key: org.apache.spark.sql.Column) =
@@ -1727,7 +1692,6 @@ object RelationalQueries {
     QueryDef(
       "q_scd2_intervals",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
         val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wVer = Window.partitionBy(col("user_id")).orderBy(col("version"))
@@ -1793,7 +1757,6 @@ object RelationalQueries {
     QueryDef(
       "q_cdc_snapshot",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val ch = Tables.events(spark, dir)
           .select(col("user_id"), col("ts"), col("event_id"),
                   when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
@@ -1841,7 +1804,6 @@ object RelationalQueries {
     QueryDef(
       "q_exchange_reuse",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val agg = Tables.events(spark, dir)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n"))

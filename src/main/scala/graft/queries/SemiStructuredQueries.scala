@@ -21,7 +21,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_json_props",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.events(spark, dir)
           .select(col("event_type"),
                   get_json_object(col("props"), "$.k").cast("long").as("k"),
@@ -57,7 +56,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_variant_props",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val parsed = Tables.events(spark, dir)
           .select(col("event_type"), col("value"), parse_json(col("props")).as("v"))
         val out = parsed
@@ -109,7 +107,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_variant_roundtrip",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = StorageQueries.target("variant_store")
         Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"),
@@ -157,7 +154,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_variant_shredded",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import scala.jdk.CollectionConverters._
         val tgt = StorageQueries.target("variant_store_shredded")
         graft.GraftSession.withConfs(spark,
@@ -257,7 +253,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_variant_corrupt",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val corrupt = spark.range(7)
           .select(concat(lit("{\"k\": broken"), col("id")).as("props"))
         val strictFailed = scala.util.Try(
@@ -289,7 +284,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_variant_explode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.events(spark, dir).createOrReplaceTempView("variant_explode_src")
         spark.sql(
           """SELECT ve.key AS prop_key,
@@ -311,7 +305,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_cube_orders",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.orders(spark, dir)
           .cube(col("o_orderpriority"), col("o_orderstatus"))
           .agg(count(lit(1)).as("n_orders"),
@@ -328,7 +321,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_approx_distinct",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.lineitem(spark, dir)
           .groupBy(col("l_returnflag"))
           .agg(approx_count_distinct(col("l_partkey"), rsd = 0.02).as("approx_parts"),
@@ -350,7 +342,6 @@ object SemiStructuredQueries {
     QueryDef(
       "q_rolling_revenue",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val daily = Tables.orders(spark, dir)
           .groupBy(to_date(col("o_orderdate")).as("day"), col("o_orderpriority"))
           .agg(Money.lsum(Money.cents(col("o_totalprice"))).as("day_rev_cents"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.functions.Udafs
 import graft.similarity.Vectors
 import org.apache.spark.sql.DataFrame
@@ -894,7 +894,6 @@ object SimilarityQueries {
     QueryDef(
       "q_vector_hof",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
           .select(col("vec_id"),
@@ -918,7 +917,6 @@ object SimilarityQueries {
     QueryDef(
       "ann_bruteforce_topk",
       (spark, dir) => {
-        GraftSession.tune(spark)
         topkSpark(spark, dir).select("query_id", "vec_id", "rank", "cosine")
       },
       Some(s"""$topkSql
@@ -938,7 +936,6 @@ object SimilarityQueries {
     QueryDef(
       "ann_filtered_topk",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val n = normed(spark, dir)
         val q = n.where(col("vec_id") < NumQueries)
           .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -970,7 +967,6 @@ object SimilarityQueries {
     QueryDef(
       "ann_lsh_topk",
       (spark, dir) => {
-        GraftSession.tune(spark)
         lshTopkSpark(spark, dir)
       },
       Some(lshTopkSql)
@@ -989,7 +985,6 @@ object SimilarityQueries {
     QueryDef(
       "ann_ivf_topk",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // sequential query contract; drop stale persists
         ivfTopkSpark(spark, dir)
       },
@@ -1018,7 +1013,6 @@ object SimilarityQueries {
     QueryDef(
       "ann_recall",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // build order matters: lshTopkSpark clearCaches at its start, so it
         // runs first; ivfTopkSpark then adds its persists WITHOUT clearing,
         // keeping the signature cache live for the final evaluation
@@ -1075,7 +1069,6 @@ object SimilarityQueries {
     QueryDef(
       "ann_quantized_recall",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // sequential query contract
         val qz = quantTopkSpark(spark, dir).select(col("query_id"), col("vec_id"))
         val bf = topkSpark(spark, dir).select(col("query_id"), col("vec_id"))
@@ -1113,7 +1106,6 @@ object SimilarityQueries {
     QueryDef(
       "ann_pq_recall",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // sequential query contract
         val pq = pqTopkSpark(spark, dir)
         val bf = topkSpark(spark, dir).select(col("query_id"), col("vec_id"))
@@ -1157,7 +1149,6 @@ object SimilarityQueries {
     QueryDef(
       "ann_ivfpq_recall",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // sequential query contract
         val pq = ivfpqTopkSpark(spark, dir)
         val bf = topkSpark(spark, dir).select(col("query_id"), col("vec_id"))
@@ -1191,7 +1182,6 @@ object SimilarityQueries {
     QueryDef(
       "knn_classify",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val votes = topkSpark(spark, dir)
           .groupBy(col("query_id"), col("label"))
           .agg(count(lit(1)).as("votes"))
@@ -1218,7 +1208,6 @@ object SimilarityQueries {
     QueryDef(
       "dedup_embedding_cosine",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         val n = normed(spark, dir).persist() // both sides of the pair join
         requireExactPairBudget(n.count())
@@ -1252,7 +1241,6 @@ object SimilarityQueries {
     QueryDef(
       "dedup_semantic",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache() // sequential query contract
         val (n, cand, scored) = semanticStages(spark, dir)
         requireExactPairBudget(n.count()) // bounds the GRADING side only
@@ -1297,7 +1285,6 @@ object SimilarityQueries {
     QueryDef(
       "q_classifier_filter",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val w = array(Vectors.Planes(0).map(x => lit(x.toDouble)): _*)
         val n = normed(spark, dir)
           .withColumn("logit", Vectors.dot(col("v"), w) / col("nrm"))
@@ -1336,7 +1323,6 @@ object SimilarityQueries {
     QueryDef(
       "q_hybrid_search",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import graft.queries.{TextQueries => TQ}
         import graft.text.TextAnalysis
         val (k1, b) = (TQ.Bm25K1, TQ.Bm25B)

@@ -64,7 +64,6 @@ object StorageQueries {
       tgtName: String, ext: String,
       write: (java.nio.file.Path, Iterator[graft.sources.ArrowIpc.DocRow]) => Long,
       read: Array[Byte] => Vector[graft.sources.ArrowIpc.DocRow]): org.apache.spark.sql.DataFrame = {
-    GraftSession.tune(spark)
     import spark.implicits._
     import graft.sources.ArrowIpc
     val tgt = target(tgtName)
@@ -179,7 +178,6 @@ object StorageQueries {
     QueryDef(
       "q_partitioned_sink",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("partitioned_sink")
         Tables.documents(spark, dir)
           .write.mode("overwrite").partitionBy("source").parquet(tgt)
@@ -206,7 +204,6 @@ object StorageQueries {
     QueryDef(
       "q_ctas_roundtrip",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("ctas_roundtrip")
         Tables.lineitem(spark, dir)
           .where(col("l_shipdate") >= lit("1995-01-01").cast("timestamp_ntz"))
@@ -248,7 +245,6 @@ object StorageQueries {
     QueryDef(
       "q_zorder_layout",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val src0 = Tables.orders(spark, dir).select(
           col("o_custkey").cast("long").as("x"),
           datediff(col("o_orderdate").cast("date"), lit("1970-01-01").cast("date"))
@@ -372,7 +368,6 @@ object StorageQueries {
     QueryDef(
       "q_csv_roundtrip",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("csv_roundtrip")
         Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_orderstatus"),
@@ -418,7 +413,6 @@ object StorageQueries {
     QueryDef(
       "q_jsonl_roundtrip",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("jsonl_roundtrip")
         Tables.documents(spark, dir)
           .select(col("doc_id"), col("source"), col("lang"), col("text"))
@@ -469,7 +463,6 @@ object StorageQueries {
     QueryDef(
       "q_tfrecord_shards",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val tgt = target("tfrecord_shards")
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tgt))
@@ -549,7 +542,6 @@ object StorageQueries {
     QueryDef(
       "q_tfexample_shards",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         import graft.sources.{TfExample, TfRecord}
         import TfExample.{BytesList, FloatList, Int64List}
@@ -654,7 +646,6 @@ object StorageQueries {
     QueryDef(
       "q_tfexample_embeddings",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         import graft.sources.{TfExample, TfRecord}
         import TfExample.{FloatList, Int64List}
@@ -803,7 +794,6 @@ object StorageQueries {
     QueryDef(
       "q_webdataset_shards",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         import graft.media.{Jpeg, Media}
         import graft.sources.Tar
@@ -909,7 +899,6 @@ object StorageQueries {
     QueryDef(
       "q_write_retry",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val master = spark.sparkContext.master
         require(!master.matches("""local\[[0-9*]+\]"""),
@@ -1016,7 +1005,6 @@ object StorageQueries {
     QueryDef(
       "q_avro_roundtrip",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         import graft.sources.Avro
         val tgt = target("avro_shards")
@@ -1105,7 +1093,6 @@ object StorageQueries {
     QueryDef(
       "q_avro_evolution",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         import graft.sources.Avro
         val tgt = target("avro_evolution_shards")
@@ -1199,7 +1186,6 @@ object StorageQueries {
     QueryDef(
       "q_avro_logical",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         import graft.sources.Avro
         val tgt = target("avro_logical_shards")
@@ -1294,7 +1280,6 @@ object StorageQueries {
     QueryDef(
       "q_view_model",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.orders(spark, dir)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
                   Money.cents(col("o_totalprice")).as("price_cents"))
@@ -1334,7 +1319,6 @@ object StorageQueries {
     QueryDef(
       "q_incremental_model",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("incremental_model")
         val cutoff = lit("2024-01-16 00:00:00").cast("timestamp_ntz")
         def rollup(df: org.apache.spark.sql.DataFrame) = df
@@ -1387,7 +1371,6 @@ object StorageQueries {
     QueryDef(
       "q_incremental_restatement",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("incremental_restatement")
         val cutoff = lit("2024-01-16 00:00:00").cast("timestamp_ntz")
         val lookback = lit("2024-01-13 00:00:00").cast("timestamp_ntz")
@@ -1459,7 +1442,6 @@ object StorageQueries {
     QueryDef(
       "q_schema_evolution",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("schema_evolution")
         val docs = Tables.documents(spark, dir)
         // batch 1: the pre-evolution schema (no `lang`)
@@ -1502,7 +1484,6 @@ object StorageQueries {
     QueryDef(
       "q_compaction_bins",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val inv = Tables.documents(spark, dir)
           .select((col("doc_id") % CompactFiles).as("file_id"),
                   col("n_chars").cast("long").as("bytes"))
@@ -1566,7 +1547,6 @@ object StorageQueries {
     QueryDef(
       "q_bucketed_join",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val db = "graft_buckets"
         spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
         // a fresh session + a persistent warehouse dir = DROP alone is not
@@ -1604,10 +1584,8 @@ object StorageQueries {
         // conf (off by default since 3.0 because >1 file per bucket would
         // need a merge — the one-file layout above is the precondition
         // that makes it sound); scoped to this query and restored
-        val orderingKey = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-        val prevOrdering = spark.conf.getOption(orderingKey)
-        spark.conf.set(orderingKey, "true")
-        try {
+        GraftSession.withConfs(spark,
+          "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
           // merge hint: at test SF the orders side fits the broadcast
           // threshold and Catalyst would BHJ (whose BroadcastExchange is
           // still an exchange); at 100 TB neither side broadcasts and SMJ
@@ -1629,9 +1607,6 @@ object StorageQueries {
                  sum(col("price_cents")).cast(LongType).as("sum_price_cents"),
                  countDistinct(col("o_orderkey")).cast(LongType).as("n_orders"))
             .localCheckpoint(eager = true)
-        } finally prevOrdering match {
-          case Some(v) => spark.conf.set(orderingKey, v)
-          case None => spark.conf.unset(orderingKey)
         }
       },
       Some(s"""SELECT o_custkey % 10 AS cust_decile, COUNT(*) AS n_lines,
@@ -1672,7 +1647,6 @@ object StorageQueries {
     QueryDef(
       "q_cbo_broadcast",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val db = "graft_cbo"
         spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
         def resetTable(name: String): Unit = {
@@ -1779,7 +1753,6 @@ object StorageQueries {
     QueryDef(
       "q_scan_split",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // land ONCE per (process, input dir) — the skew gate's _LANDED_KEY
         // marker pattern: the landing is a deterministic function of the
         // input, and re-writing it every bench rep would time harness
@@ -1856,7 +1829,6 @@ object StorageQueries {
     QueryDef(
       "q_runtime_filter",
       (spark, dir) => {
-        GraftSession.tune(spark)
         def leg(enabled: Boolean): org.apache.spark.sql.DataFrame = GraftSession.withConfs(spark,
           "spark.sql.optimizer.runtime.bloomFilter.enabled" -> enabled.toString,
           "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1",
@@ -1918,7 +1890,6 @@ object StorageQueries {
     QueryDef(
       "q_cbo_join_reorder",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val db = "graft_cbo"
         spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
         def resetTable(name: String): Unit = {
@@ -2036,7 +2007,6 @@ object StorageQueries {
     QueryDef(
       "q_aqe_broadcast_convert",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val db = "graft_cbo"
         spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
         spark.sql(s"DROP TABLE IF EXISTS $db.dim_aqe")
@@ -2117,7 +2087,6 @@ object StorageQueries {
     QueryDef(
       "q_dynamic_pruning",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("dpp_events")
         val e = Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
@@ -2189,7 +2158,6 @@ object StorageQueries {
     QueryDef(
       "q_rebalance_write",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // land once per input dir (base and scaled stress corpora get
         // distinct targets so alternating reps don't thrash re-landing)
         val factDir = target(s"rebalance_fact_${Integer.toHexString(dir.hashCode)}")
@@ -2269,7 +2237,6 @@ object StorageQueries {
     QueryDef(
       "q_nested_pruning",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target(s"nested_docs_${Integer.toHexString(dir.hashCode)}")
         val marker = new java.io.File(tgt, "_LANDED_KEY")
         if (!(marker.isFile &&
@@ -2341,7 +2308,6 @@ object StorageQueries {
     QueryDef(
       "q_jsonl_corrupt",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target(s"jsonl_corrupt_${Integer.toHexString(dir.hashCode)}")
         val marker = new java.io.File(tgt, "_LANDED_KEY")
         if (!(marker.isFile &&
@@ -2426,7 +2392,6 @@ object StorageQueries {
     QueryDef(
       "q_orc_pushdown",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tgt = target("orc_pushdown")
         Tables.lineitem(spark, dir)
           .select(col("l_orderkey"), col("l_returnflag"),
@@ -2487,7 +2452,6 @@ object StorageQueries {
     QueryDef(
       "q_parquet_bloom_skip",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import scala.jdk.CollectionConverters._
         val tgtB = target("parquet_bloom_on")
         val tgtN = target("parquet_bloom_off")
@@ -2610,7 +2574,6 @@ object StorageQueries {
     QueryDef(
       "q_parquet_page_skip",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import scala.jdk.CollectionConverters._
         val tgtS = target("parquet_pageidx_sorted")
         val tgtU = target("parquet_pageidx_unsorted")

@@ -242,7 +242,6 @@ object StreamingQueries {
       "q_streaming_sessionize",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         // one sentinel per user, a full gap past that user's last event:
         // it closes every REAL session, while the sentinel's own 1-event
@@ -296,7 +295,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_session_window",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         Streaming.requireNoExactGapPairs(eventsDf, "q_streaming_session_window")
         val sentinel = eventsDf.agg(max(col("ts")).as("mts"))
@@ -343,7 +341,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_click_attribution",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
         val src = spark.readStream.schema(eventsDf.schema)
@@ -398,7 +395,6 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           import spark.implicits._
-          graft.GraftSession.tune(spark)
           val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
           val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
           val id = runId.incrementAndGet()
@@ -481,7 +477,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_join_then_window",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val mm = eventsDf.agg(max(unix_millis(col("ts"))).as("t1"))
         def sentinel(id: Long, kind: String) = mm.select(
@@ -551,7 +546,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_join_late_drop",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val mm = eventsDf.agg(min(unix_millis(col("ts"))).as("t0"),
                               max(unix_millis(col("ts"))).as("t1"))
@@ -633,7 +627,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_restart_join",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
         val id = runId.incrementAndGet()
@@ -696,7 +689,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_restart_outer",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val mm = eventsDf.agg(min(unix_millis(col("ts"))).as("t0"),
                               max(unix_millis(col("ts"))).as("t1"))
@@ -793,7 +785,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_left_outer",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val mts = eventsDf.agg(max(col("ts")).as("mts"))
         val sentinels = mts
@@ -865,7 +856,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_full_outer",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val mts = eventsDf.agg(max(col("ts")).as("mts"))
         val shiftMs = Streaming.AttributionDays.toLong * 86400000L + 7200000L
@@ -945,7 +935,6 @@ object StreamingQueries {
       "q_streaming_sessionize_timeout",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        graft.GraftSession.tune(spark)
         val (feed, land) = timeoutSessionFeed(spark, dir)
         val src = spark.readStream.schema(feed.schema)
           .option("maxFilesPerTrigger", "1").parquet(land)
@@ -983,7 +972,6 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           import spark.implicits._
-          graft.GraftSession.tune(spark)
           val (feed, land) = timeoutSessionFeed(spark, dir)
           val src = spark.readStream.schema(feed.schema)
             .option("maxFilesPerTrigger", "1").parquet(land)
@@ -1018,7 +1006,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_dedup",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         // synthetic replay clock: 2024-01-01 UTC + doc_id seconds
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id").cast("long").as("doc_id"), col("text"),
@@ -1062,7 +1049,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_dedup_horizon",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val base = Tables.documents(spark, dir)
           .select(col("doc_id").cast("long").as("doc_id"), col("text"),
                   expr("timestamp_millis(1704067200000 + doc_id * 1000)").as("ts"))
@@ -1136,7 +1122,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_enrich",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withHashBand(eventsDf, col("event_id"), 4), 4, "stream_land_enrich", dir)
         val src = spark.readStream.schema(eventsDf.schema)
@@ -1189,7 +1174,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_enrich_refresh",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4,
                              "stream_land_events_t4", dir)
@@ -1266,7 +1250,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_window_counts",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val sentinel = eventsDf.agg(max(col("ts")).as("mts"))
           .select(lit(-1L).as("event_id"),
@@ -1320,7 +1303,6 @@ object StreamingQueries {
     QueryDef(
       "q_state_reader",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
         val src = spark.readStream.schema(eventsDf.schema)
@@ -1391,7 +1373,6 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
-          graft.GraftSession.tune(spark)
           val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
           val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
           val src = spark.readStream.schema(eventsDf.schema)
@@ -1464,7 +1445,6 @@ object StreamingQueries {
     QueryDef(
       "q_state_time_travel",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
         val id = runId.incrementAndGet()
@@ -1554,7 +1534,6 @@ object StreamingQueries {
     QueryDef(
       "q_state_join_reader",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
         val src = spark.readStream.schema(eventsDf.schema)
@@ -1642,7 +1621,6 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           import spark.implicits._
-          graft.GraftSession.tune(spark)
           val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
           val banded = withTimeBand(eventsDf, "ts", 4)
             .select(col("event_type"), col("event_id"),
@@ -1716,7 +1694,6 @@ object StreamingQueries {
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
           "spark.sql.streaming.stateStore.encodingFormat" -> "avro") {
           import spark.implicits._
-          graft.GraftSession.tune(spark)
           val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
           val banded = withTimeBand(eventsDf, "ts", 4)
             .select(col("event_type"), col("event_id"),
@@ -1811,7 +1788,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_late_drop",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val mm = eventsDf.agg(min(unix_millis(col("ts"))).as("t0"),
                               max(unix_millis(col("ts"))).as("t1"))
@@ -1904,7 +1880,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_file_sink",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val sentinel = eventsDf.agg(max(col("ts")).as("mts"))
           .select(lit(-1L).as("event_id"),
@@ -1958,7 +1933,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_restart",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val sentinel = eventsDf.agg(max(col("ts")).as("mts"))
           .select(lit(-1L).as("event_id"),
@@ -2028,7 +2002,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_source_archive",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val feed = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         val land = landBands(withHashBand(feed, col("event_id"), 4), 4, "stream_land_archive", dir)
@@ -2111,7 +2084,6 @@ object StreamingQueries {
       "q_streaming_restart_sessions",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         // per-user sentinels (the q_streaming_sessionize construction):
         // they land in the LAST band by time-banding, so every real
@@ -2179,7 +2151,6 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           import spark.implicits._
-          graft.GraftSession.tune(spark)
           // identical feed to q_streaming_sessionize_tws — ONE construction,
           // shared landing via the land-once cache
           val (feed, land) = timeoutSessionFeed(spark, dir)
@@ -2230,7 +2201,6 @@ object StreamingQueries {
       "q_streaming_kmv",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        graft.GraftSession.tune(spark)
         val K = TextQueries.KmvK
         val num = (K - 1).toLong * Hashing.H32Max
         val feed = Tables.documents(spark, dir).select(col("source"), col("text"))
@@ -2320,7 +2290,6 @@ object StreamingQueries {
       "q_streaming_heavy_hitters",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        graft.GraftSession.tune(spark)
         val K = TextQueries.HhK
         val feed = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
         val land = landBands(withHashBand(feed, col("doc_id"), 4), 4, "stream_land_hh", dir)
@@ -2407,7 +2376,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_file_source",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val land = StorageQueries.target("stream_land_events")
         val batch = Tables.events(spark, dir)
           .select(col("event_id"), col("ts"), col("user_id"),
@@ -2601,7 +2569,6 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           import spark.implicits._
-          graft.GraftSession.tune(spark)
           val changes = Tables.events(spark, dir)
             .select(col("user_id"),
                     expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
@@ -2684,7 +2651,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_observe",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         // shares the enrich gate's hash-banded landing via the cache
         val land = landBands(withHashBand(eventsDf, col("event_id"), 4), 4,
@@ -2765,7 +2731,6 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           import spark.implicits._
-          graft.GraftSession.tune(spark)
           val ttlMs = 6000L
           val feed = Seq(
             // band 0: first change for both keys
@@ -2903,7 +2868,6 @@ object StreamingQueries {
       "q_streaming_latest_first",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        graft.GraftSession.tune(spark)
         val changes = Tables.events(spark, dir)
           .select(col("user_id"),
                   expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
@@ -2964,7 +2928,6 @@ object StreamingQueries {
       "q_streaming_partitions_pinned",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        graft.GraftSession.tune(spark)
         val changes = Tables.events(spark, dir)
           .select(col("user_id"),
                   expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
@@ -3036,7 +2999,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_foreach_upsert",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val changes = Tables.events(spark, dir)
           .select(col("user_id"),
                   expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
@@ -3100,7 +3062,6 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_foreach_retry",
       (spark, dir) => withStreamParts(spark) {
-        graft.GraftSession.tune(spark)
         val changes = Tables.events(spark, dir)
           .select(col("user_id"),
                   expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
@@ -3184,7 +3145,6 @@ object StreamingQueries {
                                org.apache.spark.sql.Dataset[Streaming.CdcEmit] = Streaming.cdcState)
       : DataFrame = withStreamParts(spark) {
     import spark.implicits._
-    graft.GraftSession.tune(spark)
     val changes = Tables.events(spark, dir)
       .select(col("user_id"),
               expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),

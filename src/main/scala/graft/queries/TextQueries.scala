@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.text.TextAnalysis._
 import org.apache.spark.sql.functions._
 
@@ -268,7 +268,6 @@ object TextQueries {
     QueryDef(
       "text_token_counts",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.documents(spark, dir)
           .select(col("doc_id"),
                   wsTokenCount(col("text")).cast("long").as("n_ws_tokens"),
@@ -286,7 +285,6 @@ object TextQueries {
     QueryDef(
       "text_quality",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val sigs = qualitySignals(col("text")).map { case (n, c) => c.as(n) }
         Tables.documents(spark, dir).select(col("doc_id") +: sigs: _*)
       },
@@ -308,7 +306,6 @@ object TextQueries {
     QueryDef(
       "text_quality_filter",
       (spark, dir) => {
-        GraftSession.tune(spark)
         qualityFilter(spark, dir)
       },
       Some(qualityFilterSql)
@@ -319,7 +316,6 @@ object TextQueries {
     QueryDef(
       "text_langid",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val scores = langScores(col("text")).map { case (n, c) => c.as(n) }
         Tables.documents(spark, dir)
           .select(Seq(col("doc_id"), col("lang"), langPredict(col("text")).as("lang_pred")) ++ scores: _*)
@@ -341,7 +337,6 @@ object TextQueries {
     QueryDef(
       "text_fingerprint",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.documents(spark, dir)
           .select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
           .select(col("doc_id"), col("text"), shinglesOf(col("toks"), 3).as("shn"))
@@ -370,7 +365,6 @@ object TextQueries {
     QueryDef(
       "text_term_frequency",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.documents(spark, dir)
           .select(explode(tokens(col("text"))).as("token"))
           .groupBy(col("token"))
@@ -392,7 +386,6 @@ object TextQueries {
     QueryDef(
       "text_pii_scrub",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // emails scrub first; phones are counted on the email-scrubbed text
         // so a phone-shaped span inside an email local-part is neither
         // double-counted nor reported as an unredacted phone — n_phones
@@ -424,7 +417,6 @@ object TextQueries {
     QueryDef(
       "text_tfidf",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val docs = Tables.documents(spark, dir)
         val nd = docs.agg(count(lit(1)).as("n_docs"))
         docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
@@ -453,7 +445,6 @@ object TextQueries {
     QueryDef(
       "text_repetition",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.documents(spark, dir)
           .select(col("doc_id"), tokens(col("text")).as("toks"))
           .select(col("doc_id"), shinglesOf(col("toks"), 3).as("shn"))
@@ -486,7 +477,6 @@ object TextQueries {
     QueryDef(
       "text_corpus_stats",
       (spark, dir) => {
-        GraftSession.tune(spark)
         Tables.documents(spark, dir)
           .select(col("source"), col("lang"),
                   bpeTokenCount(col("text")).cast("long").as("toks"))
@@ -525,7 +515,6 @@ object TextQueries {
     QueryDef(
       "q_heavy_hitters",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val terms = Tables.documents(spark, dir)
           .select(explode(tokens(col("text"))).as("term"))
@@ -584,7 +573,6 @@ object TextQueries {
     QueryDef(
       "q_countmin",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import graft.functions.Hashing
         val terms = Tables.documents(spark, dir)
           .select(explode(tokens(col("text"))).as("term"))
@@ -675,7 +663,6 @@ object TextQueries {
     QueryDef(
       "q_kmv_overlap",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         import graft.functions.{Hashing, Udafs}
         val num = (KmvK - 1).toLong * Hashing.H32Max // estimator numerator (k-1)·2³²
@@ -809,7 +796,6 @@ object TextQueries {
     QueryDef(
       "q_heavy_hitters_by_source",
       (spark, dir) => {
-        GraftSession.tune(spark)
         import spark.implicits._
         val terms = Tables.documents(spark, dir)
           .select(col("source"), explode(tokens(col("text"))).as("term"))
@@ -878,7 +864,6 @@ object TextQueries {
     QueryDef(
       "q_bm25_search",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val (k1, b) = (Bm25K1, Bm25B)
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -957,7 +942,6 @@ object TextQueries {
     QueryDef(
       "text_cooccurrence_pmi",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val docs = Tables.documents(spark, dir)
         val dt = docs.select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("token"))
         val vocab = dt.groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -1013,7 +997,6 @@ object TextQueries {
     QueryDef(
       "q_inverted_index",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val tf = Tables.documents(spark, dir)
           .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
           .groupBy(col("term"), col("doc_id")).agg(count(lit(1)).as("tf"))
@@ -1061,7 +1044,6 @@ object TextQueries {
     QueryDef(
       "text_repeated_spans",
       (spark, dir) => {
-        GraftSession.tune(spark)
         spark.catalog.clearCache()
         val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
         // ONE persisted shingle stage feeding both passes. The persist is a
@@ -1121,7 +1103,6 @@ object TextQueries {
     QueryDef(
       "text_bpe_pairs",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val vocab = Tables.documents(spark, dir)
           .select(explode(tokens(col("text"))).as("word"))
           .groupBy(col("word")).agg(count(lit(1)).as("wn"))
@@ -1165,7 +1146,6 @@ object TextQueries {
     QueryDef(
       "text_bpe_merge",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val vocab = Tables.documents(spark, dir)
           .select(explode(tokens(col("text"))).as("word"))
           .groupBy(col("word")).agg(count(lit(1)).as("wn"))
@@ -1243,7 +1223,6 @@ object TextQueries {
     QueryDef(
       "text_bpe_encode",
       (spark, dir) => {
-        GraftSession.tune(spark)
         // NOTE (r17, measured): persisting this word table (as
         // text_bpe_artifact does) re-derives the corpus explode + groupBy
         // once instead of once per round — but bench'd ~15% SLOWER at
@@ -1318,7 +1297,6 @@ object TextQueries {
     QueryDef(
       "text_bpe_artifact",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val v0 = bpeWordTable(spark, dir).persist()
         v0.count() // shared by the train loop and the reload rebuild
         // 1-row collect per round: the trainer's argmax IS driver-grain
@@ -1389,7 +1367,6 @@ object TextQueries {
     QueryDef(
       "text_bigram_lm",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val docs = Tables.documents(spark, dir)
         val toks = docs
           .select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -1452,7 +1429,6 @@ object TextQueries {
     QueryDef(
       "text_oov_rate",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val toks = Tables.documents(spark, dir)
           .select(col("source"), explode(tokens(col("text"))).as("term"))
         val vocab = toks.groupBy(col("term")).agg(count(lit(1)).as("cnt"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,7 +35,6 @@ object ValidationQueries {
     QueryDef(
       "q_validate_contracts",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val o = Tables.orders(spark, dir)
         val c = Tables.customer(spark, dir)
         val l = Tables.lineitem(spark, dir)
@@ -118,7 +117,6 @@ object ValidationQueries {
     QueryDef(
       "q_observed_metrics",
       (spark, dir) => {
-        GraftSession.tune(spark)
         val obs = new org.apache.spark.sql.Observation(
           s"contracts_${System.identityHashCode(spark) ^ System.nanoTime()}")
         val e = Tables.events(spark, dir)

@@ -16,13 +16,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus,2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
 
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String)]()

@@ -1,10 +1,10 @@
 package graft.tools
 
 /** Dev harness for the optimization rounds: dump `explain("formatted")` for
-  * named queries to files (plans/rNN/<query>_<tag>.txt), under the same
-  * session shape the bench uses (local[$SPARK_GRAFT_CPUS], shuffle
-  * partitions = cpus), so plan claims in OPTIMIZATION_r*.md are
-  * reproducible artifacts rather than prose.
+  * named queries to files (plans/rNN/<query>_<tag>.txt), on the session the
+  * bench uses ([[graft.GraftSession.local]] at `SPARK_GRAFT_CPUS` threads,
+  * 4 when unset), so plan claims in OPTIMIZATION_r*.md are reproducible
+  * artifacts rather than prose.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> <sfDir> <name> [name...]
   *
@@ -20,13 +20,7 @@ object PlanDump {
     val tag = args(1)
     val sfDir = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus,2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

@@ -16,13 +16,7 @@ object SigAgreementBench {
   def main(args: Array[String]): Unit = {
     val nPairs = args.headOption.map(_.toLong).getOrElse(2000000L)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus,2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     val perms = graft.functions.Hashing.NumPermsWide
 
     // deterministic 128-wide pseudo-signatures; ~half the positions agree

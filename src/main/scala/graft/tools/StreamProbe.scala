@@ -18,14 +18,7 @@ object StreamProbe {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 3
     val stateParts = if (args.length > 2) args(2) else "8"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus,2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.tune(spark)
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
 
     val eventsDf = graft.streaming.Streaming.eventsBatch(spark, sfDir).toDF()
     val feed = eventsDf

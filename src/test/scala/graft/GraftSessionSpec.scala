@@ -32,4 +32,37 @@ class GraftSessionSpec extends SparkTestBase {
     }
     assert(spark.conf.getAll == before)
   }
+
+  /** Every key [[GraftSession.tune]] sets, with the value it sets. */
+  private def policy: Map[String, String] = GraftSession.tune(spark.newSession()).conf.getAll
+
+  private def assertTuned(s: org.apache.spark.sql.SparkSession): Unit =
+    policy.foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
+
+  test("SparkEntry applies the session policy to a session it did not build") {
+    val built = spark.newSession()
+    assert(policy.exists { case (k, v) => built.conf.get(k) != v })
+    SparkEntry.queries("q3_shipping_priority")(built, sf)
+    assertTuned(built)
+
+    val driven = spark.newSession()
+    SparkEntry.entry(driven)
+    assertTuned(driven)
+  }
+
+  test("q_bucketed_join leaves the session conf as it found it") {
+    val before = spark.conf.getAll
+    SparkEntry.queries("q_bucketed_join")(spark, sf)
+    assert(spark.conf.getAll == before)
+    spark.sql("DROP DATABASE IF EXISTS graft_buckets CASCADE")
+  }
+
+  test("q_range_join_auto restores the caller's range-join width") {
+    val key = graft.plans.RangeJoinRule.WidthConfKey
+    spark.conf.set(key, "86400")
+    try {
+      SparkEntry.queries("q_range_join_auto")(spark, sf)
+      assert(spark.conf.getOption(key).contains("86400"))
+    } finally spark.conf.unset(key)
+  }
 }
