@@ -37,7 +37,10 @@ import org.apache.spark.sql.SparkSession
   *     rep 1 of every query ALWAYS runs, so each query gets at least one
   *     observation; reps ≥ 2 are skipped once the budget is exhausted. The
   *     run then finishes cleanly inside the driver's window instead of being
-  *     killed by it ("budget_exhausted":true flags the trim in the artifact).
+  *     killed by it ("budget_exhausted":true flags the trim in the artifact);
+  *   - a rep that throws scores -1 and its query is named with the cause
+  *     in the final detail line's "failed" map (and tools/bench_last.json);
+  *     after the final emission the run exits 1 if any query failed.
   *
   * Re-check one suspicious query without a full run:
   *   SPARK_GRAFT_BENCH_ONLY=q_price_moments sbt "runMain graft.Bench"
@@ -97,7 +100,9 @@ object Bench {
     // uniformly, including queries whose code hadn't changed in rounds.
     // Driver-vs-builder bench spread is host contention; the `n_noisy`
     // flag documents it, and that is the honest treatment.
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // name → cause of the last failed rep, for the final artifact
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val t =
@@ -110,6 +115,7 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable =>
           System.err.println(s"[bench] query failed: ${e.getMessage}")
+          failures(name) = e.toString
           -1.0
         }
       spark.catalog.clearCache()
@@ -177,10 +183,11 @@ object Bench {
       val noisyList =
         if (partial) ""
         else "\"noisy\":" + noisy.map("\"" + _ + "\"").mkString("[", ",", "]") + ","
+      val failedMap = if (partial) "" else "\"failed\":" + Verify.failuresJson(failures) + ","
       // failures keep their -1 marker per query but must not shrink the total
       val total = results.map(_._2).filter(_ >= 0).sum
       val detailLine =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$repArrays$noisyList"sf":"$sfDir","partial":$partial,"elapsed_sec":${"%.1f".format(elapsed)},"budget_exhausted":$budgetExhausted}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$repArrays$noisyList$failedMap"sf":"$sfDir","partial":$partial,"elapsed_sec":${"%.1f".format(elapsed)},"budget_exhausted":$budgetExhausted}"""
       println(detailLine)
       if (!partial) {
         // the driver-parseable artifact: keep this line SMALL (no per-query
@@ -208,7 +215,7 @@ object Bench {
         // rep 1 always runs (every query gets one observation); later reps
         // are sacrificed first when the wall-clock budget runs out
         if (r == 1 || elapsed < budgetSec) {
-          times(name) = times(name) :+ once(fn)
+          times(name) = times(name) :+ once(name, fn)
           System.err.println(
             f"[bench] $name rep $r/${repsFor(name)}: ${times(name).last}%.2fs (cumulative ${elapsed}%.0fs of budget ${budgetSec}%.0fs)")
           emit(partial = true)
@@ -221,5 +228,6 @@ object Bench {
     }
     emit(partial = false)
     spark.stop()
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

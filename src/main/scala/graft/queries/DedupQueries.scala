@@ -198,42 +198,21 @@ object DedupQueries {
     (sigs, pairs)
   }
 
-  /** `estPerms` controls how much of the 128-entry signature the est-jaccard
-    * verification reads: the full width (default, what the query ships), or
-    * a prefix (each permutation is an unbiased estimator, so a 32-perm
-    * prefix is a valid — wider-variance — estimate at a quarter of the
-    * per-candidate comparisons). Exposed for the MinhashPrefixCompare rig,
-    * which measures whether the prefix estimate is worth its variance.
+  /** Est-jaccard ≥ 0.5 pairs over the full 128-perm signature. A 32-perm
+    * prefix estimate measured within noise of full width with identical
+    * emitted pairs (tools/minhash_prefix_compare_r08.log), so the
+    * lower-variance full width stays.
     */
   private[graft] def minhashPairsSpark(spark: org.apache.spark.sql.SparkSession,
                                        dir: String,
-                                       estPerms: Int = MinhashPerms,
                                        reuseSigLanding: Boolean = false): org.apache.spark.sql.DataFrame = {
     val (sigs, pairs) = minhashStages(spark, dir, reuseSigLanding)
     pairs
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-              Dedup.estJaccard(col("sig_a"), col("sig_b"), estPerms).as("est_jaccard"))
+              Dedup.estJaccard(col("sig_a"), col("sig_b"), MinhashPerms).as("est_jaccard"))
       .where(col("est_jaccard") >= lit(0.5))
-  }
-
-  /** Truth arm of `dedup_minhash_recall`, exposed for the prefix-width
-    * compare rig: exact-jaccard ≥ 0.5 pairs found via the containment
-    * prefix filter — subquadratic, and EXACT recall for the ≥ 0.5 class by
-    * the pigeonhole argument (see [[containmentCandidates]]).
-    */
-  private[graft] def minhashTruthPairs(spark: org.apache.spark.sql.SparkSession,
-                                       dir: String): org.apache.spark.sql.DataFrame = {
-    val hs = Dedup.shingleHashSets(
-        Tables.documents(spark, dir).repartition(spark.sparkContext.defaultParallelism),
-        ShingleK).persist()
-    hs.count()
-    containmentCandidates(hs)
-      .join(hs.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")
-      .join(hs.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-      .where(Dedup.jaccardLong(col("hs_a"), col("hs_b")) >= lit(0.5))
-      .select(col("doc_a"), col("doc_b"))
   }
 
   /** Complete SQL statement for [[minhashPairsSpark]] (nested inside

@@ -645,49 +645,38 @@ object SimilarityQueries {
   /** One-Lloyd-iteration IVF cell assignment over a [[normed]] corpus:
     * (vec_id, cid, rk) for each vector's `keep` nearest refined centroids.
     * Shared by `ann_ivf_topk` (retrieval probing) and `dedup_semantic`
-    * (pair blocking); the SQL twin is [[ivfAssignCtes]]. `iters` > 1 runs
-    * additional Lloyd refinements (assign rk=1 → recompute means) before
-    * the final keep-assignment — exposed for the
-    * [[graft.tools.IvfLloydCompare]] measurement rig; the production
-    * queries use 1 — measured (tools/ivf_lloyd_compare_r07.log): extra
-    * iterations do NOT move the frontier on this corpus (recall@10
-    * 0.90→0.87→0.86 at sf0.01, 0.98→0.98→0.95 at sf0.1, candidate
-    * fraction flat ~0.25), so the cheaper single iteration wins.
+    * (pair blocking); the SQL twin is [[ivfAssignCtes]]. One iteration,
+    * measured (tools/ivf_lloyd_compare_r07.log): extra Lloyd iterations
+    * do NOT move the frontier on this corpus (recall@10 0.90→0.87→0.86 at
+    * sf0.01, 0.98→0.98→0.95 at sf0.1, candidate fraction flat ~0.25), so
+    * the cheaper single iteration wins.
     */
-  private[graft] def ivfAssignment(n: DataFrame, keep: Int, iters: Int = 1): DataFrame =
-    ivfNearest(n, ivfCentroids(n, iters), keep)
+  private[graft] def ivfAssignment(n: DataFrame, keep: Int): DataFrame =
+    ivfNearest(n, ivfCentroids(n), keep)
 
   /** The refined IVF centroid relation (cid, cv, cvv) behind
     * [[ivfAssignment]], split out (round-12) so `ann_ivfpq_recall` can
     * subtract the SAME centroids when forming residuals. Seeds are the
-    * first [[IvfCells]] vectors; each of `iters` Lloyd refinements
-    * reassigns rk=1 and recomputes fixed-point element means (exact,
-    * merge-order-independent — bit-equal to the oracle's `floor(x·2^20)`
-    * integer chain).
+    * first [[IvfCells]] vectors; one Lloyd refinement reassigns rk=1 and
+    * recomputes fixed-point element means (exact, merge-order-independent
+    * — bit-equal to the oracle's `floor(x·2^20)` integer chain).
     */
-  private[graft] def ivfCentroids(n: DataFrame, iters: Int = 1): DataFrame = {
+  private[graft] def ivfCentroids(n: DataFrame): DataFrame = {
     val Fx = IvfFx
     val n2 = n.select(col("vec_id"), col("v"), Vectors.dot(col("v"), col("v")).as("vv"))
     val seeds = n2.where(col("vec_id") < IvfCells)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("vv").as("cvv"))
-    var cents = seeds
-    var it = 0
-    while (it < iters) {
-      val cell = ivfNearestOne(n, cents)
-        .join(n.select(col("vec_id"), col("v")), "vec_id")
-      cents = cell
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(floor(col("x") * Fx).cast("long")).as("sx"), count(lit(1)).as("cnt"))
-        .select(col("cid"), col("pos"),
-                (col("sx").cast("double") / col("cnt").cast("double") / lit(Fx.toDouble)).as("cx"))
-        .groupBy(col("cid"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
-                       s => s.getField("cx")).as("cv"))
-        .withColumn("cvv", Vectors.dot(col("cv"), col("cv")))
-      it += 1
-    }
-    cents
+    ivfNearestOne(n, seeds)
+      .join(n.select(col("vec_id"), col("v")), "vec_id")
+      .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
+      .groupBy(col("cid"), col("pos"))
+      .agg(sum(floor(col("x") * Fx).cast("long")).as("sx"), count(lit(1)).as("cnt"))
+      .select(col("cid"), col("pos"),
+              (col("sx").cast("double") / col("cnt").cast("double") / lit(Fx.toDouble)).as("cx"))
+      .groupBy(col("cid"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("cx")))),
+                     s => s.getField("cx")).as("cv"))
+      .withColumn("cvv", Vectors.dot(col("cv"), col("cv")))
   }
 
   /** Each vector's `keep` nearest cells from a centroid relation

@@ -6,11 +6,11 @@ import graft.Tables
 import graft.functions.{Hashing, Udafs}
 import graft.streaming.Streaming
 import graft.text.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The streaming surface made oracle-checkable: the events table replayed
   * through the REAL Structured Streaming operators (sessionization via
@@ -28,13 +28,17 @@ import org.apache.spark.sql.types.LongType
   * distributedly, and the only driver involvement is moving finished part
   * FILES into the landing directory — metadata, not rows.
   *
-  * And every stream LANDS in files too: append-mode queries use the
+  * And every stream runs through ONE runner, [[StreamGate]]: a gate builds
+  * its pipeline over [[StreamGate.source]] and hands it to
+  * [[StreamGate.run]], which owns the per-run sink/checkpoint dirs, how
+  * emissions land and the start → drain → terminate lifecycle with its
+  * teardown. Every stream LANDS in files: append-mode queries use the
   * exactly-once parquet sink; update/complete-mode queries land each
-  * micro-batch's emissions via `foreachBatch` into batchId-keyed (update)
-  * or whole-dir-overwritten (complete) parquet — both idempotent under
-  * at-least-once batch redelivery. No result is ever driver-resident (the
-  * former memory sinks are fully retired); readbacks are batch reads of
-  * the sink files.
+  * micro-batch's emissions into batchId-keyed (update) or
+  * whole-dir-overwritten (complete) parquet — both idempotent under
+  * at-least-once batch redelivery. No result is ever driver-resident;
+  * readbacks are batch reads of the sink files. Restart gates are two or
+  * three `run` calls on one [[StreamGate]], i.e. one checkpoint.
   */
 object StreamingQueries {
 
@@ -147,7 +151,7 @@ object StreamingQueries {
     * replay-order contract. Used by the restart grades to stage arrivals
     * between two stream lifecycles.
     */
-  private def arriveBands(land: String, arrival: java.io.File, bands: Range): Unit =
+  private def arriveBands(land: String, arrival: String, bands: Range): Unit =
     bands.foreach { i =>
       val src = new java.io.File(land, f"b$i%04d.parquet")
       val dst = new java.io.File(arrival, src.getName)
@@ -183,6 +187,79 @@ object StreamingQueries {
       val m = cls.getField("MODULE$").get(null)
       cls.getMethod("unloadAll").invoke(m): Unit
     } catch { case scala.util.control.NonFatal(_) => () }
+
+  /** The streaming-gate runner: one gate run's directories and its stream
+    * lifecycles. The dirs live under [[StorageQueries.target]], keyed by a
+    * fresh [[runId]]: [[sink]] and [[ckpt]] for the stream, [[arrival]]
+    * for gates that stage bands between lifecycles, and [[dir]] for any
+    * other per-run dir a gate needs. Each [[run]] call is one lifecycle
+    * against [[ckpt]], so a restart gate calls it two or three times.
+    */
+  private[graft] final class StreamGate(name: String) {
+    val id: Int = runId.incrementAndGet()
+    def dir(kind: String): String = StorageQueries.target(s"stream_${name}_${kind}_$id")
+    val sink: String = dir("sink")
+    val ckpt: String = dir("ckpt")
+    lazy val arrival: String = {
+      val f = new java.io.File(dir("arrival"))
+      require(f.mkdirs() || f.isDirectory, s"cannot create $f")
+      f.getAbsolutePath
+    }
+
+    /** Runs `out` as one lifecycle: start, drain everything available,
+      * await termination. Whatever happens, a still-active query is
+      * stopped and the state stores are unloaded, so a failed lifecycle
+      * rethrows its cause and leaves no active stream. Returns the
+      * terminated query for its `lastProgress`/`recentProgress`.
+      * `trigger` stays `AvailableNow` except where a gate must run
+      * exactly one batch per lifecycle.
+      */
+    def run(out: DataFrame, landing: StreamGate.Landing = StreamGate.Append,
+            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+      val w = out.writeStream.option("checkpointLocation", ckpt)
+        .outputMode(landing.mode).trigger(trigger)
+      val writer = landing match {
+        case StreamGate.Append => w.format("parquet").option("path", sink)
+        case StreamGate.Update => w.foreachBatch { (b: DataFrame, batchId: Long) =>
+          b.write.mode("overwrite").parquet(s"$sink/batch=$batchId") }
+        case StreamGate.Complete => w.foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("overwrite").parquet(sink) }
+        case StreamGate.Raw(_, fn) => w.foreachBatch(fn)
+      }
+      var q: StreamingQuery = null
+      try { q = writer.start(); q.processAllAvailable(); q.awaitTermination(); q }
+      finally try { if (q != null && q.isActive) q.stop() } finally unloadStateStores()
+    }
+  }
+
+  private[graft] object StreamGate {
+    /** How a lifecycle lands its emissions. */
+    sealed trait Landing { def mode: String }
+    /** Append mode into the exactly-once parquet sink at `sink`. */
+    case object Append extends Landing { val mode = "append" }
+    /** Update mode: each micro-batch's emissions overwrite
+      * `<sink>/batch=<batchId>`, idempotent under batch redelivery.
+      */
+    case object Update extends Landing { val mode = "update" }
+    /** Complete mode: each micro-batch's full result overwrites `sink`,
+      * so the last batch's answer is what the dir holds.
+      */
+    case object Complete extends Landing { val mode = "complete" }
+    /** The gate's own `foreachBatch`, for gates whose sink is under test. */
+    final case class Raw(mode: String, fn: (DataFrame, Long) => Unit) extends Landing
+
+    /** The file source every gate reads: the parquet files under `dir`,
+      * discovered oldest-mtime-first, at most `maxFilesPerTrigger` per
+      * micro-batch (0 leaves it uncapped), plus any extra source options.
+      */
+    def source(spark: SparkSession, schema: StructType, dir: String,
+               maxFilesPerTrigger: Int = 0,
+               options: Map[String, String] = Map.empty): DataFrame = {
+      val r = spark.readStream.schema(schema).options(options)
+      (if (maxFilesPerTrigger > 0) r.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+       else r).parquet(dir)
+    }
+  }
 
   /** The batch sessionization oracle (the lag-gap partition), shared
     * VERBATIM by every sessionizer gate: six independent streaming state
@@ -260,18 +337,10 @@ object StreamingQueries {
         // per-user order, and a user's sentinel always arrives at-or-after
         // the band of their last real event.
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_sessionize", dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-          .as[Streaming.Event]
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_sessionize_sink_$id")
-        val q = Streaming.sessionize(src, flushOnTimeout = false).toDF()
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_sessionize_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        spark.read.parquet(sinkDir)
+        val src = StreamGate.source(spark, feed.schema, land, 1).as[Streaming.Event]
+        val gate = new StreamGate("sessionize")
+        gate.run(Streaming.sessionize(src, flushOnTimeout = false).toDF())
+        spark.read.parquet(gate.sink)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).cast(LongType).as("n_sessions"),
                sum(col("n_events")).cast(LongType).as("n_events"))
@@ -304,20 +373,13 @@ object StreamingQueries {
                   lit(0.0).as("value"))
         val feed = eventsDf.unionByName(sentinel)
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_session_window", dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_session_window_sink_$id")
-        val q = src
+        val src = StreamGate.source(spark, feed.schema, land, 1)
+        val gate = new StreamGate("session_window")
+        gate.run(src
           .withWatermark("ts", s"${Streaming.SessionGapMs / 60000} minutes")
           .groupBy(col("user_id"), session_window(col("ts"), s"${Streaming.SessionGapMs / 60000} minutes").as("w"))
-          .agg(count(lit(1)).as("n"))
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_session_window_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        spark.read.parquet(sinkDir)
+          .agg(count(lit(1)).as("n")))
+        spark.read.parquet(gate.sink)
           .where(col("user_id") =!= -1L)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).cast(LongType).as("n_sessions"),
@@ -343,20 +405,13 @@ object StreamingQueries {
       (spark, dir) => withStreamParts(spark) {
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
-        val src = spark.readStream.schema(eventsDf.schema)
         // 3 files/trigger (round-13, r12 verdict #6): inner-join matches
         // emit eagerly whatever the batch boundaries — 1/trigger bought
         // nothing but per-batch lifecycle cost
-          .option("maxFilesPerTrigger", "3").parquet(land)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_click_attr_sink_$id")
-        val q = Streaming.clickAttribution(src)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_click_attr_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        spark.read.parquet(sinkDir)
+        val src = StreamGate.source(spark, eventsDf.schema, land, 3)
+        val gate = new StreamGate("click_attr")
+        gate.run(Streaming.clickAttribution(src))
+        spark.read.parquet(gate.sink)
           .groupBy(col("purchase_id"))
           .agg(count(lit(1)).cast(LongType).as("n_clicks"),
                max(col("click_ts")).as("last_click_ts"))
@@ -397,35 +452,22 @@ object StreamingQueries {
           import spark.implicits._
           val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
           val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
-          val id = runId.incrementAndGet()
-          val arrival = new java.io.File(StorageQueries.target(s"stream_attr_liststate_arrival_$id"))
-          require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-          val sinkDir = StorageQueries.target(s"stream_attr_liststate_sink_$id")
-          val ckpt = StorageQueries.target(s"stream_attr_liststate_ckpt_$id")
-          def runOnce(): Unit = {
-            val src = spark.readStream.schema(eventsDf.schema)
-            // 3 files/trigger: the per-batch fold sorts by event time, so
-            // merging in-order bands preserves the buffer semantics; the
-            // restart split stays at lifecycle grain (bands 0-1 vs 2-3)
-              .option("maxFilesPerTrigger", "3").parquet(arrival.getAbsolutePath)
-              .as[Streaming.Event]
-            val q = Streaming.attributionListState(src).toDF()
-              .writeStream.format("parquet")
-              .option("path", sinkDir)
-              .option("checkpointLocation", ckpt)
-              .outputMode("append").trigger(Trigger.AvailableNow()).start()
-            q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-          }
-          arriveBands(land, arrival, 0 to 1); runOnce()
-          require(sinkRowCount(spark, sinkDir) > 0,
+          val gate = new StreamGate("attr_liststate")
+          // 3 files/trigger: the per-batch fold sorts by event time, so
+          // merging in-order bands preserves the buffer semantics; the
+          // restart split stays at lifecycle grain (bands 0-1 vs 2-3)
+          def runOnce(): Unit = gate.run(Streaming.attributionListState(
+            StreamGate.source(spark, eventsDf.schema, gate.arrival, 3).as[Streaming.Event]).toDF()): Unit
+          arriveBands(land, gate.arrival, 0 to 1); runOnce()
+          require(sinkRowCount(spark, gate.sink) > 0,
             "liststate restart degenerate: lifecycle #1 emitted no pairs")
-          arriveBands(land, arrival, 2 to 3); runOnce()
+          arriveBands(land, gate.arrival, 2 to 3); runOnce()
           // the first ms of band 2 — the lifecycle boundary in event time
           // (withTimeBand: band ≥ 2 ⇔ ms ≥ t0 + ceil((span+1)/2))
           val mid = eventsDf
             .agg(min(unix_millis(col("ts"))).as("t0"), max(unix_millis(col("ts"))).as("t1"))
             .select(expr("t0 + ((t1 - t0 + 2) div 2)").as("mid")).head.getLong(0)
-          val pairs = spark.read.parquet(sinkDir)
+          val pairs = spark.read.parquet(gate.sink)
           val crossLifecycle = pairs
             .join(eventsDf.where(col("event_type") === "purchase")
                     .select(col("event_id").as("purchase_id"), col("ts").as("purchase_ts")),
@@ -487,19 +529,11 @@ object StreamingQueries {
           .unionByName(sentinel(-1L, "click"))
           .unionByName(sentinel(-2L, "purchase"))
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_join_window", dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_join_window_sink_$id")
-        val q = Streaming.attributionDailyRollup(src)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_join_window_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination()
+        val src = StreamGate.source(spark, feed.schema, land, 1)
+        val gate = new StreamGate("join_window")
+        val q = gate.run(Streaming.attributionDailyRollup(src))
         val opNames = Option(q.lastProgress)
           .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-        unloadStateStores()
         require(opNames.size == 2,
           s"the pipeline must run exactly TWO stateful operators (join + windowed " +
           s"agg); progress reports $opNames")
@@ -509,7 +543,7 @@ object StreamingQueries {
           s"(stateStoreSave); progress reports $opNames")
         // sentinels are join-sterile by construction (unique users, and the
         // sentinel purchase has no preceding click), so no filter is needed
-        spark.read.parquet(sinkDir)
+        spark.read.parquet(gate.sink)
           .select(col("window_start"), col("n_pairs").cast(LongType).as("n_pairs"),
                   col("min_purchase_id").cast(LongType).as("min_purchase_id"),
                   col("max_purchase_id").cast(LongType).as("max_purchase_id"))
@@ -567,23 +601,14 @@ object StreamingQueries {
             col("event_type").isin("click", "purchase")).count()
         require(nLate > 0, "join late-drop grade degenerate: the late band is empty")
         val land = landBands(banded, 4, "stream_land_join_late", dir)
-        val src = spark.readStream.schema(eventsDf.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_join_late_sink_$id")
-        val q = Streaming.clickAttribution(src)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_join_late_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination()
-        val dropped = q.recentProgress
+        val src = StreamGate.source(spark, eventsDf.schema, land, 1)
+        val gate = new StreamGate("join_late")
+        val dropped = gate.run(Streaming.clickAttribution(src)).recentProgress
           .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-        unloadStateStores()
         require(dropped == nLate,
           s"join watermark drop accounting: expected exactly $nLate late " +
           s"click/purchase rows dropped, progress reports $dropped")
-        spark.read.parquet(sinkDir)
+        spark.read.parquet(gate.sink)
           .groupBy(col("purchase_id"))
           .agg(count(lit(1)).cast(LongType).as("n_clicks"),
                max(col("click_ts")).as("last_click_ts"))
@@ -629,29 +654,17 @@ object StreamingQueries {
       (spark, dir) => withStreamParts(spark) {
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
-        val id = runId.incrementAndGet()
-        val arrival = new java.io.File(StorageQueries.target(s"stream_restart_join_arrival_$id"))
-        require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-        val sinkDir = StorageQueries.target(s"stream_restart_join_sink_$id")
-        val ckpt = StorageQueries.target(s"stream_restart_join_ckpt_$id")
-        def runOnce(): Unit = {
-          val src = spark.readStream.schema(eventsDf.schema)
-            .option("maxFilesPerTrigger", "1").parquet(arrival.getAbsolutePath)
-          val q = Streaming.clickAttribution(src)
-            .writeStream.format("parquet")
-            .option("path", sinkDir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        }
-        arriveBands(land, arrival, 0 to 1); runOnce()
-        val afterRun1 = sinkRowCount(spark, sinkDir)
+        val gate = new StreamGate("restart_join")
+        def runOnce(): Unit = gate.run(Streaming.clickAttribution(
+          StreamGate.source(spark, eventsDf.schema, gate.arrival, 1))): Unit
+        arriveBands(land, gate.arrival, 0 to 1); runOnce()
+        val afterRun1 = sinkRowCount(spark, gate.sink)
         require(afterRun1 > 0,
           "join restart degenerate: run #1 emitted no pairs — nothing at stake in the resume")
-        arriveBands(land, arrival, 2 to 3); runOnce()
-        require(sinkRowCount(spark, sinkDir) > afterRun1,
+        arriveBands(land, gate.arrival, 2 to 3); runOnce()
+        require(sinkRowCount(spark, gate.sink) > afterRun1,
           "join restart degenerate: run #2 emitted nothing — the resume did no work")
-        spark.read.parquet(sinkDir)
+        spark.read.parquet(gate.sink)
           .groupBy(col("purchase_id"))
           .agg(count(lit(1)).cast(LongType).as("n_clicks"),
                max(col("click_ts")).as("last_click_ts"))
@@ -709,32 +722,20 @@ object StreamingQueries {
           .unionByName(sentinel(-2L, "purchase"))
           .unionByName(planted)
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_restart_outer", dir)
-        val id = runId.incrementAndGet()
-        val arrival = new java.io.File(StorageQueries.target(s"stream_restart_outer_arrival_$id"))
-        require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-        val sinkDir = StorageQueries.target(s"stream_restart_outer_sink_$id")
-        val ckpt = StorageQueries.target(s"stream_restart_outer_ckpt_$id")
-        def runOnce(): Unit = {
-          val src = spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", "1").parquet(arrival.getAbsolutePath)
-          val q = Streaming.clickAttributionLeftOuter(src)
-            .writeStream.format("parquet")
-            .option("path", sinkDir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        }
-        arriveBands(land, arrival, 0 to 1); runOnce()
-        require(sinkRowCount(spark, sinkDir) > 0,
+        val gate = new StreamGate("restart_outer")
+        def runOnce(): Unit = gate.run(Streaming.clickAttributionLeftOuter(
+          StreamGate.source(spark, feed.schema, gate.arrival, 1))): Unit
+        arriveBands(land, gate.arrival, 0 to 1); runOnce()
+        require(sinkRowCount(spark, gate.sink) > 0,
           "outer restart degenerate: run #1 emitted nothing — nothing at stake in the resume")
-        require(spark.read.parquet(sinkDir).where(col("purchase_id") === -3L).count() == 0L,
+        require(spark.read.parquet(gate.sink).where(col("purchase_id") === -3L).count() == 0L,
           "the planted top-of-lifecycle-1 purchase's null row emitted BEFORE the " +
           "restart — run #1's watermark cannot have licensed it")
-        arriveBands(land, arrival, 2 to 3); runOnce()
-        val plantedRows = spark.read.parquet(sinkDir).where(col("purchase_id") === -3L)
+        arriveBands(land, gate.arrival, 2 to 3); runOnce()
+        val plantedRows = spark.read.parquet(gate.sink).where(col("purchase_id") === -3L)
         require(plantedRows.count() == 1L && plantedRows.where(col("click_id").isNull).count() == 1L,
           "the planted unmatched purchase must emit exactly one null-click row after resume")
-        val out = spark.read.parquet(sinkDir)
+        val out = spark.read.parquet(gate.sink)
           .where(col("purchase_id") >= 0L)
           .groupBy(col("purchase_id"))
           .agg(count(lit(1)).cast(LongType).as("n_rows"),
@@ -803,17 +804,10 @@ object StreamingQueries {
         // that advances across batches) — 4 bands at 3/trigger still give
         // two data batches + the closing no-data batch, same as the
         // inner-join gate; 1/trigger bought nothing but lifecycle cost
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "3").parquet(land)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_left_outer_sink_$id")
-        val q = Streaming.clickAttributionLeftOuter(src)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_left_outer_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        val out = spark.read.parquet(sinkDir)
+        val src = StreamGate.source(spark, feed.schema, land, 3)
+        val gate = new StreamGate("left_outer")
+        gate.run(Streaming.clickAttributionLeftOuter(src))
+        val out = spark.read.parquet(gate.sink)
           .where(col("purchase_id") >= 0L)
           .groupBy(col("purchase_id"))
           .agg(count(lit(1)).cast(LongType).as("n_rows"),
@@ -869,17 +863,10 @@ object StreamingQueries {
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_full_outer", dir)
         // 3/trigger, as in the left-outer leg (r11 verdict #7): both
         // watermark horizons still advance across batches
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "3").parquet(land)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_full_outer_sink_$id")
-        val q = Streaming.clickAttributionFullOuter(src)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_full_outer_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        val rows = spark.read.parquet(sinkDir)
+        val src = StreamGate.source(spark, feed.schema, land, 3)
+        val gate = new StreamGate("full_outer")
+        gate.run(Streaming.clickAttributionFullOuter(src))
+        val rows = spark.read.parquet(gate.sink)
         def side(idCol: String, otherId: String, otherTs: String, tag: String) =
           rows.where(col(idCol) >= 0L) // null-safe: sentinel and null ids both fail
             .groupBy(col(idCol).as("entity_id"))
@@ -936,18 +923,10 @@ object StreamingQueries {
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
         val (feed, land) = timeoutSessionFeed(spark, dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-          .as[Streaming.Event]
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_sess_timeout_sink_$id")
-        val q = Streaming.sessionizeEventTimeout(src).toDF()
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_sess_timeout_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        sessionRollup(spark.read.parquet(sinkDir))
+        val src = StreamGate.source(spark, feed.schema, land, 1).as[Streaming.Event]
+        val gate = new StreamGate("sess_timeout")
+        gate.run(Streaming.sessionizeEventTimeout(src).toDF())
+        sessionRollup(spark.read.parquet(gate.sink))
       },
       // the batch q_sessionize oracle verbatim: timeout-closed sessions
       // must equal the lag-gap partition
@@ -973,18 +952,10 @@ object StreamingQueries {
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           import spark.implicits._
           val (feed, land) = timeoutSessionFeed(spark, dir)
-          val src = spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", "1").parquet(land)
-            .as[Streaming.Event]
-          val id = runId.incrementAndGet()
-          val sinkDir = StorageQueries.target(s"stream_sess_tws_sink_$id")
-          val q = Streaming.sessionizeTws(src).toDF()
-            .writeStream.format("parquet")
-            .option("path", sinkDir)
-            .option("checkpointLocation", StorageQueries.target(s"stream_sess_tws_ckpt_$id"))
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-          sessionRollup(spark.read.parquet(sinkDir))
+          val src = StreamGate.source(spark, feed.schema, land, 1).as[Streaming.Event]
+          val gate = new StreamGate("sess_tws")
+          gate.run(Streaming.sessionizeTws(src).toDF())
+          sessionRollup(spark.read.parquet(gate.sink))
         }
       },
       // the batch q_sessionize oracle verbatim — third state machine, same
@@ -1011,16 +982,10 @@ object StreamingQueries {
           .select(col("doc_id").cast("long").as("doc_id"), col("text"),
                   expr("timestamp_millis(1704067200000 + doc_id * 1000)").as("ts"))
         val land = landBands(docs.withColumn("__band", lit(0)), 1, "stream_land_dedup", dir)
-        val src = spark.readStream.schema(docs.schema).parquet(land)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_dedup_sink_$id")
-        val q = Streaming.streamingDedup(src)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_dedup_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        spark.read.parquet(sinkDir).select(col("content_md5"))
+        val src = StreamGate.source(spark, docs.schema, land)
+        val gate = new StreamGate("dedup")
+        gate.run(Streaming.streamingDedup(src))
+        spark.read.parquet(gate.sink).select(col("content_md5"))
           .localCheckpoint(eager = true)
       },
       Some(s"""SELECT DISTINCT ${graft.text.TextAnalysis.contentHashSql("text")} AS content_md5
@@ -1075,17 +1040,10 @@ object StreamingQueries {
           when(unix_millis(col("ts")) <= lit(t1 + 3L * 3600 * 1000), 0)
             .otherwise(2).cast("int"))
         val land = landBands(banded, 3, "stream_land_dedup_horizon", dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_dedup_horizon_sink_$id")
-        val q = Streaming.streamingDedup(src)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_dedup_horizon_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        val out = spark.read.parquet(sinkDir)
+        val src = StreamGate.source(spark, feed.schema, land, 1)
+        val gate = new StreamGate("dedup_horizon")
+        gate.run(Streaming.streamingDedup(src))
+        val out = spark.read.parquet(gate.sink)
           .groupBy(when(col("text") === "planted near duplicate one", "near")
                      .when(col("text") === "planted far duplicate two", "far")
                      .when(col("text") === "horizon advancer marker", "advancer")
@@ -1124,21 +1082,14 @@ object StreamingQueries {
       (spark, dir) => withStreamParts(spark) {
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withHashBand(eventsDf, col("event_id"), 4), 4, "stream_land_enrich", dir)
-        val src = spark.readStream.schema(eventsDf.schema)
-          // 3 files/trigger: stateless broadcast join, batch count is
-          // pure lifecycle cost
-          .option("maxFilesPerTrigger", "3").parquet(land)
+        // 3 files/trigger: stateless broadcast join, batch count is
+        // pure lifecycle cost
+        val src = StreamGate.source(spark, eventsDf.schema, land, 3)
         val dim = graft.Tables.customer(spark, dir)
           .select(col("c_custkey"), col("c_mktsegment"))
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_enrich_sink_$id")
-        val q = Streaming.enrich(src, dim)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_enrich_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        spark.read.parquet(sinkDir)
+        val gate = new StreamGate("enrich")
+        gate.run(Streaming.enrich(src, dim))
+        spark.read.parquet(gate.sink)
           .groupBy(col("segment"))
           .agg(count(lit(1)).cast(LongType).as("n_events"),
                countDistinct(col("user_id")).cast(LongType).as("n_users"),
@@ -1177,35 +1128,25 @@ object StreamingQueries {
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4,
                              "stream_land_events_t4", dir)
-        val id = runId.incrementAndGet()
-        val arrival = new java.io.File(StorageQueries.target(s"stream_refresh_arrival_$id"))
-        require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-        val dimDir = StorageQueries.target(s"stream_refresh_dim_$id")
-        val sinkDir = StorageQueries.target(s"stream_refresh_sink_$id")
-        val ckpt = StorageQueries.target(s"stream_refresh_ckpt_$id")
+        val gate = new StreamGate("refresh")
+        val dimDir = gate.dir("dim")
         def runOnce(version: Int): Unit = {
           graft.Tables.customer(spark, dir)
             .select(col("c_custkey").as("user_key"),
                     concat(lit("seg"), pmod(col("c_custkey") + version, lit(5))).as("segment"))
             .write.mode("overwrite").parquet(dimDir)
-          val src = spark.readStream.schema(eventsDf.schema)
           // 3 files/trigger: the dim is constant within a lifecycle and
           // the oracle keys on the lifecycle split, not the batch count
-            .option("maxFilesPerTrigger", "3").parquet(arrival.getAbsolutePath)
-          val q = src.join(spark.read.parquet(dimDir), col("user_id") === col("user_key"))
-            .select(col("event_id"), col("user_id"), col("segment"))
-            .writeStream.format("parquet")
-            .option("path", sinkDir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
+          val src = StreamGate.source(spark, eventsDf.schema, gate.arrival, 3)
+          gate.run(src.join(spark.read.parquet(dimDir), col("user_id") === col("user_key"))
+            .select(col("event_id"), col("user_id"), col("segment"))): Unit
         }
-        arriveBands(land, arrival, 0 to 1); runOnce(version = 0)
-        val afterRun1 = sinkRowCount(spark, sinkDir)
+        arriveBands(land, gate.arrival, 0 to 1); runOnce(version = 0)
+        val afterRun1 = sinkRowCount(spark, gate.sink)
         require(afterRun1 > 0,
           "refresh grade degenerate: run #1 enriched nothing — nothing is at stake in the resume")
-        arriveBands(land, arrival, 2 to 3); runOnce(version = 1)
-        val sink = spark.read.parquet(sinkDir).localCheckpoint(eager = true)
+        arriveBands(land, gate.arrival, 2 to 3); runOnce(version = 1)
+        val sink = spark.read.parquet(gate.sink).localCheckpoint(eager = true)
         require(sink.count() > afterRun1,
           "refresh grade degenerate: run #2 emitted nothing — the resume did no work")
         // the refresh must be LIVE: v1 disagrees with v0 on every custkey,
@@ -1258,19 +1199,11 @@ object StreamingQueries {
                   lit(0.0).as("value"))
         val feed = eventsDf.unionByName(sentinel)
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_window_counts", dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val centsIn = src
+        val centsIn = StreamGate.source(spark, feed.schema, land, 1)
           .withColumn("value", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DOUBLE)"))
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_window_counts_sink_$id")
-        val q = Streaming.windowedCounts(centsIn)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_window_counts_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        spark.read.parquet(sinkDir)
+        val gate = new StreamGate("window_counts")
+        gate.run(Streaming.windowedCounts(centsIn))
+        spark.read.parquet(gate.sink)
           .select(col("window_start"), col("event_type"),
                   col("n_events").cast(LongType).as("n_events"),
                   col("total_value").cast(LongType).as("total_cents"))
@@ -1305,21 +1238,10 @@ object StreamingQueries {
       (spark, dir) => withStreamParts(spark) {
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
-        val src = spark.readStream.schema(eventsDf.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        val ckpt = StorageQueries.target(s"stream_state_reader_ckpt_$id")
-        val agg = src
-          .withColumn("cents", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-               sum(col("cents")).as("total_cents"),
-               max(col("event_id")).as("max_event_id"))
-        val q = agg.writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
+        val src = StreamGate.source(spark, eventsDf.schema, land, 1)
+        val gate = new StreamGate("state_reader")
+        gate.run(keyedCentsRollup(src), CountAndDiscard)
+        val ckpt = gate.ckpt
         val ops = spark.read.format("state-metadata").load(ckpt)
           .select(col("operatorName")).collect().map(_.getString(0)).toSeq
         require(ops == Seq("stateStoreSave"),
@@ -1375,25 +1297,13 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
           val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
           val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
-          val src = spark.readStream.schema(eventsDf.schema)
-            .option("maxFilesPerTrigger", "1").parquet(land)
-          val id = runId.incrementAndGet()
-          val ckpt = StorageQueries.target(s"stream_change_feed_ckpt_$id")
-          val agg = src
-            .withColumn("cents", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-                 sum(col("cents")).as("total_cents"),
-                 max(col("event_id")).as("max_event_id"))
-          val q = agg.writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
+          val src = StreamGate.source(spark, eventsDf.schema, land, 1)
+          val gate = new StreamGate("change_feed")
+          gate.run(keyedCentsRollup(src), CountAndDiscard)
           val feed = spark.read.format("statestore")
             .option("readChangeFeed", "true")
             .option("changeStartBatchId", "0")
-            .load(ckpt)
+            .load(gate.ckpt)
           val flat = feed.select(col("batch_id"), col("change_type"),
                                  col("key.*"), col("value.*"))
           require(flat.columns.length == 6,
@@ -1447,27 +1357,12 @@ object StreamingQueries {
       (spark, dir) => withStreamParts(spark) {
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
-        val id = runId.incrementAndGet()
-        val arrival = new java.io.File(StorageQueries.target(s"stream_tt_arrival_$id"))
-        require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-        val ckpt = StorageQueries.target(s"stream_tt_ckpt_$id")
-        def runOnce(): Unit = {
-          val src = spark.readStream.schema(eventsDf.schema)
-            .parquet(arrival.getAbsolutePath)
-          val agg = src
-            .withColumn("cents", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n_events"),
-                 sum(col("cents")).as("total_cents"),
-                 max(col("event_id")).as("max_event_id"))
-          val q = agg.writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        }
-        arriveBands(land, arrival, 0 to 1); runOnce() // batch 0: first half
-        arriveBands(land, arrival, 2 to 3); runOnce() // batch 1: second half
+        val gate = new StreamGate("tt")
+        val ckpt = gate.ckpt
+        def runOnce(): Unit = gate.run(keyedCentsRollup(
+          StreamGate.source(spark, eventsDf.schema, gate.arrival)), CountAndDiscard): Unit
+        arriveBands(land, gate.arrival, 0 to 1); runOnce() // batch 0: first half
+        arriveBands(land, gate.arrival, 2 to 3); runOnce() // batch 1: second half
         def decode(df: DataFrame): DataFrame = {
           val flat = df.select(col("key.*"), col("value.*"))
           require(flat.columns.length == 4,
@@ -1536,10 +1431,9 @@ object StreamingQueries {
       (spark, dir) => withStreamParts(spark) {
         val eventsDf = Streaming.eventsBatch(spark, dir).toDF()
         val land = landBands(withTimeBand(eventsDf, "ts", 4), 4, "stream_land_events_t4", dir)
-        val src = spark.readStream.schema(eventsDf.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        val ckpt = StorageQueries.target(s"stream_join_reader_ckpt_$id")
+        val src = StreamGate.source(spark, eventsDf.schema, land, 1)
+        val gate = new StreamGate("join_reader")
+        val ckpt = gate.ckpt
         val clicks = src.where(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
                   col("ts").as("click_ts"))
@@ -1556,14 +1450,9 @@ object StreamingQueries {
               expr(s"INTERVAL ${Streaming.AttributionDays} DAYS"),
           "inner")
         val pairsEmitted = new java.util.concurrent.atomic.AtomicLong(0L)
-        val q = joined.writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            pairsEmitted.addAndGet(b.count()); () }
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination()
+        val q = gate.run(joined, StreamGate.Raw("append",
+          (b: DataFrame, _: Long) => { pairsEmitted.addAndGet(b.count()); () }))
         val batches = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
-        unloadStateStores()
         require(batches >= 1,
           s"join ran only ${batches + 1} batch(es) — the buffers never accreted")
         require(pairsEmitted.get() > 0,
@@ -1627,16 +1516,11 @@ object StreamingQueries {
                     expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"),
                     col("__band"))
           val land = landBands(banded, 4, "stream_land_evo", dir)
-          val srcSchema = banded.drop("__band").schema
-          val id = runId.incrementAndGet()
-          val ckpt = StorageQueries.target(s"stream_tws_reader_ckpt_$id")
-          val src = spark.readStream.schema(srcSchema)
-            .option("maxFilesPerTrigger", "1").parquet(land).as[Streaming.EvoIn]
-          val q = Streaming.evoV1(src).toDF().writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (b: DataFrame, _: Long) => b.count(); () }
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
+          val src = StreamGate.source(spark, banded.drop("__band").schema, land, 1)
+            .as[Streaming.EvoIn]
+          val gate = new StreamGate("tws_reader")
+          val ckpt = gate.ckpt
+          gate.run(Streaming.evoV1(src).toDF(), CountAndDiscard)
           val ops = spark.read.format("state-metadata").load(ckpt)
             .select(col("operatorName")).collect().map(_.getString(0)).toSeq
           require(ops.exists(_.toLowerCase.contains("transformwithstate")),
@@ -1701,32 +1585,20 @@ object StreamingQueries {
                     col("__band"))
           val land = landBands(banded, 4, "stream_land_evo", dir)
           val srcSchema = banded.drop("__band").schema
-          val id = runId.incrementAndGet()
-          val arrival = new java.io.File(StorageQueries.target(s"stream_evo_arrival_$id"))
-          require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-          val emitDir = StorageQueries.target(s"stream_evo_emit_$id")
-          val ckpt = StorageQueries.target(s"stream_evo_ckpt_$id")
+          val gate = new StreamGate("evo")
           def runOnce(v2: Boolean): Unit = {
-            val src = spark.readStream.schema(srcSchema)
-              .parquet(arrival.getAbsolutePath).as[Streaming.EvoIn]
+            val src = StreamGate.source(spark, srcSchema, gate.arrival).as[Streaming.EvoIn]
             val out = if (v2) Streaming.evoV2(src).toDF() else Streaming.evoV1(src).toDF()
-            val q = out.writeStream
-              .option("checkpointLocation", ckpt)
-              .foreachBatch { (b: DataFrame, batchId: Long) =>
-                b.write.mode("overwrite").parquet(s"$emitDir/batch=$batchId")
-                ()
-              }
-              .outputMode("update").trigger(Trigger.AvailableNow()).start()
-            q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
+            gate.run(out, StreamGate.Update): Unit
           }
-          arriveBands(land, arrival, 0 to 1); runOnce(v2 = false) // the V1 deploy
-          arriveBands(land, arrival, 2 to 3); runOnce(v2 = true)  // the upgraded deploy
-          val batchDirs = Option(new java.io.File(emitDir).listFiles())
+          arriveBands(land, gate.arrival, 0 to 1); runOnce(v2 = false) // the V1 deploy
+          arriveBands(land, gate.arrival, 2 to 3); runOnce(v2 = true)  // the upgraded deploy
+          val batchDirs = Option(new java.io.File(gate.sink).listFiles())
             .getOrElse(Array.empty).filter(_.getName.startsWith("batch=")).map(_.getName)
           require(batchDirs.length == 2,
             s"expected 2 data batches (one per deploy), saw ${batchDirs.toSeq.sorted}")
           val last = batchDirs.map(_.stripPrefix("batch=").toLong).max
-          val out = spark.read.parquet(s"$emitDir/batch=$last")
+          val out = spark.read.parquet(s"${gate.sink}/batch=$last")
             .select(col("event_type"),
                     col("n_events").cast(LongType).as("n_events"),
                     col("total_cents").cast(LongType).as("total_cents"),
@@ -1817,29 +1689,19 @@ object StreamingQueries {
                   col("value"), col("__band"))
           .unionByName(sentinel)
         val land = landBands(feed, 5, "stream_land_late_drop", dir)
-        val src = spark.readStream.schema(eventsDf.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val centsIn = src
+        val centsIn = StreamGate.source(spark, eventsDf.schema, land, 1)
           .withColumn("value", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DOUBLE)"))
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_late_drop_sink_$id")
-        val q = Streaming.windowedCounts(centsIn)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_late_drop_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination()
+        val gate = new StreamGate("late_drop")
         // the drop must be OBSERVABLE and accounted: every late-band group
         // dropped (at aggregation-buffer grain — see the header note),
         // nothing from the in-order bands dropped
-        val dropped = q.recentProgress
+        val dropped = gate.run(Streaming.windowedCounts(centsIn)).recentProgress
           .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-        unloadStateStores()
         require(dropped >= nLateGroups && dropped <= nLate,
           s"watermark drop accounting: expected the $nLate late rows' " +
           s"$nLateGroups (window, type) buffer groups dropped (≤ $nLate under " +
           s"wider partial-agg partitioning), progress reports $dropped")
-        spark.read.parquet(sinkDir)
+        spark.read.parquet(gate.sink)
           .where(col("event_type") =!= "sentinel")
           .select(col("window_start"), col("event_type"),
                   col("n_events").cast(LongType).as("n_events"),
@@ -1888,19 +1750,11 @@ object StreamingQueries {
                   lit(0.0).as("value"))
         val feed = eventsDf.unionByName(sentinel)
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_file_sink", dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val centsIn = src
+        val centsIn = StreamGate.source(spark, feed.schema, land, 1)
           .withColumn("value", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DOUBLE)"))
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_file_sink_$id")
-        val q = Streaming.windowedCounts(centsIn)
-          .writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_file_sink_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        spark.read.parquet(sinkDir)
+        val gate = new StreamGate("file_sink")
+        gate.run(Streaming.windowedCounts(centsIn))
+        spark.read.parquet(gate.sink)
           .select(col("window_start"), col("event_type"),
                   col("n_events").cast(LongType).as("n_events"),
                   col("total_value").cast(LongType).as("total_cents"))
@@ -1918,8 +1772,8 @@ object StreamingQueries {
     // STREAMING RESTART/RECOVERY — the strongest claim the checkpoint +
     // exactly-once file-sink commit protocol makes, proven by actually
     // exercising it: the SAME windowed aggregation runs as TWO separate
-    // `writeStream.start()` invocations against the SAME checkpoint and
-    // sink dirs. Bands 0-1 arrive, stream #1 runs to termination (its
+    // lifecycles (two `StreamGate.run` calls) against the SAME checkpoint
+    // and sink dirs. Bands 0-1 arrive, stream #1 runs to termination (its
     // open windows and source offsets persist to the checkpoint); bands
     // 2-3 then arrive and stream #2 COLD-STARTS from that checkpoint —
     // it must (a) not reprocess bands 0-1 (the offset log), (b) restore
@@ -1941,33 +1795,19 @@ object StreamingQueries {
                   lit(0.0).as("value"))
         val feed = eventsDf.unionByName(sentinel)
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_restart", dir)
-        val id = runId.incrementAndGet()
-        val arrival = new java.io.File(StorageQueries.target(s"stream_restart_arrival_$id"))
-        require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-        def arrive(bands: Range): Unit = arriveBands(land, arrival, bands)
-        val sinkDir = StorageQueries.target(s"stream_restart_sink_$id")
-        val ckpt = StorageQueries.target(s"stream_restart_ckpt_$id")
+        val gate = new StreamGate("restart")
         // one lifecycle = build the query FROM SCRATCH and run to
         // termination; the second call is a true cold restart (new source,
         // new query object — only the checkpoint + sink dirs are shared)
-        def runOnce(): Unit = {
-          val src = spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", "1").parquet(arrival.getAbsolutePath)
-          val centsIn = src
-            .withColumn("value", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DOUBLE)"))
-          val q = Streaming.windowedCounts(centsIn)
-            .writeStream.format("parquet")
-            .option("path", sinkDir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        }
-        arrive(0 to 1); runOnce()
-        val afterRun1 = sinkRowCount(spark, sinkDir)
+        def runOnce(): Unit = gate.run(Streaming.windowedCounts(
+          StreamGate.source(spark, feed.schema, gate.arrival, 1)
+            .withColumn("value", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS DOUBLE)")))): Unit
+        arriveBands(land, gate.arrival, 0 to 1); runOnce()
+        val afterRun1 = sinkRowCount(spark, gate.sink)
         require(afterRun1 > 0,
           "restart grade degenerate: run #1 closed no windows — nothing is at stake in the resume")
-        arrive(2 to 3); runOnce()
-        val out = spark.read.parquet(sinkDir)
+        arriveBands(land, gate.arrival, 2 to 3); runOnce()
+        val out = spark.read.parquet(gate.sink)
           .select(col("window_start"), col("event_type"),
                   col("n_events").cast(LongType).as("n_events"),
                   col("total_value").cast(LongType).as("total_cents"))
@@ -2005,35 +1845,19 @@ object StreamingQueries {
         val feed = Tables.events(spark, dir)
           .select(col("event_id"), col("event_type"), col("value"))
         val land = landBands(withHashBand(feed, col("event_id"), 4), 4, "stream_land_archive", dir)
-        val id = runId.incrementAndGet()
-        val arrival = new java.io.File(StorageQueries.target(s"stream_archive_arrival_$id"))
-        require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-        arriveBands(land, arrival, 0 to 3)
-        val archiveDir = StorageQueries.target(s"stream_archive_dest_$id")
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("cleanSource", "archive")
-          .option("sourceArchiveDir", archiveDir)
-          .parquet(arrival.getAbsolutePath)
-        // complete-mode rollup landed via foreachBatch: each batch emits
-        // the FULL state (metadata-grain, a handful of rows), so an
-        // idempotent whole-dir overwrite per batch leaves the last batch's
-        // complete answer on disk — the update/complete-mode analogue of
-        // the append-mode parquet-sink readback, keeping the result off
-        // the driver
-        val rollupDir = StorageQueries.target(s"stream_archive_rollup_$id")
-        val q = src.groupBy(col("event_type"))
+        val gate = new StreamGate("archive")
+        val arrival = new java.io.File(gate.arrival)
+        arriveBands(land, gate.arrival, 0 to 3)
+        val archiveDir = gate.dir("dest")
+        val src = StreamGate.source(spark, feed.schema, gate.arrival, 1,
+          Map("cleanSource" -> "archive", "sourceArchiveDir" -> archiveDir))
+        // complete-mode rollup: each batch emits the FULL state
+        // (metadata-grain, a handful of rows), so the last batch's
+        // complete answer is what the sink dir holds, off the driver
+        gate.run(src.groupBy(col("event_type"))
           .agg(count(lit(1)).cast(LongType).as("n_events"),
                sum(expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-                 .cast(LongType).as("total_cents"))
-          .writeStream
-          .option("checkpointLocation", StorageQueries.target(s"stream_archive_ckpt_$id"))
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("overwrite").parquet(rollupDir)
-            ()
-          }
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
+                 .cast(LongType).as("total_cents")), StreamGate.Complete)
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) Option(f.listFiles()).map(_.toSeq.flatMap(walk)).getOrElse(Nil)
           else Seq(f)
@@ -2062,7 +1886,7 @@ object StreamingQueries {
           .map(_.getName).filter(_.endsWith(".parquet")).toSeq.sorted
         require((archived ++ pending).sorted == (0 to 3).map(i => f"b$i%04d.parquet"),
           s"archive must move files, not lose or duplicate them: archived=$archived pending=$pending")
-        spark.read.parquet(rollupDir).localCheckpoint(eager = true)
+        spark.read.parquet(gate.sink).localCheckpoint(eager = true)
       },
       Some("""SELECT event_type, COUNT(*) AS n_events,
              |       CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total_cents
@@ -2098,30 +1922,18 @@ object StreamingQueries {
         // identical feed to q_streaming_sessionize — same landing name, so
         // within one process the land-once cache shares the band files
         val land = landBands(withTimeBand(feed, "ts", 4), 4, "stream_land_sessionize", dir)
-        val id = runId.incrementAndGet()
-        val arrival = new java.io.File(StorageQueries.target(s"stream_restart_sess_arrival_$id"))
-        require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-        val sinkDir = StorageQueries.target(s"stream_restart_sess_sink_$id")
-        val ckpt = StorageQueries.target(s"stream_restart_sess_ckpt_$id")
-        def runOnce(): Unit = {
-          val src = spark.readStream.schema(feed.schema)
-            .option("maxFilesPerTrigger", "1").parquet(arrival.getAbsolutePath)
-            .as[Streaming.Event]
-          val q = Streaming.sessionize(src, flushOnTimeout = false).toDF()
-            .writeStream.format("parquet")
-            .option("path", sinkDir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        }
-        arriveBands(land, arrival, 0 to 1); runOnce()
-        val afterRun1 = sinkRowCount(spark, sinkDir)
+        val gate = new StreamGate("restart_sess")
+        def runOnce(): Unit = gate.run(Streaming.sessionize(
+          StreamGate.source(spark, feed.schema, gate.arrival, 1).as[Streaming.Event],
+          flushOnTimeout = false).toDF()): Unit
+        arriveBands(land, gate.arrival, 0 to 1); runOnce()
+        val afterRun1 = sinkRowCount(spark, gate.sink)
         require(afterRun1 > 0,
           "custom-state restart degenerate: run #1 closed no sessions — nothing at stake")
-        arriveBands(land, arrival, 2 to 3); runOnce()
-        require(sinkRowCount(spark, sinkDir) > afterRun1,
+        arriveBands(land, gate.arrival, 2 to 3); runOnce()
+        require(sinkRowCount(spark, gate.sink) > afterRun1,
           "custom-state restart degenerate: run #2 emitted nothing — the resume did no work")
-        spark.read.parquet(sinkDir)
+        spark.read.parquet(gate.sink)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).cast(LongType).as("n_sessions"),
                sum(col("n_events")).cast(LongType).as("n_events"))
@@ -2154,30 +1966,17 @@ object StreamingQueries {
           // identical feed to q_streaming_sessionize_tws — ONE construction,
           // shared landing via the land-once cache
           val (feed, land) = timeoutSessionFeed(spark, dir)
-          val id = runId.incrementAndGet()
-          val arrival = new java.io.File(StorageQueries.target(s"stream_restart_tws_arrival_$id"))
-          require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-          val sinkDir = StorageQueries.target(s"stream_restart_tws_sink_$id")
-          val ckpt = StorageQueries.target(s"stream_restart_tws_ckpt_$id")
-          def runOnce(): Unit = {
-            val src = spark.readStream.schema(feed.schema)
-              .option("maxFilesPerTrigger", "1").parquet(arrival.getAbsolutePath)
-              .as[Streaming.Event]
-            val q = Streaming.sessionizeTws(src).toDF()
-              .writeStream.format("parquet")
-              .option("path", sinkDir)
-              .option("checkpointLocation", ckpt)
-              .outputMode("append").trigger(Trigger.AvailableNow()).start()
-            q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-          }
-          arriveBands(land, arrival, 0 to 1); runOnce()
-          val afterRun1 = sinkRowCount(spark, sinkDir)
+          val gate = new StreamGate("restart_tws")
+          def runOnce(): Unit = gate.run(Streaming.sessionizeTws(
+            StreamGate.source(spark, feed.schema, gate.arrival, 1).as[Streaming.Event]).toDF()): Unit
+          arriveBands(land, gate.arrival, 0 to 1); runOnce()
+          val afterRun1 = sinkRowCount(spark, gate.sink)
           require(afterRun1 > 0,
             "state-v2 restart degenerate: run #1 closed no sessions — nothing at stake")
-          arriveBands(land, arrival, 2 to 3); runOnce()
-          require(sinkRowCount(spark, sinkDir) > afterRun1,
+          arriveBands(land, gate.arrival, 2 to 3); runOnce()
+          require(sinkRowCount(spark, gate.sink) > afterRun1,
             "state-v2 restart degenerate: run #2 emitted nothing — the resume did no work")
-          sessionRollup(spark.read.parquet(sinkDir))
+          sessionRollup(spark.read.parquet(gate.sink))
         }
       },
       // the batch q_sessionize oracle verbatim: the two-lifecycle session
@@ -2207,12 +2006,7 @@ object StreamingQueries {
         val land = landBands(
           withHashBand(feed, Hashing.h32(concat(lit("kb:"), col("text"))), 4),
           4, "stream_land_kmv", dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        // update-mode emissions → batchId-keyed parquet dirs (see
-        // cdcSnapshotRun); latest per shard selected by monotone n_seen
-        val emitDir = StorageQueries.target(s"stream_kmv_emit_$id")
+        val src = StreamGate.source(spark, feed.schema, land, 1)
         val hashes = src
           .select(when(substring(col("source"), 4, 10).cast("int") < 10, lit("a"))
                     .otherwise(lit("b")).as("grp"),
@@ -2223,17 +2017,12 @@ object StreamingQueries {
           .select(col("grp"), Hashing.h32(col("term")).as("h"))
           .select(col("grp"), pmod(col("h"), lit(8)).cast("int").as("sub"), col("h"))
           .as[Streaming.SubHash]
-        val q = Streaming.kmvSketch(hashes, K).toDF()
-          .writeStream
-          .option("checkpointLocation", StorageQueries.target(s"stream_kmv_ckpt_$id"))
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$emitDir/batch=$batchId")
-            ()
-          }
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
+        // update-mode emissions → batchId-keyed parquet dirs; latest per
+        // shard selected by monotone n_seen
+        val gate = new StreamGate("kmv")
+        gate.run(Streaming.kmvSketch(hashes, K).toDF(), StreamGate.Update)
         val w = Window.partitionBy(col("grp"), col("sub")).orderBy(col("n_seen").desc)
-        val latest = spark.read.parquet(emitDir)
+        val latest = spark.read.parquet(gate.sink)
           .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         val merged = latest
           .select(col("grp"), explode(col("sketch")).as("h")).distinct()
@@ -2293,28 +2082,18 @@ object StreamingQueries {
         val K = TextQueries.HhK
         val feed = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
         val land = landBands(withHashBand(feed, col("doc_id"), 4), 4, "stream_land_hh", dir)
-        val src = spark.readStream.schema(feed.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        // update-mode emissions → batchId-keyed parquet dirs (see
-        // cdcSnapshotRun); latest per shard selected by monotone n_seen
-        val emitDir = StorageQueries.target(s"stream_hh_emit_$id")
+        val src = StreamGate.source(spark, feed.schema, land, 1)
         val shardTerms = src
           .select(explode(TextAnalysis.tokens(col("text"))).as("term"))
           .select(pmod(Hashing.h32(col("term")), lit(8)).cast("int").as("shard"),
                   col("term"))
           .as[Streaming.ShardTerm]
-        val q = Streaming.mgSketch(shardTerms, K).toDF()
-          .writeStream
-          .option("checkpointLocation", StorageQueries.target(s"stream_hh_ckpt_$id"))
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$emitDir/batch=$batchId")
-            ()
-          }
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
+        // update-mode emissions → batchId-keyed parquet dirs; latest per
+        // shard selected by monotone n_seen
+        val gate = new StreamGate("hh")
+        gate.run(Streaming.mgSketch(shardTerms, K).toDF(), StreamGate.Update)
         val w = Window.partitionBy(col("shard")).orderBy(col("n_seen").desc)
-        val summary = spark.read.parquet(emitDir)
+        val summary = spark.read.parquet(gate.sink)
           .withColumn("rn", row_number().over(w)).where(col("rn") === 1)
           .select(explode(map_keys(col("summary"))).as("term"))
           .distinct()
@@ -2382,29 +2161,17 @@ object StreamingQueries {
                   col("event_type"), col("value"))
         batch.repartition(8, col("event_id"))
           .write.mode("overwrite").parquet(land)
-        val id = runId.incrementAndGet()
-        // complete-mode rollup via foreachBatch whole-dir overwrite (see
-        // q_streaming_source_archive): the last batch's full state is the
-        // answer, landed as files, never driver-resident
-        val rollupDir = StorageQueries.target(s"stream_file_source_rollup_$id")
-        val q = spark.readStream.schema(batch.schema)
-          .option("maxFilesPerTrigger", "3")
-          .parquet(land)
+        // complete-mode rollup: the last batch's full state is the answer,
+        // landed as files, never driver-resident
+        val gate = new StreamGate("file_source")
+        gate.run(StreamGate.source(spark, batch.schema, land, 3)
           .withColumn("cents", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
           .groupBy(col("event_type"))
           .agg(count(lit(1)).cast(LongType).as("n_events"),
                sum(col("cents")).cast(LongType).as("total_cents"),
                min(col("event_id")).cast(LongType).as("min_event_id"),
-               max(col("event_id")).cast(LongType).as("max_event_id"))
-          .writeStream
-          .option("checkpointLocation", StorageQueries.target(s"stream_file_source_ckpt_$id"))
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("overwrite").parquet(rollupDir)
-            ()
-          }
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        spark.read.parquet(rollupDir).localCheckpoint(eager = true)
+               max(col("event_id")).cast(LongType).as("max_event_id")), StreamGate.Complete)
+        spark.read.parquet(gate.sink).localCheckpoint(eager = true)
       },
       Some("""SELECT event_type, COUNT(*) AS n_events,
              |       CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS total_cents,
@@ -2569,12 +2336,7 @@ object StreamingQueries {
           "spark.sql.streaming.stateStore.providerClass" ->
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
           import spark.implicits._
-          val changes = Tables.events(spark, dir)
-            .select(col("user_id"),
-                    expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
-                    col("event_id"),
-                    when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-                    expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
+          val changes = cdcChanges(spark, dir)
           val land = landBands(withHashBand(changes, col("event_id"), 4), 4,
                                "stream_land_cdc", dir)
           // batch bootstrap: the history half folded by the shared step
@@ -2583,33 +2345,12 @@ object StreamingQueries {
             .groupByKey(_.user_id)
             .mapGroups { (uid, it) => uid -> it.foldLeft(Streaming.CdcZero)(Streaming.lwwStep) }
             .groupByKey(_._1).mapValues(_._2)
-          val id = runId.incrementAndGet()
-          val arrival = new java.io.File(StorageQueries.target(s"stream_cdc_bootstrap_arrival_$id"))
-          require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-          arriveBands(land, arrival, 2 to 3) // live half ONLY
-          val src = spark.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", "3").parquet(arrival.getAbsolutePath)
+          val gate = new StreamGate("cdc_bootstrap")
+          arriveBands(land, gate.arrival, 2 to 3) // live half ONLY
+          val src = StreamGate.source(spark, changes.schema, gate.arrival, 3)
             .as[Streaming.CdcChange]
-          val emitDir = StorageQueries.target(s"stream_cdc_bootstrap_emit_$id")
-          val q = Streaming.cdcBootstrap(src, initState).toDF()
-            .writeStream
-            .option("checkpointLocation", StorageQueries.target(s"stream_cdc_bootstrap_ckpt_$id"))
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              batch.write.mode("overwrite").parquet(s"$emitDir/batch=$batchId")
-              ()
-            }
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-          val w = Window.partitionBy(col("user_id")).orderBy(col("n_changes").desc)
-          val out = spark.read.parquet(emitDir)
-            .withColumn("rn", row_number().over(w))
-            .where(col("rn") === 1 && col("op") === "U")
-            .select(col("user_id"),
-                    expr("timestamp_micros(ts_micros)").as("last_ts"),
-                    col("event_id").cast(LongType).as("last_event_id"),
-                    col("cents").cast(LongType).as("last_cents"),
-                    col("n_changes").cast(LongType).as("n_changes"))
-            .localCheckpoint(eager = true)
+          gate.run(Streaming.cdcBootstrap(src, initState).toDF(), StreamGate.Update)
+          val out = latestCdcSnapshot(spark, gate.sink)
           require(out.where(pmod(col("last_event_id"), lit(4)) < 2).count() > 0,
             "bootstrap degenerate: no emitted user's winner lies in the history " +
             "half — the seeded state was never load-bearing")
@@ -2655,26 +2396,19 @@ object StreamingQueries {
         // shares the enrich gate's hash-banded landing via the cache
         val land = landBands(withHashBand(eventsDf, col("event_id"), 4), 4,
                              "stream_land_enrich", dir)
-        val id = runId.incrementAndGet()
-        val sinkDir = StorageQueries.target(s"stream_observe_sink_$id")
-        val src = spark.readStream.schema(eventsDf.schema)
-          .option("maxFilesPerTrigger", "3").parquet(land)
+        val src = StreamGate.source(spark, eventsDf.schema, land, 3)
           .withColumn("cents", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
           .observe("dq", count(lit(1)).as("n_obs"),
                    sum(col("cents")).as("cents_obs"))
-        val q = src.writeStream.format("parquet")
-          .option("path", sinkDir)
-          .option("checkpointLocation", StorageQueries.target(s"stream_observe_ckpt_$id"))
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        val obs = q.recentProgress.toSeq
+        val gate = new StreamGate("observe")
+        val obs = gate.run(src).recentProgress.toSeq
           .flatMap(p => Option(p.observedMetrics.get("dq")))
         require(obs.nonEmpty,
           "no observed metrics in any micro-batch progress — CollectMetrics " +
           "never reported on the stream")
         val nObs = obs.map(_.getAs[Long]("n_obs")).sum
         val centsObs = obs.map(_.getAs[Long]("cents_obs")).sum
-        val out = spark.read.parquet(sinkDir)
+        val out = spark.read.parquet(gate.sink)
           .agg(count(lit(1)).cast(LongType).as("n_events"),
                sum(col("cents")).cast(LongType).as("total_cents"))
           .localCheckpoint(eager = true)
@@ -2719,7 +2453,7 @@ object StreamingQueries {
     // as a mysterious hash mismatch. THREE `Trigger.Once` lifecycles, one
     // band each — under TimeMode.ProcessingTime the engine schedules
     // wake-up batches indefinitely (TTL cleanup may fire later), so
-    // AvailableNow + processAllAvailable never quiesces (measured: 2300+
+    // an AvailableNow lifecycle never quiesces (measured: 2300+
     // empty batches — the sessionize flushOnTimeout pathology); Once runs
     // exactly one data batch and stops. Every batch boundary is therefore
     // also a restart: BOTH directions additionally prove TTL expiration
@@ -2751,30 +2485,15 @@ object StreamingQueries {
           // into a clean second observation instead of a failed suite row;
           // a SECOND miss still aborts loudly as INCONCLUSIVE.
           def attempt(): Either[String, DataFrame] = {
-          val id = runId.incrementAndGet()
-          val arrival = new java.io.File(StorageQueries.target(s"stream_cdc_ttl_arrival_$id"))
-          require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-          val emitDir = StorageQueries.target(s"stream_cdc_ttl_emit_$id")
-          val ckpt = StorageQueries.target(s"stream_cdc_ttl_ckpt_$id")
-          def runOnce(): Unit = {
-            val src = spark.readStream.schema(srcSchema)
-              .parquet(arrival.getAbsolutePath)
-              .as[Streaming.CdcChange]
-            val q = Streaming.cdcValueTtl(src, ttlMs).toDF()
-              .writeStream
-              .option("checkpointLocation", ckpt)
-              .foreachBatch { (batch: DataFrame, batchId: Long) =>
-                batch.write.mode("overwrite").parquet(s"$emitDir/batch=$batchId")
-                ()
-              }
-              .outputMode("update").trigger(Trigger.Once()).start()
-            q.awaitTermination(); unloadStateStores()
-          }
-          arriveBands(land, arrival, 0 to 0); runOnce()
-          arriveBands(land, arrival, 1 to 1); runOnce() // back-to-back: within TTL
+          val gate = new StreamGate("cdc_ttl")
+          def runOnce(): Unit = gate.run(Streaming.cdcValueTtl(
+              StreamGate.source(spark, srcSchema, gate.arrival).as[Streaming.CdcChange], ttlMs).toDF(),
+            StreamGate.Update, Trigger.Once()): Unit
+          arriveBands(land, gate.arrival, 0 to 0); runOnce()
+          arriveBands(land, gate.arrival, 1 to 1); runOnce() // back-to-back: within TTL
           Thread.sleep(ttlMs + 1200)
-          arriveBands(land, arrival, 2 to 2); runOnce()
-          val emitted = spark.read.parquet(emitDir)
+          arriveBands(land, gate.arrival, 2 to 2); runOnce()
+          val emitted = spark.read.parquet(gate.sink)
             .select(col("user_id"), col("event_id"), col("n_changes"),
                     col("list_len"), col("map_n"),
                     col("batch").cast(LongType).as("batch"))
@@ -2789,7 +2508,7 @@ object StreamingQueries {
             s"expected 3 data batches, saw ${ids.length} — the banded replay drifted")
           // the engine's OWN processing-time clock, from the offset log
           def batchTs(batchId: Long): Long = {
-            val f = new java.io.File(new java.io.File(ckpt, "offsets"), batchId.toString)
+            val f = new java.io.File(new java.io.File(gate.ckpt, "offsets"), batchId.toString)
             val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
             """"batchTimestampMs"\s*:\s*(\d+)""".r.findFirstMatchIn(txt)
               .map(_.group(1).toLong)
@@ -2868,45 +2587,19 @@ object StreamingQueries {
       "q_streaming_latest_first",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        val changes = Tables.events(spark, dir)
-          .select(col("user_id"),
-                  expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
-                  col("event_id"),
-                  when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-                  expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
+        val changes = cdcChanges(spark, dir)
         val land = landBands(withHashBand(changes, col("event_id"), 4), 4, "stream_land_cdc", dir)
-        val id = runId.incrementAndGet()
-        val emitDir = StorageQueries.target(s"stream_latest_first_emit_$id")
-        val src = spark.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("latestFirst", "true")
-          .parquet(land)
+        val src = StreamGate.source(spark, changes.schema, land, 1, Map("latestFirst" -> "true"))
           .as[Streaming.CdcChange]
-        val q = Streaming.cdcState(src).toDF()
-          .writeStream
-          .option("checkpointLocation", StorageQueries.target(s"stream_latest_first_ckpt_$id"))
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite").parquet(s"$emitDir/batch=$batchId")
-            ()
-          }
-          .outputMode("update").trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-        val firstBatch = spark.read.parquet(s"$emitDir/batch=0")
+        val gate = new StreamGate("latest_first")
+        gate.run(Streaming.cdcState(src).toDF(), StreamGate.Update)
+        val firstBatch = spark.read.parquet(s"${gate.sink}/batch=0")
         val offBand = firstBatch.where(pmod(col("event_id"), lit(4)) =!= 3).count()
         require(firstBatch.count() > 0 && offBand == 0,
           s"latestFirst did not serve the newest band first: $offBand of batch-0's " +
           "winners come from older bands — the catch-up knob silently replayed in " +
           "mtime order")
-        val w = Window.partitionBy(col("user_id")).orderBy(col("n_changes").desc)
-        spark.read.parquet(emitDir)
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1 && col("op") === "U")
-          .select(col("user_id"),
-                  expr("timestamp_micros(ts_micros)").as("last_ts"),
-                  col("event_id").cast(LongType).as("last_event_id"),
-                  col("cents").cast(LongType).as("last_cents"),
-                  col("n_changes").cast(LongType).as("n_changes"))
-          .localCheckpoint(eager = true)
+        latestCdcSnapshot(spark, gate.sink)
       },
       Some(CdcOracleSql)
     ),
@@ -2928,56 +2621,27 @@ object StreamingQueries {
       "q_streaming_partitions_pinned",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
-        val changes = Tables.events(spark, dir)
-          .select(col("user_id"),
-                  expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
-                  col("event_id"),
-                  when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-                  expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
+        val changes = cdcChanges(spark, dir)
         val land = landBands(withHashBand(changes, col("event_id"), 4), 4, "stream_land_cdc", dir)
-        val id = runId.incrementAndGet()
-        val arrival = new java.io.File(StorageQueries.target(s"stream_parts_pin_arrival_$id"))
-        require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-        val emitDir = StorageQueries.target(s"stream_parts_pin_emit_$id")
-        val ckpt = StorageQueries.target(s"stream_parts_pin_ckpt_$id")
+        val gate = new StreamGate("parts_pin")
         def runOnce(tag: String): Unit = {
-          val src = spark.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", "3").parquet(arrival.getAbsolutePath)
+          val src = StreamGate.source(spark, changes.schema, gate.arrival, 3)
             .as[Streaming.CdcChange]
-          val q = Streaming.cdcState(src).toDF()
-            .writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              batch.write.mode("overwrite").parquet(s"$emitDir/batch=$batchId")
-              ()
-            }
-            .outputMode("update").trigger(Trigger.AvailableNow()).start()
-          q.processAllAvailable(); q.awaitTermination()
-          val parts = q.recentProgress.toSeq
+          val parts = gate.run(Streaming.cdcState(src).toDF(), StreamGate.Update).recentProgress.toSeq
             .flatMap(_.stateOperators.toSeq).map(_.numShufflePartitions).distinct
-          unloadStateStores()
           require(parts == Seq(StreamShufflePartitions.toLong),
             s"$tag: the state operator must run at the checkpoint-pinned " +
             s"$StreamShufflePartitions partitions; progress reported $parts")
         }
-        arriveBands(land, arrival, 0 to 1)
+        arriveBands(land, gate.arrival, 0 to 1)
         runOnce("lifecycle #1 (pins the count)")
-        arriveBands(land, arrival, 2 to 3)
+        arriveBands(land, gate.arrival, 2 to 3)
         // the restart happens under a DIFFERENT session conf — the
         // checkpointed count must win over it
         graft.GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> "32") {
           runOnce("lifecycle #2 (conf says 32)")
         }
-        val w = Window.partitionBy(col("user_id")).orderBy(col("n_changes").desc)
-        spark.read.parquet(emitDir)
-          .withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1 && col("op") === "U")
-          .select(col("user_id"),
-                  expr("timestamp_micros(ts_micros)").as("last_ts"),
-                  col("event_id").cast(LongType).as("last_event_id"),
-                  col("cents").cast(LongType).as("last_cents"),
-                  col("n_changes").cast(LongType).as("n_changes"))
-          .localCheckpoint(eager = true)
+        latestCdcSnapshot(spark, gate.sink)
       },
       Some(CdcOracleSql)
     ),
@@ -2999,44 +2663,20 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_foreach_upsert",
       (spark, dir) => withStreamParts(spark) {
-        val changes = Tables.events(spark, dir)
-          .select(col("user_id"),
-                  expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
-                  col("event_id"),
-                  when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-                  expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
+        val changes = cdcChanges(spark, dir)
         // identical feed to the CDC legs — shares their landing via the cache
         val land = landBands(withHashBand(changes, col("event_id"), 4), 4, "stream_land_cdc", dir)
-        val src = spark.readStream.schema(changes.schema)
-          .option("maxFilesPerTrigger", "1").parquet(land)
-        val id = runId.incrementAndGet()
-        val tableDir = StorageQueries.target(s"stream_foreach_upsert_$id")
-        val q = src.writeStream
-          .option("checkpointLocation", StorageQueries.target(s"stream_foreach_upsert_ckpt_$id"))
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val reduced = batch
-              .groupBy(col("user_id"))
-              .agg(max(struct(col("ts_micros"), col("event_id"), col("op"), col("cents"))).as("w"),
-                   count(lit(1)).as("n_changes"))
-            val dest = s"$tableDir/batch=$batchId"
+        val gate = new StreamGate("foreach_upsert")
+        gate.run(StreamGate.source(spark, changes.schema, land, 1), StreamGate.Raw("append",
+          (batch: DataFrame, batchId: Long) => {
+            val reduced = lwwReduce(batch)
+            val dest = s"${gate.sink}/batch=$batchId"
             reduced.write.mode("overwrite").parquet(dest)
             // at-least-once redelivery, simulated: the SAME batch id lands
             // again; the keyed overwrite must leave the table unchanged
             reduced.write.mode("overwrite").parquet(dest)
-            ()
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.processAllAvailable(); q.awaitTermination()
-        spark.read.parquet(tableDir)
-          .groupBy(col("user_id"))
-          .agg(max(col("w")).as("w"), sum(col("n_changes")).as("n_changes"))
-          .where(col("w.op") === "U")
-          .select(col("user_id"),
-                  expr("timestamp_micros(w.ts_micros)").as("last_ts"),
-                  col("w.event_id").cast(LongType).as("last_event_id"),
-                  col("w.cents").cast(LongType).as("last_cents"),
-                  col("n_changes").cast(LongType).as("n_changes"))
-          .localCheckpoint(eager = true)
+          }))
+        upsertSnapshot(spark, gate.sink)
       },
       Some(CdcOracleSql)
     ),
@@ -3062,42 +2702,24 @@ object StreamingQueries {
     QueryDef(
       "q_streaming_foreach_retry",
       (spark, dir) => withStreamParts(spark) {
-        val changes = Tables.events(spark, dir)
-          .select(col("user_id"),
-                  expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
-                  col("event_id"),
-                  when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
-                  expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
+        val changes = cdcChanges(spark, dir)
         // identical feed to the CDC legs — shares their landing via the cache
         val land = landBands(withHashBand(changes, col("event_id"), 4), 4, "stream_land_cdc", dir)
-        val id = runId.incrementAndGet()
-        val tableDir = StorageQueries.target(s"stream_foreach_retry_$id")
-        val ckpt = StorageQueries.target(s"stream_foreach_retry_ckpt_$id")
-        val plantMsg = s"planted first-delivery failure on batch 1 (run $id)"
-        val marker = new java.io.File(StorageQueries.target(s"stream_foreach_retry_marker_$id"))
-        def runLifecycle(): Option[Throwable] = {
-          val src = spark.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", "1").parquet(land)
-          val q = src.writeStream
-            .option("checkpointLocation", ckpt)
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              val reduced = batch
-                .groupBy(col("user_id"))
-                .agg(max(struct(col("ts_micros"), col("event_id"), col("op"), col("cents"))).as("w"),
-                     count(lit(1)).as("n_changes"))
-              // sink write FIRST, then the planted crash — the data is
-              // visible but the batch never commits
-              reduced.write.mode("overwrite").parquet(s"$tableDir/batch=$batchId")
-              if (batchId == 1L && !marker.exists()) {
-                require(marker.createNewFile(), s"cannot create $marker")
-                throw new RuntimeException(plantMsg)
-              }
-              ()
-            }
-            .trigger(Trigger.AvailableNow()).start()
-          try { q.processAllAvailable(); q.awaitTermination(); None }
+        val gate = new StreamGate("foreach_retry")
+        val plantMsg = s"planted first-delivery failure on batch 1 (run ${gate.id})"
+        val marker = new java.io.File(gate.dir("marker"))
+        val landing = StreamGate.Raw("append", (batch: DataFrame, batchId: Long) => {
+          // sink write FIRST, then the planted crash — the data is
+          // visible but the batch never commits
+          lwwReduce(batch).write.mode("overwrite").parquet(s"${gate.sink}/batch=$batchId")
+          if (batchId == 1L && !marker.exists()) {
+            require(marker.createNewFile(), s"cannot create $marker")
+            throw new RuntimeException(plantMsg)
+          }
+        })
+        def runLifecycle(): Option[Throwable] =
+          try { gate.run(StreamGate.source(spark, changes.schema, land, 1), landing); None }
           catch { case e: Throwable => Some(e) }
-        }
         val first = runLifecycle()
         def chain(t: Throwable): Seq[Throwable] =
           Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
@@ -3113,77 +2735,28 @@ object StreamingQueries {
         require(second.isEmpty,
           s"the restarted lifecycle must absorb the redelivered batch and " +
           s"complete cleanly; it failed with ${second.map(_.toString).getOrElse("?")}")
-        spark.read.parquet(tableDir)
-          .groupBy(col("user_id"))
-          .agg(max(col("w")).as("w"), sum(col("n_changes")).as("n_changes"))
-          .where(col("w.op") === "U")
-          .select(col("user_id"),
-                  expr("timestamp_micros(w.ts_micros)").as("last_ts"),
-                  col("w.event_id").cast(LongType).as("last_event_id"),
-                  col("w.cents").cast(LongType).as("last_cents"),
-                  col("n_changes").cast(LongType).as("n_changes"))
-          .localCheckpoint(eager = true)
+        upsertSnapshot(spark, gate.sink)
       },
       Some(CdcOracleSql)
     )
   )
 
-  /** Shared body of the CDC snapshot queries (see their QueryDefs): events
-    * changelog → four hash-banded file micro-batches → per-key LWW
-    * `mapGroupsWithState` → latest update-mode emission per key. The
-    * landing is shared by ALL CDC legs (one dir per input dir — the feed
-    * is identical, so per-tag copies were pure harness cost). With
-    * `restart = true` the four bands arrive across TWO query lifecycles
-    * (bands 0–1, stop, bands 2–3 resumed from the same checkpoint) — the
-    * state restore contract on whatever backend the caller scoped.
+  /** The events table as a CDC changelog — the one feed every CDC leg
+    * lands (as `stream_land_cdc`, shared through the land-once cache).
     */
-  private def cdcSnapshotRun(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, tag: String,
-                             restart: Boolean = false,
-                             inspectCkpt: String => Unit = _ => (),
-                             stateOp: org.apache.spark.sql.Dataset[Streaming.CdcChange] =>
-                               org.apache.spark.sql.Dataset[Streaming.CdcEmit] = Streaming.cdcState)
-      : DataFrame = withStreamParts(spark) {
-    import spark.implicits._
-    val changes = Tables.events(spark, dir)
+  private def cdcChanges(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
       .select(col("user_id"),
               expr("unix_micros(CAST(ts AS TIMESTAMP))").as("ts_micros"),
               col("event_id"),
               when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
               expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
-    val land = landBands(withHashBand(changes, col("event_id"), 4), 4, "stream_land_cdc", dir)
-    val id = runId.incrementAndGet()
-    // update-mode emissions landed via foreachBatch into batchId-keyed
-    // dirs (idempotent overwrite per batch — the q_streaming_foreach_upsert
-    // contract); the readback selects the latest emission per key by its
-    // monotone n_changes, exactly as the memory-sink readback did, but the
-    // emissions live in files, never on the driver
-    val emitDir = StorageQueries.target(s"stream_${tag}_emit_$id")
-    val ckpt = StorageQueries.target(s"stream_${tag}_ckpt_$id")
-    def runOnce(srcDir: String): Unit = {
-      val src = spark.readStream.schema(changes.schema)
-      // 3 files/trigger (round-13): the LWW fold is order- and
-      // batch-boundary-insensitive, so batch count is pure lifecycle
-      // cost; the restart legs still split at lifecycle grain
-        .option("maxFilesPerTrigger", "3").parquet(srcDir)
-        .as[Streaming.CdcChange]
-      val q = stateOp(src).toDF()
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$emitDir/batch=$batchId")
-          ()
-        }
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.processAllAvailable(); q.awaitTermination(); unloadStateStores()
-    }
-    if (restart) {
-      val arrival = new java.io.File(StorageQueries.target(s"stream_${tag}_arrival_$id"))
-      require(arrival.mkdirs() || arrival.isDirectory, s"cannot create $arrival")
-      arriveBands(land, arrival, 0 to 1); runOnce(arrival.getAbsolutePath)
-      arriveBands(land, arrival, 2 to 3); runOnce(arrival.getAbsolutePath)
-    } else runOnce(land)
-    inspectCkpt(ckpt)
+
+  /** The CDC snapshot from update-mode LWW emissions under `emitDir`
+    * (`batch=<id>` dirs): each key's latest emission, selected by its
+    * monotone n_changes, kept when it is an upsert.
+    */
+  private def latestCdcSnapshot(spark: SparkSession, emitDir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("n_changes").desc)
     spark.read.parquet(emitDir)
       .withColumn("rn", row_number().over(w))
@@ -3194,6 +2767,81 @@ object StreamingQueries {
               col("cents").cast(LongType).as("last_cents"),
               col("n_changes").cast(LongType).as("n_changes"))
       .localCheckpoint(eager = true)
+  }
+
+  /** One micro-batch of [[cdcChanges]] LWW-reduced by itself (a hash-agg
+    * argmax per key) — the sink-side upsert legs' per-batch write.
+    */
+  private def lwwReduce(batch: DataFrame): DataFrame =
+    batch
+      .groupBy(col("user_id"))
+      .agg(max(struct(col("ts_micros"), col("event_id"), col("op"), col("cents"))).as("w"),
+           count(lit(1)).as("n_changes"))
+
+  /** The CDC snapshot from [[lwwReduce]]'s per-batch dirs: argmax across
+    * batches (argmax is associative), n_changes summed, upserts kept.
+    */
+  private def upsertSnapshot(spark: SparkSession, tableDir: String): DataFrame =
+    spark.read.parquet(tableDir)
+      .groupBy(col("user_id"))
+      .agg(max(col("w")).as("w"), sum(col("n_changes")).as("n_changes"))
+      .where(col("w.op") === "U")
+      .select(col("user_id"),
+              expr("timestamp_micros(w.ts_micros)").as("last_ts"),
+              col("w.event_id").cast(LongType).as("last_event_id"),
+              col("w.cents").cast(LongType).as("last_cents"),
+              col("n_changes").cast(LongType).as("n_changes"))
+      .localCheckpoint(eager = true)
+
+  /** The keyed running aggregate the state-reader gates checkpoint: per
+    * event_type count, cents sum and max event id.
+    */
+  private def keyedCentsRollup(src: DataFrame): DataFrame =
+    src
+      .withColumn("cents", expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+           sum(col("cents")).as("total_cents"),
+           max(col("event_id")).as("max_event_id"))
+
+  /** Update-mode landing that only forces each batch: for the state-reader
+    * gates, whose product under test is the checkpoint, not the sink.
+    */
+  private val CountAndDiscard =
+    StreamGate.Raw("update", (b: DataFrame, _: Long) => { b.count(); () })
+
+  /** Shared body of the CDC snapshot queries (see their QueryDefs): events
+    * changelog → four hash-banded file micro-batches → per-key LWW
+    * `mapGroupsWithState` → latest update-mode emission per key. The
+    * landing is shared by ALL CDC legs (one dir per input dir — the feed
+    * is identical, so per-tag copies were pure harness cost). With
+    * `restart = true` the four bands arrive across TWO query lifecycles
+    * (bands 0–1, stop, bands 2–3 resumed from the same checkpoint) — the
+    * state restore contract on whatever backend the caller scoped.
+    */
+  private def cdcSnapshotRun(spark: SparkSession,
+                             dir: String, tag: String,
+                             restart: Boolean = false,
+                             inspectCkpt: String => Unit = _ => (),
+                             stateOp: org.apache.spark.sql.Dataset[Streaming.CdcChange] =>
+                               org.apache.spark.sql.Dataset[Streaming.CdcEmit] = Streaming.cdcState)
+      : DataFrame = withStreamParts(spark) {
+    import spark.implicits._
+    val changes = cdcChanges(spark, dir)
+    val land = landBands(withHashBand(changes, col("event_id"), 4), 4, "stream_land_cdc", dir)
+    val gate = new StreamGate(tag)
+    // 3 files/trigger: the LWW fold is order- and
+    // batch-boundary-insensitive, so batch count is pure lifecycle
+    // cost; the restart legs still split at lifecycle grain
+    def runOnce(srcDir: String): Unit = gate.run(stateOp(
+      StreamGate.source(spark, changes.schema, srcDir, 3).as[Streaming.CdcChange]).toDF(),
+      StreamGate.Update): Unit
+    if (restart) {
+      arriveBands(land, gate.arrival, 0 to 1); runOnce(gate.arrival)
+      arriveBands(land, gate.arrival, 2 to 3); runOnce(gate.arrival)
+    } else runOnce(land)
+    inspectCkpt(gate.ckpt)
+    latestCdcSnapshot(spark, gate.sink)
   }
 
   /** Checkpoint-tree evidence for the changelog gate: the state dir's

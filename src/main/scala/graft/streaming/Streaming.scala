@@ -93,7 +93,7 @@ object Streaming {
     * gap exceeds [[SessionGapMs]]; with `flushOnTimeout` (production
     * setting) open sessions also flush after a processing-time timeout so
     * silent users' sessions close. Tests pass `flushOnTimeout = false`:
-    * with a timeout registered, `AvailableNow`+`processAllAvailable` keeps
+    * with a timeout registered, an `AvailableNow` lifecycle keeps
     * scheduling wake-up batches and never quiesces.
     */
   def sessionize(events: Dataset[Event], flushOnTimeout: Boolean = true): Dataset[Session] = {
