@@ -485,8 +485,8 @@ object PipelineQueries {
     // chunk, or a mangled shard byte anywhere mismatches. Scale shape:
     // filter map-only; clustering the iterated frontier; tokenizer work
     // vocabulary-grain with a constant-size artifact; packing two
-    // bounded windows + a broadcast; the export one explicit repartition
-    // then streamed per-task shards.
+    // bounded windows + a broadcast; the export through
+    // [[StorageQueries.ShardExport]].
     QueryDef(
       "q_export_pipeline",
       (spark, dir) => {
@@ -551,52 +551,31 @@ object PipelineQueries {
         // sequence to the independently-derived count
         import graft.sources.{TfExample, TfRecord}
         import TfExample.{BytesList, Int64List}
-        val tgt = StorageQueries.target("export_shards")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tgt))
-        val nShards = 8
         val rows = packed.join(kept.select(col("doc_id"), col("text")), "doc_id")
           .join(docIds, "doc_id")
           .select(col("doc_id"), col("source"), col("chunk"), col("n_tokens"),
                   col("text"), col("ids"))
-        val shardStats = StorageQueries.shardBy(rows, nShards, col("doc_id"))
-          .mapPartitions { it =>
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
-            val dst = java.nio.file.Paths.get(tgt, f"shard-$pid%05d.tfrecord")
-            val tmp = java.nio.file.Paths.get(tgt, f"_tmp-exp-$pid%05d-$attempt")
-            val out = new java.io.BufferedOutputStream(
-              java.nio.file.Files.newOutputStream(tmp))
-            var n = 0L
-            try {
-              it.foreach { row =>
-                val payload = TfExample.encode(Seq(
-                  "doc_id"    -> Int64List(Vector(row.getLong(0))),
-                  "source"    -> BytesList(Vector(
-                    row.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))),
-                  "chunk"     -> Int64List(Vector(row.getLong(2))),
-                  "n_tokens"  -> Int64List(Vector(row.getLong(3))),
-                  "text"      -> BytesList(Vector(
-                    row.getString(4).getBytes(java.nio.charset.StandardCharsets.UTF_8))),
-                  "input_ids" -> Int64List(row.getSeq[Long](5).toVector)))
-                TfRecord.writeRecord(out, payload)
-                n += 1
-              }
-            } finally out.close()
-            java.nio.file.Files.move(tmp, dst,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            Iterator.single((pid, n))
+        val landed = StorageQueries.ShardExport(rows, "export_shards", 8, col("doc_id"),
+            ".tfrecord") { (out, it) =>
+          var n = 0L
+          it.foreach { row =>
+            val payload = TfExample.encode(Seq(
+              "doc_id"    -> Int64List(Vector(row.getLong(0))),
+              "source"    -> BytesList(Vector(
+                row.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))),
+              "chunk"     -> Int64List(Vector(row.getLong(2))),
+              "n_tokens"  -> Int64List(Vector(row.getLong(3))),
+              "text"      -> BytesList(Vector(
+                row.getString(4).getBytes(java.nio.charset.StandardCharsets.UTF_8))),
+              "input_ids" -> Int64List(row.getSeq[Long](5).toVector)))
+            TfRecord.writeRecord(out, payload)
+            n += 1
           }
-        val layout = shardStats.toDF("shard", "n_records")
-          .agg(countDistinct(col("shard")).cast("long"),
-               sum(col("n_records")).cast("long")).first()
-        require(layout.getLong(0) == nShards,
-          s"expected $nShards export shards, saw ${layout.getLong(0)} writer tasks")
-        require(layout.getLong(1) == nKept,
-          s"shards carry ${layout.getLong(1)} examples for $nKept curated docs")
-        val decoded = spark.read.format("binaryFile")
-          .option("pathGlobFilter", "shard-*.tfrecord").load(tgt)
-          .select(col("content")).as[Array[Byte]]
+          n
+        }
+        require(landed.records == nKept,
+          s"shards carry ${landed.records} examples for $nKept curated docs")
+        val decoded = landed.shards
           .flatMap { shard =>
             TfRecord.readAll(shard).iterator.map { payload =>
               val byName = TfExample.decode(payload).toMap
@@ -678,8 +657,8 @@ object PipelineQueries {
     // one reordered token, one drifted merge anywhere mismatches. Scale
     // shape: tokenizer + vocab work is vocabulary-grain (wids rides a
     // broadcast); the flatten is one token-grain explode + one doc-grain
-    // groupBy; the export is one explicit repartition then streamed
-    // per-task shards — no driver-side row movement at any width.
+    // groupBy; the export goes through [[StorageQueries.ShardExport]] —
+    // no driver-side row movement at any width.
     QueryDef(
       "q_tokenized_shards",
       (spark, dir) => {
@@ -704,42 +683,21 @@ object PipelineQueries {
           s"${nKept - nDocIds} curated docs tokenize to nothing — they cannot be exported")
         import graft.sources.{TfExample, TfRecord}
         import TfExample.Int64List
-        val tgt = StorageQueries.target("tokenized_shards")
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(tgt))
-        val nShards = 8
-        val shardStats = StorageQueries.shardBy(docIds, nShards, col("doc_id"))
-          .mapPartitions { it =>
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
-            val dst = java.nio.file.Paths.get(tgt, f"shard-$pid%05d.tfrecord")
-            val tmp = java.nio.file.Paths.get(tgt, f"_tmp-tok-$pid%05d-$attempt")
-            val out = new java.io.BufferedOutputStream(
-              java.nio.file.Files.newOutputStream(tmp))
-            var n = 0L
-            try {
-              it.foreach { row =>
-                val payload = TfExample.encode(Seq(
-                  "doc_id"    -> Int64List(Vector(row.getLong(0))),
-                  "input_ids" -> Int64List(row.getSeq[Long](1).toVector)))
-                TfRecord.writeRecord(out, payload)
-                n += 1
-              }
-            } finally out.close()
-            java.nio.file.Files.move(tmp, dst,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            Iterator.single((pid, n))
+        val landed = StorageQueries.ShardExport(docIds, "tokenized_shards", 8, col("doc_id"),
+            ".tfrecord") { (out, it) =>
+          var n = 0L
+          it.foreach { row =>
+            val payload = TfExample.encode(Seq(
+              "doc_id"    -> Int64List(Vector(row.getLong(0))),
+              "input_ids" -> Int64List(row.getSeq[Long](1).toVector)))
+            TfRecord.writeRecord(out, payload)
+            n += 1
           }
-        val layout = shardStats.toDF("shard", "n_records")
-          .agg(countDistinct(col("shard")).cast("long"),
-               sum(col("n_records")).cast("long")).first()
-        require(layout.getLong(0) == nShards,
-          s"expected $nShards token shards, saw ${layout.getLong(0)} writer tasks")
-        require(layout.getLong(1) == nKept,
-          s"shards carry ${layout.getLong(1)} examples for $nKept curated docs")
-        val decoded = spark.read.format("binaryFile")
-          .option("pathGlobFilter", "shard-*.tfrecord").load(tgt)
-          .select(col("content")).as[Array[Byte]]
+          n
+        }
+        require(landed.records == nKept,
+          s"shards carry ${landed.records} examples for $nKept curated docs")
+        val decoded = landed.shards
           .flatMap { shard =>
             TfRecord.readAll(shard).iterator.map { payload =>
               val strict = TfExample.decode(payload)

@@ -84,8 +84,7 @@ object StreamingQueries {
         new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == cacheKey &&
         (0 until n).forall(i => new java.io.File(root, f"b$i%04d.parquet").isFile))
       return dir
-    def rm(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit }
-    rm(root); root.mkdirs()
+    StorageQueries.deleteRecursively(root); root.mkdirs()
     val tmp = StorageQueries.target(name + "_tmp")
     val banded = df.persist()
     try {

@@ -66,13 +66,13 @@ object ArrowIpc {
   private def utf8(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
-  /** Stream `rows` into one Arrow IPC file at `path` in [[BatchRows]]
-    * batches. Returns the row count. The caller owns atomic-rename
-    * placement (same temp + ATOMIC_MOVE discipline as the TFRecord
-    * shard writers).
+  /** Stream `rows` into `out` as one Arrow IPC file in [[BatchRows]]
+    * batches, closing `out` when done. Returns the row count. Temp-file
+    * and atomic-rename placement belong to the caller: the export gates
+    * write through [[graft.queries.StorageQueries.ShardExport]].
     */
-  def writeFile(path: java.nio.file.Path, rows: Iterator[DocRow]): Long =
-    writeWith(path, rows, new ArrowFileWriter(_, null, _))
+  def writeFile(out: java.io.OutputStream, rows: Iterator[DocRow]): Long =
+    writeWith(out, rows, new ArrowFileWriter(_, null, _))
 
   /** Same export through the Arrow IPC *stream* format
     * ([[ArrowStreamWriter]]): schema message, record batches, EOS marker —
@@ -81,20 +81,17 @@ object ArrowIpc {
     * [[writeFile]]'s memory-map shape; both share the batch-population
     * loop, so the two formats carry identical content by construction.
     */
-  def writeStream(path: java.nio.file.Path, rows: Iterator[DocRow]): Long =
-    writeWith(path, rows, new ArrowStreamWriter(_, null, _))
+  def writeStream(out: java.io.OutputStream, rows: Iterator[DocRow]): Long =
+    writeWith(out, rows, new ArrowStreamWriter(_, null, _))
 
-  private def writeWith(path: java.nio.file.Path, rows: Iterator[DocRow],
+  private def writeWith(out: java.io.OutputStream, rows: Iterator[DocRow],
       mk: (VectorSchemaRoot, java.nio.channels.WritableByteChannel) =>
         org.apache.arrow.vector.ipc.ArrowWriter): Long = {
     val alloc = new RootAllocator(Long.MaxValue)
     try {
       val root = VectorSchemaRoot.create(schema, alloc)
       try {
-        val ch = java.nio.channels.FileChannel.open(path,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.TRUNCATE_EXISTING,
-          java.nio.file.StandardOpenOption.WRITE)
+        val ch = java.nio.channels.Channels.newChannel(out)
         try {
           val writer = mk(root, ch)
           try {

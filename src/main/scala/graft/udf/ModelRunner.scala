@@ -108,7 +108,7 @@ final class ModelRunner(models: Seq[Model]) {
               case Materialization.View =>
                 df.createOrReplaceTempView(m.name)
               case Materialization.Table =>
-                clearOrphanedLocation(spark, m.name)
+                ModelRunner.clearOrphanedLocation(spark, m.name)
                 withColumnComments(df, m.docs).write.mode("overwrite").saveAsTable(m.name)
                 m.docs.description.foreach { d =>
                   spark.sql(s"COMMENT ON TABLE ${m.name} IS '${Materializer.escape(d)}'")
@@ -155,23 +155,6 @@ final class ModelRunner(models: Seq[Model]) {
     m => changed.contains(m.name)
   }
 
-  /** A Table model is create-or-replace, but `saveAsTable` refuses to create
-    * a table whose default location is a non-empty directory
-    * (`LOCATION_ALREADY_EXISTS`). An earlier process leaves exactly that when
-    * its catalog (in-memory by default) is gone but the warehouse kept the
-    * table's files. So when the catalog knows no table at `name`, whatever
-    * sits at that table's own default location is an orphan, and is removed.
-    */
-  private def clearOrphanedLocation(spark: SparkSession, name: String): Unit = {
-    val catalog = CatalogBridge.catalog(spark)
-    val ident = CatalystSqlParser.parseTableIdentifier(name)
-    if (!catalog.tableExists(ident)) {
-      val dir = new Path(catalog.defaultTablePath(ident))
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(dir)) fs.delete(dir, true)
-    }
-  }
-
   /** Attach column comments to the schema before `saveAsTable` so
     * `DESCRIBE` shows them (the Spark form of dbt's `persist_docs:
     * {columns: true}` — BigQuery needed inline DDL OPTIONS because
@@ -192,4 +175,24 @@ final class ModelRunner(models: Seq[Model]) {
         }
       }: _*)
     }
+}
+
+object ModelRunner {
+
+  /** A Table model is create-or-replace, but `saveAsTable` refuses to create
+    * a table whose default location is a non-empty directory
+    * (`LOCATION_ALREADY_EXISTS`). An earlier process leaves exactly that when
+    * its catalog (in-memory by default) is gone but the warehouse kept the
+    * table's files. So when the catalog knows no table at `name`, whatever
+    * sits at that table's own default location is an orphan, and is removed.
+    */
+  private[graft] def clearOrphanedLocation(spark: SparkSession, name: String): Unit = {
+    val catalog = CatalogBridge.catalog(spark)
+    val ident = CatalystSqlParser.parseTableIdentifier(name)
+    if (!catalog.tableExists(ident)) {
+      val dir = new Path(catalog.defaultTablePath(ident))
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(dir)) fs.delete(dir, true)
+    }
+  }
 }

@@ -18,12 +18,10 @@ class ArrowIpcSpec extends AnyFunSuite {
     java.nio.file.Files.createTempFile("arrow_spec_", ".arrow")
 
   private def writeBytes(rows: Seq[DocRow]): Array[Byte] = {
-    val p = tmpFile()
-    try {
-      val n = ArrowIpc.writeFile(p, rows.iterator)
-      assert(n == rows.length)
-      java.nio.file.Files.readAllBytes(p)
-    } finally java.nio.file.Files.delete(p)
+    val out = new java.io.ByteArrayOutputStream()
+    val n = ArrowIpc.writeFile(out, rows.iterator)
+    assert(n == rows.length)
+    out.toByteArray
   }
 
   private val rnd = new scala.util.Random(0xa2203)
@@ -87,12 +85,10 @@ class ArrowIpcSpec extends AnyFunSuite {
   }
 
   private def writeStreamBytes(rows: Seq[DocRow]): Array[Byte] = {
-    val p = tmpFile()
-    try {
-      val n = ArrowIpc.writeStream(p, rows.iterator)
-      assert(n == rows.length)
-      java.nio.file.Files.readAllBytes(p)
-    } finally java.nio.file.Files.delete(p)
+    val out = new java.io.ByteArrayOutputStream()
+    val n = ArrowIpc.writeStream(out, rows.iterator)
+    assert(n == rows.length)
+    out.toByteArray
   }
 
   test("stream format: round-trip incl. nulls/empty/multi-batch; identical content to file format") {
