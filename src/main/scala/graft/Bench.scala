@@ -1,5 +1,52 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, struct}
+
+/** The query-run steps the dev mains share: Bench and tools.ScaleStress time
+  * queries with [[evaluate]], and Bench, Verify and tools.ScaleStress read
+  * their `*_ONLY` subset filters with [[subset]].
+  */
+private[graft] object Harness {
+
+  /** One forced evaluation: wall seconds of build + evaluation, the row
+    * count, and the xor of the per-row hashes (0, the xor identity, for an
+    * empty result).
+    */
+  final case class Evaluation(seconds: Double, rows: Long, hash: Long)
+
+  /** Clear cache → build → `count(*)` and `bit_xor(xxhash64(struct(*)))`
+    * over ALL output columns → clear cache. The hash is what forces every
+    * projection: a bare `.count()` lets Spark prune each one the count does
+    * not need, timing a different (cheaper) plan. The cache is cleared after
+    * a throw too, so a failed query's persisted intermediates cannot bleed
+    * into the next one.
+    */
+  def evaluate(spark: SparkSession)(build: => DataFrame): Evaluation = {
+    spark.catalog.clearCache()
+    try {
+      val t0 = System.nanoTime()
+      val df = build
+      val r = df.select(struct(df.columns.map(col).toIndexedSeq: _*).as("s"))
+        .selectExpr("count(*) AS n", "bit_xor(xxhash64(s)) AS h")
+        .head()
+      Evaluation((System.nanoTime() - t0) / 1e9, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    } finally spark.catalog.clearCache()
+  }
+
+  /** A dev-only `*_ONLY` subset filter: the comma-separated names in `value`,
+    * or None (no filter) when it is unset. Blank entries are ignored, so an
+    * empty or all-blank value cannot silently filter out everything, and an
+    * active filter is announced on stderr under `[tag]` so a partial run is
+    * visible.
+    */
+  def subset(value: Option[String], tag: String): Option[Set[String]] = {
+    val only = value.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+    only.foreach { f =>
+      System.err.println(s"[$tag] subset filter is set — PARTIAL run over: ${f.toSeq.sorted.mkString(", ")}")
+    }
+    only
+  }
+}
 
 /** Benchmark main: per-query seconds at SPARK_GRAFT_SF_DIR.
   *
@@ -21,9 +68,8 @@ import org.apache.spark.sql.SparkSession
   *     AFTER (so query N's leftover cache/GC pressure can't bleed into
   *     query N+1) — the r1/r2 numbers swung up to 60× on identical code
   *     from exactly that interference;
-  *   - forced evaluation is `count + sum(xxhash64(struct(*)))` over ALL
-  *     output columns — a bare `.count()` lets Spark prune every projection
-  *     the count doesn't need, timing a different (cheaper) plan;
+  *   - forced evaluation is [[Harness.evaluate]]: `count(*)` and
+  *     `bit_xor(xxhash64(struct(*)))` over ALL output columns;
   *   - up to `reps` repetitions (default 3; heavyweight composite queries are
   *     capped at 2 — their rep-to-rep variance is dominated by fixed setup
   *     such as streaming state-store init and CC sweep scheduling, so the
@@ -40,7 +86,10 @@ import org.apache.spark.sql.SparkSession
   *     killed by it ("budget_exhausted":true flags the trim in the artifact);
   *   - a rep that throws scores -1 and its query is named with the cause
   *     in the final detail line's "failed" map (and tools/bench_last.json);
-  *     after the final emission the run exits 1 if any query failed.
+  *     after the final emission the run exits 1 if any query failed;
+  *   - each query's first successful (rows, hash) is kept, and a later rep
+  *     that differs names the query in the final detail line's "drift"
+  *     list (report-only: the exit code does not change).
   *
   * Re-check one suspicious query without a full run:
   *   SPARK_GRAFT_BENCH_ONLY=q_price_moments sbt "runMain graft.Bench"
@@ -102,37 +151,24 @@ object Bench {
     // flag documents it, and that is the honest treatment.
     // name → cause of the last failed rep, for the final artifact
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val t =
-        try {
-          val df = fn(spark, sfDir)
-          df.select(org.apache.spark.sql.functions.struct(
-              df.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*).as("s"))
-            .selectExpr("count(*) AS n", "bit_xor(xxhash64(s)) AS h")
-            .collect()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] query failed: ${e.getMessage}")
-          failures(name) = e.toString
-          -1.0
-        }
-      spark.catalog.clearCache()
-      t
-    }
+    // name → (rows, hash) of its first successful rep; a later rep that
+    // differs puts the query in `drift`
+    val firstResult = scala.collection.mutable.Map.empty[String, (Long, Long)]
+    val drift = scala.collection.mutable.Set.empty[String]
+    def once(name: String, fn: (SparkSession, String) => DataFrame): Double =
+      try {
+        val e = Harness.evaluate(spark)(fn(spark, sfDir))
+        val result = (e.rows, e.hash)
+        if (firstResult.getOrElseUpdate(name, result) != result) drift += name
+        e.seconds
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] query failed: ${e.getMessage}")
+        failures(name) = e.toString
+        -1.0
+      }
 
-    // dev-only subset filter (comma-separated names); driver leaves it
-    // unset. Blank entries are ignored (an empty-string env var must not
-    // silently filter out everything), and an active filter is announced on
-    // stderr so a partial bench run is visible.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { f =>
-      System.err.println(
-        s"[bench] SPARK_GRAFT_BENCH_ONLY is set — PARTIAL run over: ${f.toSeq.sorted.mkString(", ")}")
-    }
+    // dev-only subset filter (comma-separated names); driver leaves it unset
+    val only = Harness.subset(sys.env.get("SPARK_GRAFT_BENCH_ONLY"), "bench")
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     def repsFor(name: String): Int =
@@ -183,11 +219,14 @@ object Bench {
       val noisyList =
         if (partial) ""
         else "\"noisy\":" + noisy.map("\"" + _ + "\"").mkString("[", ",", "]") + ","
+      val driftList =
+        if (partial) ""
+        else "\"drift\":" + done.filter(drift).map("\"" + _ + "\"").mkString("[", ",", "]") + ","
       val failedMap = if (partial) "" else "\"failed\":" + Verify.failuresJson(failures) + ","
       // failures keep their -1 marker per query but must not shrink the total
       val total = results.map(_._2).filter(_ >= 0).sum
       val detailLine =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$repArrays$noisyList$failedMap"sf":"$sfDir","partial":$partial,"elapsed_sec":${"%.1f".format(elapsed)},"budget_exhausted":$budgetExhausted}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$repArrays$noisyList$driftList$failedMap"sf":"$sfDir","partial":$partial,"elapsed_sec":${"%.1f".format(elapsed)},"budget_exhausted":$budgetExhausted}"""
       println(detailLine)
       if (!partial) {
         // the driver-parseable artifact: keep this line SMALL (no per-query

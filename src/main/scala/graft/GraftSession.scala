@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * applies it once; [[SparkEntry]] applies it again before each query build
   * and before `entry`, so a session built elsewhere gets the same policy.
   * Query builds never set it themselves. `SPARK_GRAFT_CPUS` is read only by
-  * [[cpus]].
+  * [[cpus]], which sizes every main's session.
   */
 object GraftSession {
 

@@ -25,16 +25,8 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
-    // dev-only subset filter (comma-separated names), mirroring
-    // SPARK_GRAFT_BENCH_ONLY; the driver leaves it unset. Blank entries are
-    // ignored and an active filter is announced so a partial dump is visible.
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { f =>
-      System.err.println(
-        s"[verify] SPARK_GRAFT_VERIFY_ONLY is set — PARTIAL dump over: ${f.toSeq.sorted.mkString(", ")}")
-    }
+    // dev-only subset filter (comma-separated names); driver leaves it unset
+    val only = Harness.subset(sys.env.get("SPARK_GRAFT_VERIFY_ONLY"), "verify")
     // every query that throws is named with its cause in failures.json
     // (`{}` when none did) and on stderr, and the run then exits 1
     val failed = SparkEntry.queries.toSeq

@@ -1,49 +1,28 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry, Tables}
+import graft.{GraftSession, Harness, SparkEntry, Verify}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Scale-stress rig: measures how the dedup/ANN/text paths' wall time grows
   * when the input corpus grows `factor`×, turning the "survives a scale-up"
-  * plan arguments into a measurement.
-  *
-  * A scaled corpus is SYNTHESIZED from the base tables (never written to
-  * /root/testdata) rather than naively duplicated, because duplication
-  * would measure the wrong thing:
-  *
-  *   - embeddings are circularly rotated per replica (rotation preserves
-  *     the norm and the coordinate distribution, but rotated vectors land
-  *     in different LSH buckets) — exact copies would multiply every band
-  *     bucket by `factor` and grow candidate PAIRS by `factor`², a data
-  *     artifact, not an engine property;
-  *   - document texts get a per-replica deterministic token shuffle
-  *     (sort key = hash of token:position:replica). A near-identical pair
-  *     inside one replica shuffles the same way (same tokens, same
-  *     positions), so within-replica duplicate groups survive; across
-  *     replicas almost every k-shingle is destroyed, so replicas are NOT
-  *     near-dups of each other and the global near-dup pair count scales
-  *     linearly. (A plain suffix token is NOT enough: it changes only ~k
-  *     shingles, MinHash bands still collide across replicas, and pair
-  *     volume — and any per-pair verification — grows quadratically with
-  *     the factor; the first rig run caught exactly that as a 24×
-  *     ngram-jaccard blowup at ×10.);
-  *   - ids shift by `replica × 10⁷`, keeping the fixed ANN query set
-  *     (vec_id < 10) at constant size while the corpus scales — the shape
-  *     a production index has.
+  * plan arguments into a measurement. The scaled corpus is
+  * [[SynthCorpus.synthesize]]'s (see there why it is synthesized, not
+  * duplicated), written to `workDir`; each query is timed with
+  * [[graft.Harness.evaluate]], the bench's forced evaluation.
   *
   * Pass criterion per query: wall(scaled) ≤ wall(base) × factor × Slack.
   * Sub-linear results are common (fixed session/scan overhead dominates at
   * the base size); super-linear beyond the slack means a quadratic term
-  * crept into a path that claims to be linear.
+  * crept into a path that claims to be linear. A query that throws is named
+  * with its cause in the final line's "failed" map; the remaining queries
+  * are still graded, and the run then exits 1.
   *
   * Usage: runMain graft.tools.ScaleStress [baseDir] [factor] [workDir]
   * (defaults: /root/testdata/sf0.1, 10, /tmp/graft_scale_stress)
   */
 object ScaleStress {
 
-  /** Queries timed by the rig — only paths that read documents/embeddings
-    * (the two tables the rig synthesizes) and claim linear scaling. The
+  /** Queries timed by the rig — only paths that claim linear scaling. The
     * O(n²)-by-design `dedup_embedding_cosine` is deliberately absent, and
     * `dedup_ngram_jaccard` is graded separately (below): its jaccard-0.3
     * threshold forces r=2 banding, whose CANDIDATE volume grows ~n²·E[j²]
@@ -103,7 +82,7 @@ object ScaleStress {
     // one merged read; BFS levels scale linearly on the disjoint
     // key-shifted graph replicas (per-replica structure identical, and seed
     // count and every level's node count scale exactly ×factor because
-    // ckShift is rounded to a multiple of 97 — see the shift derivation)
+    // ckShift is rounded to a multiple of 97 — see SynthCorpus.synthesize)
     "media_wav_decode", "media_wav_downsample", "q_schema_evolution",
     "q_bfs_levels",
     // incremental materialization: two rollup scans + an aggregate-grain
@@ -429,18 +408,14 @@ object ScaleStress {
     // therefore recompute (and re-land) every stress rep, which is the
     // conservative direction for the ratio.
 
-  /** Candidate-normalized targets: (query, candidate counter). Pass iff
+  /** Candidate-normalized targets: (query, its candidate pairs, counted as
+    * the rows of one forced evaluation). Pass iff
     * scaled time-per-candidate ≤ base time-per-candidate × Slack — the
     * per-pair verification cost must not regress even when the pair volume
     * itself grows super-linearly by construction.
     */
-  val CandidateNormalized: Seq[(String, (SparkSession, String) => Long)] = Seq(
-    "dedup_ngram_jaccard" -> { (spark, dir) =>
-      spark.catalog.clearCache()
-      val n = graft.queries.DedupQueries.ngramStages(spark, dir)._2.count()
-      spark.catalog.clearCache()
-      n
-    })
+  val CandidateNormalized: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "dedup_ngram_jaccard" -> ((spark, dir) => graft.queries.DedupQueries.ngramStages(spark, dir)._2))
     // dedup_minhash_lsh sat here (candidate-normalized) in round 6 after
     // the ×100 run measured the 8×2 banding's candidate volume going
     // super-linear; the 16×8 wide banding implements the fix that log
@@ -448,187 +423,20 @@ object ScaleStress {
 
   val Slack: Double = 1.5
 
-  def synthesize(spark: SparkSession, baseDir: String, factor: Int, outDir: String): Unit = {
-    val reps = explode(sequence(lit(0), lit(factor - 1))).as("rep")
-    val idShift = 10000000L
-
-    // deterministic per-replica token shuffle (see class doc): stable on
-    // near-identical texts within a replica, shingle-destroying across
-    val shuffled = expr(
-      """array_join(
-        |  transform(
-        |    array_sort(
-        |      transform(split(text, '\\s+'),
-        |                (t, i) -> named_struct(
-        |                  'k', xxhash64(concat(t, ':', CAST(i AS STRING), ':', CAST(rep AS STRING))),
-        |                  't', t))),
-        |    s -> s.t),
-        |  ' ')""".stripMargin)
-    val docs = Tables.documents(spark, baseDir)
-      .select(col("*"), reps)
-      // replica 0 keeps the base text byte-for-byte
-      .withColumn("text2", when(col("rep") === 0, col("text")).otherwise(shuffled))
-      .select(
-        (col("doc_id") + col("rep") * idShift).as("doc_id"),
-        col("text2").as("text"),
-        col("lang"), col("source"),
-        length(col("text2")).cast("long").as("n_chars"))
-    docs.repartition(32).write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-
-    val dim = graft.similarity.Vectors.Dim
-    val emb = Tables.embeddings(spark, baseDir)
-      .select(col("*"), reps)
-      .select(
-        (col("vec_id") + col("rep") * idShift).as("vec_id"),
-        // circular rotation by rep positions: norm-preserving, bucket-mixing
-        expr(s"transform(embedding, (x, i) -> element_at(embedding, CAST((i + rep) % $dim AS INT) + 1))")
-          .cast("array<float>").as("embedding"),
-        col("label"))
-    emb.repartition(32).write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-
-    // graph tables (q_pagerank / q_triangles): disjoint key-shifted replicas.
-    // Every key column shifts by rep × (max(key)+1), so replica subgraphs
-    // share no node — per-replica structure is byte-identical to the base
-    // and |edges|, |wedges|, |triangles| scale EXACTLY ×factor. A super-
-    // linear wall ratio on this corpus is therefore an engine property, not
-    // a data artifact (unlike naive duplication, which would multiply
-    // per-key join fan-out by factor²). Only the columns the graph queries
-    // read are materialized; Tables.load normalizes per-field, so narrow
-    // tables round-trip cleanly.
-    val ord = Tables.orders(spark, baseDir)
-      .select(col("o_orderkey").cast("long").as("o_orderkey"),
-              col("o_custkey").cast("long").as("o_custkey"),
-              col("o_orderpriority"), col("o_orderstatus"),
-              // q_zorder_layout's second dim: dates replicate unshifted
-              // (the custkey shift already makes replicas disjoint; zone
-              // maps just see `factor`× the rows per (custkey, day) cell);
-              // o_totalprice feeds q_order_stats' quantile machinery —
-              // replicated values keep per-group medians invariant while
-              // histogram counts scale exactly ×factor
-              col("o_orderdate"), col("o_totalprice"))
-    val li = Tables.lineitem(spark, baseDir)
-      .select(col("l_orderkey").cast("long").as("l_orderkey"),
-              col("l_suppkey").cast("long").as("l_suppkey"),
-              col("l_partkey").cast("long").as("l_partkey"),
-              // q_bucketed_join's rollup measure: replicates unshifted, so
-              // per-join-key sums are invariant per replica and totals
-              // scale exactly ×factor
-              col("l_quantity"),
-              // q_orc_pushdown's group key + cents measure: replicated
-              // unshifted like l_quantity (columnar — queries not reading
-              // them pay nothing)
-              col("l_returnflag"), col("l_extendedprice"))
-    val cust = Tables.customer(spark, baseDir)
-      .select(col("c_custkey").cast("long").as("c_custkey"),
-              col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"),
-              // q_aqe_broadcast_convert's wide kept column (replicates
-              // unshifted; per-replica MIN(c_name) is invariant)
-              col("c_name"))
-    val om = ord.agg(max("o_orderkey"), max("o_custkey")).head
-    val cm = cust.agg(max("c_custkey")).head
-    val lm = li.agg(max("l_suppkey"), max("l_partkey")).head
-    // ckShift spans BOTH custkey domains (q_validate_contracts' FK check
-    // joins orders to customer — the shift must keep replica key spaces
-    // disjoint on both sides so the relationship structure, and the
-    // violation count, is identical per replica) and is rounded up to a
-    // multiple of 97 so the BFS seed rule (custkey % 97 == 0) commutes
-    // with the replica shift: every replica then selects the same residue
-    // coset, making per-replica seed sets and level counts structurally
-    // identical to the base — the invariant the q_bfs_levels grading
-    // comment relies on
-    val ckMax = math.max(om.getLong(1), cm.getLong(0))
-    val (okShift, ckShift) = (om.getLong(0) + 1, ((ckMax + 1 + 96) / 97) * 97)
-    val (skShift, pkShift) = (lm.getLong(0) + 1, lm.getLong(1) + 1)
-    // q_pagerank keeps customer and supplier node-id spaces apart by a fixed
-    // 10^7 offset; shifted custkeys must stay below it
-    require(ckShift * factor < 10000000L,
-      s"custkey shift $ckShift × $factor collides with the supplier id space")
-    ord.select(col("*"), reps)
-      .select((col("o_orderkey") + col("rep") * okShift).as("o_orderkey"),
-              (col("o_custkey") + col("rep") * ckShift).as("o_custkey"),
-              col("o_orderpriority"), col("o_orderstatus"),
-              col("o_orderdate"), col("o_totalprice"))
-      .repartition(32).write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-    li.select(col("*"), reps)
-      .select((col("l_orderkey") + col("rep") * okShift).as("l_orderkey"),
-              (col("l_suppkey") + col("rep") * skShift).as("l_suppkey"),
-              (col("l_partkey") + col("rep") * pkShift).as("l_partkey"),
-              col("l_quantity"), col("l_returnflag"), col("l_extendedprice"))
-      .repartition(32).write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-
-    // customer replicas (q_validate_contracts' FK target and
-    // q_streaming_enrich's dimension): key shifts in lockstep with orders'
-    // o_custkey, non-key columns replicate
-    cust.select(col("*"), reps)
-      .select((col("c_custkey") + col("rep") * ckShift).as("c_custkey"),
-              col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"),
-              col("c_name"))
-      .repartition(32).write.mode("overwrite").parquet(s"$outDir/customer.parquet")
-
-    // events replicas for q_mad_outliers' two-round median: ids shift,
-    // (event_type, value) replicate — per-group medians and MADs are
-    // invariant under replication while histogram counts and outlier
-    // counts scale exactly ×factor
-    // user_id shifts per replica (disjoint key spaces — q_cdc_snapshot's
-    // per-user LWW argmax is invariant per replica, live-key count scales
-    // exactly ×factor); ts replicates unshifted (write order within a
-    // replica is the base order)
-    Tables.events(spark, baseDir)
-      .select(col("event_id").cast("long").as("event_id"),
-              col("user_id").cast("long").as("user_id"),
-              col("ts"), col("event_type"), col("value"), col("props"))
-      .select(col("*"), reps)
-      .select((col("event_id") + col("rep") * idShift).as("event_id"),
-              (col("user_id") + col("rep") * idShift).as("user_id"),
-              col("ts"), col("event_type"), col("value"),
-              // props rides verbatim per replica: the JSON/VARIANT parse
-              // cost under test is per-row, so replica-identical payloads
-              // scale it exactly linearly
-              col("props"))
-      .repartition(32).write.mode("overwrite").parquet(s"$outDir/events.parquet")
-  }
-
-  /** Forced evaluation identical to graft.Bench: count + xxhash over every
-    * output column, so column pruning cannot cheapen the timed plan.
-    */
-  private def timeOnce(spark: SparkSession, dir: String, name: String): Double = {
-    spark.catalog.clearCache()
-    val t0 = System.nanoTime()
-    val df = SparkEntry.queries(name)(spark, dir)
-    df.select(struct(df.columns.map(col).toIndexedSeq: _*).as("s"))
-      .selectExpr("count(*) AS n", "bit_xor(xxhash64(s)) AS h")
-      .collect()
-    val t = (System.nanoTime() - t0) / 1e9
-    spark.catalog.clearCache()
-    t
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val workDir = args.lift(2).getOrElse("/tmp/graft_scale_stress")
-    // big-factor runs shoulder heavy shuffles in one JVM: fewer threads
-    // lowers peak memory (and GC-pause) pressure without changing the
-    // base-vs-scaled comparison, which always runs inside one config
-    val threads = sys.env.getOrElse("SPARK_GRAFT_STRESS_THREADS", "32").toInt
-    val spark = GraftSession.local(threads = threads, appName = "scale-stress")
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, appName = "scale-stress")
 
-    synthesize(spark, baseDir, factor, workDir)
+    SynthCorpus.synthesize(spark, baseDir, factor, workDir)
     val nDocs = spark.read.parquet(s"$workDir/documents.parquet").count()
     val nVecs = spark.read.parquet(s"$workDir/embeddings.parquet").count()
     println(s"[scale-stress] base=$baseDir factor=$factor scaled: $nDocs docs, $nVecs vectors")
 
     // dev-only subset filter for re-measuring a suspicious target without
-    // a full run (same contract as SPARK_GRAFT_BENCH_ONLY: blank entries
-    // ignored, active filter announced so a partial run is visible)
-    val only = sys.env.get("SPARK_GRAFT_STRESS_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { f =>
-      System.err.println(
-        s"[scale-stress] SPARK_GRAFT_STRESS_ONLY is set — PARTIAL run over: ${f.toSeq.sorted.mkString(", ")}")
-    }
+    // a full run
+    val only = Harness.subset(sys.env.get("SPARK_GRAFT_STRESS_ONLY"), "scale-stress")
     val targets = Targets.filter(name => only.forall(_.contains(name)))
 
     // min of `reps` per (query, scale), measured REP-MAJOR across every
@@ -644,52 +452,62 @@ object ScaleStress {
       (targets ++ normTargets.map(_._1)).flatMap(n => Seq(n -> baseDir, n -> workDir))
     val times = scala.collection.mutable.LinkedHashMap(
       cells.map(c => c -> Vector.empty[Double]): _*)
+    // name → cause of its first throw; the query's remaining cells are
+    // skipped and it is not graded
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def attempt[A](name: String)(body: => A): Option[A] =
+      if (failures.contains(name)) None
+      else try Some(body) catch { case e: Throwable =>
+        System.err.println(s"[scale-stress] $name failed: ${e.getMessage}")
+        failures(name) = e.toString
+        None
+      }
     // evidence is STREAMED (the graft.Bench lesson): one line per completed
     // (cell, rep) measurement, so a run killed mid-flight — big-factor runs
     // are long and a 2-minute GC pause once took the whole JVM down — still
     // leaves every completed observation in the log
     val wall0 = System.nanoTime()
-    for (r <- 1 to reps; cell <- cells) {
-      val t = timeOnce(spark, cell._2, cell._1)
-      times(cell) = times(cell) :+ t
-      val side = if (cell._2 == baseDir) "base" else "scaled"
-      println(f"[scale-stress] rep $r/$reps ${cell._1}%-24s $side%-6s $t%8.3fs " +
+    for (r <- 1 to reps; (name, dir) <- cells;
+         t <- attempt(name)(Harness.evaluate(spark)(SparkEntry.queries(name)(spark, dir)).seconds)) {
+      times((name, dir)) = times((name, dir)) :+ t
+      val side = if (dir == baseDir) "base" else "scaled"
+      println(f"[scale-stress] rep $r/$reps $name%-24s $side%-6s $t%8.3fs " +
         f"(elapsed ${(System.nanoTime() - wall0) / 1e9}%.0fs)")
       System.out.flush()
     }
     def best(dir: String, name: String): Double = times((name, dir)).min
-    var allOk = true
-    val rows = targets.map { name =>
+    val rows = targets.filterNot(failures.contains).map { name =>
       val tBase = best(baseDir, name)
       val tScaled = best(workDir, name)
       val ratio = tScaled / tBase
       val ok = ratio <= factor * Slack
-      allOk &= ok
       println(f"[scale-stress] $name%-24s base=$tBase%8.3fs scaled=$tScaled%8.3fs ratio=$ratio%6.2fx " +
         (if (ok) "PASS" else f"FAIL (> ${factor * Slack}%.1fx)"))
-      s""""$name":{"base_sec":$tBase,"scaled_sec":$tScaled,"ratio":$ratio,"pass":$ok}"""
+      ok -> s""""$name":{"base_sec":$tBase,"scaled_sec":$tScaled,"ratio":$ratio,"pass":$ok}"""
     }
-    val normRows = normTargets
-      .map { case (name, countCands) =>
-        val candBase = countCands(spark, baseDir)
-        val candScaled = countCands(spark, workDir)
+    val normRows = normTargets.flatMap { case (name, candidates) =>
+      def count(dir: String): Option[Long] = attempt(name)(Harness.evaluate(spark)(candidates(spark, dir)).rows)
+      for (candBase <- count(baseDir); candScaled <- count(workDir)) yield {
         val tBase = best(baseDir, name)
         val tScaled = best(workDir, name)
         val perBase = tBase / candBase.toDouble
         val perScaled = tScaled / candScaled.toDouble
         val ok = perScaled <= perBase * Slack
-        allOk &= ok
         println(f"[scale-stress] $name%-24s base=$tBase%8.3fs/${candBase}%d cands " +
           f"scaled=$tScaled%8.3fs/${candScaled}%d cands " +
           f"per-cand ${perBase * 1e6}%8.2fus -> ${perScaled * 1e6}%8.2fus " +
           (if (ok) "PASS" else f"FAIL (per-cand > ${Slack}%.1fx)"))
-        s""""$name":{"base_sec":$tBase,"scaled_sec":$tScaled,"cands_base":$candBase,""" +
+        ok -> (s""""$name":{"base_sec":$tBase,"scaled_sec":$tScaled,"cands_base":$candBase,""" +
           s""""cands_scaled":$candScaled,"us_per_cand_base":${perBase * 1e6},""" +
-          s""""us_per_cand_scaled":${perScaled * 1e6},"pass":$ok}"""
+          s""""us_per_cand_scaled":${perScaled * 1e6},"pass":$ok}""")
       }
+    }
+    failures.foreach { case (name, cause) => println(s"[scale-stress] $name FAILED: $cause") }
+    val allOk = failures.isEmpty && (rows ++ normRows).forall(_._1)
     println(s"""{"metric":"scale_stress","factor":$factor,"slack":$Slack,"base":"$baseDir",""" +
       s""""docs":$nDocs,"vectors":$nVecs,"pass":$allOk,""" +
-      s""""queries":{${(rows ++ normRows).mkString(",")}}}""")
+      s""""queries":{${(rows ++ normRows).map(_._2).mkString(",")}},""" +
+      s""""failed":${Verify.failuresJson(failures)}}""")
     spark.stop()
     if (!allOk) sys.exit(1)
   }

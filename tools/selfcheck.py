@@ -16,6 +16,11 @@ float64 1400362.0 on the DuckDB side string-mismatch even though the
 values are numerically equal — which is why no query may emit DECIMAL or
 un-cast SUM output columns (see graft.functions.Money).
 
+Every query named in outdir/failures.json (Verify's record of the queries
+that threw) is a FAIL with its cause, whether or not outdir holds a
+directory for it: Verify writes a query's parquet only on success, so such
+a directory is a stale earlier run's output.
+
 Usage:
     python3 tools/selfcheck.py [sfdir] [outdir]
 """
@@ -99,8 +104,12 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SFDIR}/{t}.parquet'")
     oracle = json.loads((OUT / "oracle_sql.json").read_text())
-    results = {}
+    failures_file = OUT / "failures.json"
+    results = json.loads(failures_file.read_text()) if failures_file.exists() else {}
+    failed = set(results)
     for name, sql in sorted(oracle.items()):
+        if name in failed:
+            continue
         pdir = OUT / name
         if not pdir.exists():
             results[name] = "NO SPARK OUTPUT"
@@ -121,7 +130,7 @@ def main():
             results[name] = f"COMPARE ERROR ({type(e).__name__}): {e}"
     # queries without oracle: report rows-only
     for pdir in sorted(OUT.iterdir()):
-        if pdir.is_dir() and pdir.name not in oracle:
+        if pdir.is_dir() and pdir.name not in oracle and pdir.name not in failed:
             n = pq.read_table(pdir).num_rows
             results[pdir.name] = f"(no oracle) rows={n}"
     ok = True
