@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.{col, struct}
 
 /** The query-run steps the dev mains share: Bench and tools.ScaleStress time
@@ -89,7 +91,13 @@ private[graft] object Harness {
   *     after the final emission the run exits 1 if any query failed;
   *   - each query's first successful (rows, hash) is kept, and a later rep
   *     that differs names the query in the final detail line's "drift"
-  *     list (report-only: the exit code does not change).
+  *     list (report-only: the exit code does not change);
+  *   - the final detail line also carries each query's cold first rep
+  *     ("cold", seconds) beside its min, and per rep the classes Spark's
+  *     codegen compiled ("compile_classes") and the milliseconds it spent
+  *     compiling them ("compile_ms"). Both counters are JVM-global cache
+  *     misses, so a warm rep that compiles anything is re-paying for
+  *     classes the codegen cache evicted.
   *
   * Re-check one suspicious query without a full run:
   *   SPARK_GRAFT_BENCH_ONLY=q_price_moments sbt "runMain graft.Bench"
@@ -155,7 +163,11 @@ object Bench {
     // differs puts the query in `drift`
     val firstResult = scala.collection.mutable.Map.empty[String, (Long, Long)]
     val drift = scala.collection.mutable.Set.empty[String]
-    def once(name: String, fn: (SparkSession, String) => DataFrame): Double =
+    // name → (classes compiled, compile ms) per rep, failed reps included
+    val compiles = scala.collection.mutable.Map.empty[String, Vector[(Long, Double)]]
+    def once(name: String, fn: (SparkSession, String) => DataFrame): Double = {
+      val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val nanos0 = CodeGenerator.compileTime
       try {
         val e = Harness.evaluate(spark)(fn(spark, sfDir))
         val result = (e.rows, e.hash)
@@ -165,7 +177,12 @@ object Bench {
         System.err.println(s"[bench] query failed: ${e.getMessage}")
         failures(name) = e.toString
         -1.0
+      } finally {
+        val rep = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0,
+          (CodeGenerator.compileTime - nanos0) / 1e6)
+        compiles(name) = compiles.getOrElse(name, Vector.empty) :+ rep
       }
+    }
 
     // dev-only subset filter (comma-separated names); driver leaves it unset
     val only = Harness.subset(sys.env.get("SPARK_GRAFT_BENCH_ONLY"), "bench")
@@ -223,10 +240,16 @@ object Bench {
         if (partial) ""
         else "\"drift\":" + done.filter(drift).map("\"" + _ + "\"").mkString("[", ",", "]") + ","
       val failedMap = if (partial) "" else "\"failed\":" + Verify.failuresJson(failures) + ","
+      def perQuery(key: String)(value: String => String): String =
+        if (partial) ""
+        else s"\"$key\":" + done.map(n => "\"" + n + "\":" + value(n)).mkString("{", ",", "}") + ","
+      val coldMap = perQuery("cold")(n => times(n).head.toString)
+      val classesMap = perQuery("compile_classes")(n => compiles(n).map(_._1).mkString("[", ",", "]"))
+      val compileMsMap = perQuery("compile_ms")(n => compiles(n).map(c => "%.1f".format(c._2)).mkString("[", ",", "]"))
       // failures keep their -1 marker per query but must not shrink the total
       val total = results.map(_._2).filter(_ >= 0).sum
       val detailLine =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$repArrays$noisyList$driftList$failedMap"sf":"$sfDir","partial":$partial,"elapsed_sec":${"%.1f".format(elapsed)},"budget_exhausted":$budgetExhausted}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,$coldMap$classesMap$compileMsMap$repArrays$noisyList$driftList$failedMap"sf":"$sfDir","partial":$partial,"elapsed_sec":${"%.1f".format(elapsed)},"budget_exhausted":$budgetExhausted}"""
       println(detailLine)
       if (!partial) {
         // the driver-parseable artifact: keep this line SMALL (no per-query

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 class GraftSessionSpec extends SparkTestBase {
 
   private val unsetKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
@@ -48,6 +50,21 @@ class GraftSessionSpec extends SparkTestBase {
     val driven = spark.newSession()
     SparkEntry.entry(driven)
     assertTuned(driven)
+  }
+
+  test("a local session carries the codegen cache size") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+  }
+
+  test("a generated class stays cached past Spark's default 100 entries") {
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    // each distinct literal is inlined into its own generated class
+    def run(i: Int): Unit = spark.range(1).selectExpr(s"id + $i").collect(): Unit
+    (1 to 150).foreach(run)
+    val before = compiled.getCount
+    run(1)
+    assert(compiled.getCount - before == 0, "re-running the first query recompiled its class")
   }
 
   test("q_bucketed_join leaves the session conf as it found it") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.DedupQueries
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkTestBase {
@@ -61,5 +62,31 @@ class GraphSpec extends SparkTestBase {
     val tris = w.join(o.select(col("src").as("a"), col("dst").as("c")),
                       Seq("a", "c"), "left_semi").count()
     assert(tris == 4L, s"K4 has exactly 4 triangles, got $tris")
+  }
+
+  test("star CC agrees with min-label propagation on hand graphs") {
+    import spark.implicits._
+    // two components (a 4-chain and a triangle) + the pair order scrambled
+    val pairs = Seq((4L, 3L), (2L, 1L), (3L, 2L), (10L, 12L), (11L, 10L), (12L, 11L))
+      .toDF("doc_a", "doc_b")
+    def toMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val star = toMap(DedupQueries.propagateStarLabels(pairs))
+    val minl = toMap(DedupQueries.propagateMinLabels(pairs)
+      .where(col("doc_id") =!= col("label")))
+    assert(star == Map(2L -> 1L, 3L -> 1L, 4L -> 1L, 11L -> 10L, 12L -> 10L))
+    assert(star == minl, "the two CC algorithms must produce identical non-root labels")
+  }
+
+  test("star CC converges on a 300-node chain within its O(log n) round bound") {
+    import spark.implicits._
+    // a 300-chain has diameter 299: min-label would need ~299 sweeps, the
+    // star alternation's own require(iters <= 30) enforces the log bound
+    val chain = (2L to 300L).map(i => (i, i - 1)).toDF("doc_a", "doc_b")
+    val labels = DedupQueries.propagateStarLabels(chain).collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    assert(labels.length == 299)
+    assert(labels.forall(_._2 == 1L),
+      "every chain node must label to the component minimum")
   }
 }

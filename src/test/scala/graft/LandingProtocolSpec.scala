@@ -1,12 +1,13 @@
 package graft
 
-import graft.queries.DedupQueries
+import graft.queries.{DedupQueries, StorageQueries}
 
-/** The land-once marker protocol under the failure ADVICE r15 flagged:
-  * a PARTIALLY deleted landing (some part files removed, at least one
-  * left) must recompute, never be served as the full table. The marker
-  * records key + row count; reuse re-checks the landed count against it
-  * (parquet-footer-only), so any of {stale key, deleted landing, partial
+/** The land-once marker protocol of the dedup landings (signatures and
+  * cluster labels): a reuse serves exactly what the computation landed, and
+  * a deleted or PARTIALLY deleted landing (some part files removed, at
+  * least one left) must recompute, never be served as the full table. The
+  * marker records key + row count; reuse re-checks the landed count against
+  * it (parquet-footer-only), so any of {stale key, deleted landing, partial
   * landing, row-count drift} falls back to a fresh computation.
   */
 class LandingProtocolSpec extends SparkTestBase {
@@ -21,7 +22,7 @@ class LandingProtocolSpec extends SparkTestBase {
     // sabotage: delete SOME part files but leave at least one — the
     // pre-r16 existence check would have served the remainder as complete
     val tgt = new java.io.File(
-      graft.queries.StorageQueries.target("dedup_signatures_land"))
+      StorageQueries.target("dedup_signatures_land"))
     val parts = Option(tgt.listFiles()).getOrElse(Array.empty)
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
       .sortBy(_.getName)
@@ -74,7 +75,7 @@ class LandingProtocolSpec extends SparkTestBase {
       s"${computes.get()} computes for one key — the second lander did not reuse")
     // the marker landed atomically: parseable, and no temp remnant beside it
     val markerDir = new java.io.File(
-      graft.queries.StorageQueries.target(name + "_MARKER")).getParentFile
+      StorageQueries.target(name + "_MARKER")).getParentFile
     assert(!Option(markerDir.listFiles()).getOrElse(Array.empty)
       .exists(_.getName.startsWith(name + "_MARKER.tmp-")),
       "marker temp file left behind — the rename did not happen")
@@ -93,7 +94,7 @@ class LandingProtocolSpec extends SparkTestBase {
   test("a stale marker key recomputes") {
     DedupQueries.landedSignatures(spark, sf, recompute = false).count()
     val marker = new java.io.File(
-      graft.queries.StorageQueries.target("dedup_signatures_land_MARKER"))
+      StorageQueries.target("dedup_signatures_land_MARKER"))
     java.nio.file.Files.write(marker.toPath, "some-other-key\n42".getBytes("UTF-8"))
     val n = DedupQueries.landedSignatures(spark, sf, recompute = false).count()
     assert(n > 0)
@@ -102,5 +103,48 @@ class LandingProtocolSpec extends SparkTestBase {
       java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
     assert(!rewritten.startsWith("some-other-key"), "marker was not refreshed")
     assert(rewritten.endsWith(n.toString), s"marker count drifted: $rewritten vs $n")
+  }
+
+  test("cluster-landing reuse returns the exact computed assignment") {
+    val computed = DedupQueries.clusterLabels(spark, sf, reuseLanding = false)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // the compute call above landed the assignment; a reuse call must now
+    // serve the identical map from the landing
+    val reused = DedupQueries.clusterLabels(spark, sf, reuseLanding = true)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(computed.nonEmpty)
+    assert(reused == computed, "landed assignment drifted from the computed one")
+  }
+
+  test("signature-landing reuse returns the exact computed signature table") {
+    val computed = DedupQueries.landedSignatures(spark, sf, recompute = true)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    // the compute call above landed the table; a reuse call must now serve
+    // the identical signatures from the landing
+    val reused = DedupQueries.landedSignatures(spark, sf, recompute = false)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(computed.nonEmpty)
+    assert(reused == computed, "landed signatures drifted from the computed ones")
+  }
+
+  test("a deleted landing behind an intact marker recomputes instead of failing") {
+    // seed the landing + marker
+    DedupQueries.landedSignatures(spark, sf, recompute = true).count()
+    val tgt = new java.io.File(StorageQueries.target("dedup_signatures_land"))
+    val marker = new java.io.File(StorageQueries.target("dedup_signatures_land_MARKER"))
+    assert(marker.isFile, "landing marker missing after a landing write")
+    StorageQueries.deleteRecursively(tgt)
+    assert(!tgt.exists)
+    // the stale-marker path must fall through to recompute + re-land, not
+    // throw an AnalysisException on the vanished parquet
+    val n = DedupQueries.landedSignatures(spark, sf, recompute = false).count()
+    assert(n > 0)
+    assert(tgt.exists, "recovery path did not re-land the signatures")
+    // same contract for the cluster landing
+    DedupQueries.clusterLabels(spark, sf, reuseLanding = false).count()
+    val ctgt = new java.io.File(StorageQueries.target("dedup_clusters_land"))
+    StorageQueries.deleteRecursively(ctgt)
+    val m = DedupQueries.clusterLabels(spark, sf, reuseLanding = true).count()
+    assert(m > 0)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import graft.functions.Money
+import graft.queries.StorageQueries
 import org.apache.spark.sql.functions._
 
 /** Source/sink round-trips: every format a pipeline consumer realistically
@@ -110,5 +112,59 @@ class SourcesSpec extends SparkTestBase {
            count(col("doc_id")).cast("long").as("i"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(out - "__corrupt__" == good, "per-source good census drifted")
+  }
+
+  test("variant path computes the identical rollup to the string-JSON path") {
+    val events = Tables.events(spark, sf)
+    def rollup(kLong: org.apache.spark.sql.Column,
+               kStr: org.apache.spark.sql.Column) =
+      events
+        .select(col("event_type"), col("value"), kLong.as("k"), kStr.as("k_str"))
+        .groupBy(col("event_type"), pmod(col("k"), lit(10)).as("k_bucket"))
+        .agg(count(lit(1)).as("n"),
+             Money.lsum(Money.cents(col("value"))).as("sum_value_cents"),
+             max(col("k")).as("max_k"),
+             max(length(col("k_str"))).cast("long").as("max_k_len"))
+        .orderBy(col("event_type"), col("k_bucket"))
+        .collect().map(_.toSeq).toSeq
+    val v = parse_json(col("props"))
+    val variantPath = rollup(variant_get(v, "$.k", "long"),
+                             variant_get(v, "$.k", "string"))
+    val stringPath = rollup(get_json_object(col("props"), "$.k").cast("long"),
+                            get_json_object(col("props"), "$.k"))
+    assert(variantPath.nonEmpty)
+    assert(variantPath == stringPath,
+      "parse_json + variant_get must agree with the get_json_object path")
+  }
+
+  test("variant extractions share ONE parse in the optimized plan") {
+    val parsed = Tables.events(spark, sf)
+      .select(parse_json(col("props")).as("v"))
+      .select(variant_get(col("v"), "$.k", "long").as("a"),
+              variant_get(col("v"), "$.k", "string").as("b"))
+    val plan = parsed.queryExecution.optimizedPlan.toString
+    val needle = "VariantExpressionEvalUtils.parseJson"
+    assert(plan.sliding(needle.length).count(_ == needle) == 1,
+      s"CollapseProject must not duplicate the non-cheap parse:\n$plan")
+  }
+
+  test("shredded and unshredded variant storage read back identical extractions") {
+    val src = Tables.events(spark, sf)
+      .select(col("event_id"), parse_json(col("props")).as("v"))
+    val plain = StorageQueries.target("spec_variant_plain")
+    val shred = StorageQueries.target("spec_variant_shred")
+    src.write.mode("overwrite").parquet(plain)
+    GraftSession.withConfs(spark,
+      "spark.sql.variant.writeShredding.enabled" -> "true",
+      "spark.sql.variant.inferShreddingSchema" -> "true") {
+      src.write.mode("overwrite").parquet(shred)
+    }
+    def extract(path: String) = spark.read.parquet(path)
+      .select(col("event_id"), variant_get(col("v"), "$.k", "long").as("k"))
+      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
+    val a = extract(plain)
+    val b = extract(shred)
+    assert(a.nonEmpty)
+    assert(a == b, "shredded storage changed extraction results")
   }
 }

@@ -429,4 +429,25 @@ class StreamingSpec extends SparkTestBase {
         s"the timer must close the open session (and user 11's stay open), got $got")
     }
   }
+
+  test("dynamic-gap session window: a long-gap event type extends the session") {
+    // purchase at t0 carries a 60-min gap, so the view at t0+40 merges;
+    // under the static 30-min gap the same pair is two sessions
+    val ev = Seq(
+      (1L, ts(0), "purchase"),
+      (1L, ts(40), "view")
+    ).toDF("user_id", "ts", "event_type")
+    val dyn = ev.groupBy(col("user_id"),
+        session_window(col("ts"),
+          when(col("event_type") === "purchase", lit("60 minutes"))
+            .otherwise(lit("30 minutes"))).as("w"))
+      .agg(count(lit(1)).as("n")).collect()
+    assert(dyn.length == 1 && dyn.head.getAs[Long]("n") == 2L,
+      s"dynamic gap must merge the pair into one session; got ${dyn.toSeq}")
+    val static = ev.groupBy(col("user_id"),
+        session_window(col("ts"), "30 minutes").as("w"))
+      .agg(count(lit(1)).as("n")).collect()
+    assert(static.length == 2,
+      s"static 30-min gap must split the pair; got ${static.toSeq}")
+  }
 }
