@@ -87,7 +87,8 @@ private[graft] object Harness {
   *     run then finishes cleanly inside the driver's window instead of being
   *     killed by it ("budget_exhausted":true flags the trim in the artifact);
   *   - a rep that throws scores -1 and its query is named with the cause
-  *     in the final detail line's "failed" map (and tools/bench_last.json);
+  *     in the final detail line's "failed" map (and, on an unfiltered run,
+  *     tools/bench_last.json);
   *     after the final emission the run exits 1 if any query failed;
   *   - each query's first successful (rows, hash) is kept, and a later rep
   *     that differs names the query in the final detail line's "drift"
@@ -259,8 +260,9 @@ object Bench {
         // TAIL and has truncated the per-query map whenever the suite
         // outgrew the capture window (r6, r7, r14). Land the COMPLETE
         // detail line in a file too, so the per-query map is always
-        // available verbatim regardless of how stdout was captured.
-        try {
+        // available verbatim regardless of how stdout was captured. A
+        // subset run leaves the file alone: it holds the full suite's line.
+        if (only.isEmpty) try {
           val p = java.nio.file.Paths.get("tools/bench_last.json")
           if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
           java.nio.file.Files.write(p,

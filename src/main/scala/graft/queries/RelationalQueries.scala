@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{GraftSession, Tables}
 import graft.functions.Money
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -89,6 +89,88 @@ object RelationalQueries {
         case (k, None) => conf.remove(k): Unit
       }
     }
+
+  /** The task-end tallies of the jobs a [[withTaskEnds]] body ran. */
+  private[queries] final class TaskEnds {
+    val diskSpilled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val memSpilled = new java.util.concurrent.atomic.AtomicLong(0L)
+    val failed = new java.util.concurrent.atomic.AtomicLong(0L)
+    def spilled: Boolean = diskSpilled.get() > 0L && memSpilled.get() > 0L
+  }
+
+  /** Runs `body` with a listener tallying every task-end event, then waits
+    * (bounded, 15 s) until `settled` holds for the tally — the listener bus
+    * is async, so the just-finished jobs' task-end events may still be in
+    * flight — and returns the body's result with the tally. The listener
+    * is removed whatever happens.
+    */
+  private[queries] def withTaskEnds[A](spark: SparkSession)(settled: TaskEnds => Boolean)(
+      body: => A): (A, TaskEnds) = {
+    val ends = new TaskEnds
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        if (e.reason != org.apache.spark.Success) ends.failed.incrementAndGet(): Unit
+        val m = e.taskMetrics
+        if (m != null) {
+          ends.diskSpilled.addAndGet(m.diskBytesSpilled)
+          ends.memSpilled.addAndGet(m.memoryBytesSpilled): Unit
+        }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      while (!settled(ends) && System.nanoTime() < deadline) Thread.sleep(50)
+      (out, ends)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The batch sessionization oracle (the lag-gap partition), shared
+    * VERBATIM by q_sessionize, q_session_window and every streaming
+    * sessionizer gate: independent state machines and close paths must
+    * land on this one answer.
+    */
+  private[queries] val SessionizeOracleSql: String =
+    """SELECT user_id,
+      |       CAST(SUM(is_session_start) AS BIGINT) AS n_sessions,
+      |       COUNT(*) AS n_events
+      |FROM (
+      |  SELECT user_id,
+      |         CASE WHEN prev_ts IS NULL OR ts - prev_ts > INTERVAL '30 minutes'
+      |              THEN 1 ELSE 0 END AS is_session_start
+      |  FROM (SELECT user_id, ts, event_id,
+      |               LAG(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+      |        FROM events))
+      |GROUP BY user_id""".stripMargin
+
+  /** The CDC oracles' changelog CTEs: `ch`, the events as changes (op,
+    * cents), and `r`, each user's changes ranked newest-first with the
+    * user's change count.
+    */
+  private[queries] val CdcChangeCtes: String =
+    """WITH ch AS (
+      |  SELECT user_id, ts, event_id,
+      |         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
+      |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+      |  FROM events
+      |),
+      |r AS (
+      |  SELECT user_id, ts, event_id, op, cents,
+      |         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
+      |         COUNT(*) OVER (PARTITION BY user_id) AS n_changes
+      |  FROM ch
+      |)""".stripMargin
+
+  /** The batch q_cdc_snapshot oracle: each user's newest change, kept when
+    * it is an upsert. Every streaming CDC leg shares it verbatim, whatever
+    * its state backend.
+    */
+  private[queries] val CdcOracleSql: String =
+    CdcChangeCtes + """
+      |SELECT user_id, ts AS last_ts, CAST(event_id AS BIGINT) AS last_event_id,
+      |       cents AS last_cents, CAST(n_changes AS BIGINT) AS n_changes
+      |FROM r WHERE rn = 1 AND op = 'U'""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -397,17 +479,7 @@ object RelationalQueries {
           .agg(sum(col("is_session_start")).cast(LongType).as("n_sessions"),
                count(lit(1)).as("n_events"))
       },
-      Some("""SELECT user_id,
-             |       CAST(SUM(is_session_start) AS BIGINT) AS n_sessions,
-             |       COUNT(*) AS n_events
-             |FROM (
-             |  SELECT user_id,
-             |         CASE WHEN prev_ts IS NULL OR ts - prev_ts > INTERVAL '30 minutes'
-             |              THEN 1 ELSE 0 END AS is_session_start
-             |  FROM (SELECT user_id, ts, event_id,
-             |               LAG(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-             |        FROM events))
-             |GROUP BY user_id""".stripMargin)
+      Some(SessionizeOracleSql)
     ),
 
     // the SAME sessionization through Spark's BUILT-IN `session_window`
@@ -440,17 +512,7 @@ object RelationalQueries {
                sum(col("n")).cast(LongType).as("n_events"))
       },
       // q_sessionize's oracle verbatim
-      Some("""SELECT user_id,
-             |       CAST(SUM(is_session_start) AS BIGINT) AS n_sessions,
-             |       COUNT(*) AS n_events
-             |FROM (
-             |  SELECT user_id,
-             |         CASE WHEN prev_ts IS NULL OR ts - prev_ts > INTERVAL '30 minutes'
-             |              THEN 1 ELSE 0 END AS is_session_start
-             |  FROM (SELECT user_id, ts, event_id,
-             |               LAG(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-             |        FROM events))
-             |GROUP BY user_id""".stripMargin)
+      Some(SessionizeOracleSql)
     ),
 
     // DYNAMIC-GAP session windows (round-14, the one sessionization variant
@@ -1123,31 +1185,12 @@ object RelationalQueries {
                     Money.cents(col("value")).as("cents"))
             .select(col("event_id"), col("event_type"),
                     sum(col("cents")).over(w).cast(LongType).as("running_cents"))
-          val spilledDisk = new java.util.concurrent.atomic.AtomicLong(0L)
-          val spilledMem = new java.util.concurrent.atomic.AtomicLong(0L)
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              val m = e.taskMetrics
-              if (m != null) {
-                spilledDisk.addAndGet(m.diskBytesSpilled)
-                spilledMem.addAndGet(m.memoryBytesSpilled): Unit
-              }
-            }
-          }
-          spark.sparkContext.addSparkListener(listener)
-          try {
-            val ck = out.localCheckpoint(eager = true)
-            // the listener bus is async — wait (bounded) for the spill
-            // evidence from the just-finished job's task-end events
-            val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-            while ((spilledDisk.get() == 0L || spilledMem.get() == 0L) &&
-                   System.nanoTime() < deadline) Thread.sleep(50)
-            require(spilledMem.get() > 0L && spilledDisk.get() > 0L,
-              s"window buffers past the scoped $spillEvery-row threshold must spill — task " +
-              s"metrics report memoryBytesSpilled=${spilledMem.get()} " +
-              s"diskBytesSpilled=${spilledDisk.get()}")
-            ck
-          } finally spark.sparkContext.removeSparkListener(listener)
+          val (ck, ends) = withTaskEnds(spark)(_.spilled)(out.localCheckpoint(eager = true))
+          require(ends.spilled,
+            s"window buffers past the scoped $spillEvery-row threshold must spill — task " +
+            s"metrics report memoryBytesSpilled=${ends.memSpilled.get()} " +
+            s"diskBytesSpilled=${ends.diskSpilled.get()}")
+          ck
         }
       },
       Some(s"""SELECT event_id, event_type,
@@ -1240,35 +1283,19 @@ object RelationalQueries {
         RelationalQueries.withSparkEnvConfs(
           "spark.shuffle.spill.numElementsForceSpillThreshold" -> forceSpillAt.toString) {
           val out = agg()
-          val spilledDisk = new java.util.concurrent.atomic.AtomicLong(0L)
-          val spilledMem = new java.util.concurrent.atomic.AtomicLong(0L)
-          val listener = new org.apache.spark.scheduler.SparkListener {
-            override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-              val m = e.taskMetrics
-              if (m != null) {
-                spilledDisk.addAndGet(m.diskBytesSpilled)
-                spilledMem.addAndGet(m.memoryBytesSpilled): Unit
-              }
-            }
-          }
-          spark.sparkContext.addSparkListener(listener)
-          try {
+          val (ck, ends) = withTaskEnds(spark)(_.spilled) {
             val ck = out.localCheckpoint(eager = true)
             require(out.queryExecution.executedPlan.toString.contains("SortAggregate"),
               s"with ObjectHashAggregate disabled the agg must plan sort-based; " +
               s"plan:\n${out.queryExecution.executedPlan}")
-            // the listener bus is async — wait (bounded) for the spill
-            // evidence from the just-finished job's task-end events
-            val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-            while ((spilledDisk.get() == 0L || spilledMem.get() == 0L) &&
-                   System.nanoTime() < deadline) Thread.sleep(50)
-            require(spilledMem.get() > 0L && spilledDisk.get() > 0L,
-              s"the sort-aggregate pipeline past the scoped $forceSpillAt-element " +
-              s"force threshold must spill — task metrics report " +
-              s"memoryBytesSpilled=${spilledMem.get()} " +
-              s"diskBytesSpilled=${spilledDisk.get()}")
             ck
-          } finally spark.sparkContext.removeSparkListener(listener)
+          }
+          require(ends.spilled,
+            s"the sort-aggregate pipeline past the scoped $forceSpillAt-element " +
+            s"force threshold must spill — task metrics report " +
+            s"memoryBytesSpilled=${ends.memSpilled.get()} " +
+            s"diskBytesSpilled=${ends.diskSpilled.get()}")
+          ck
         })
 
         legA.select(lit("objecthash").as("leg"), col("*"))
@@ -1770,21 +1797,7 @@ object RelationalQueries {
                   col("m.cents").cast("long").as("last_cents"),
                   col("n_changes"))
       },
-      Some("""WITH ch AS (
-             |  SELECT user_id, ts, event_id,
-             |         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END AS op,
-             |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-             |  FROM events
-             |),
-             |r AS (
-             |  SELECT user_id, ts, event_id, op, cents,
-             |         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
-             |         COUNT(*) OVER (PARTITION BY user_id) AS n_changes
-             |  FROM ch
-             |)
-             |SELECT user_id, ts AS last_ts, CAST(event_id AS BIGINT) AS last_event_id,
-             |       cents AS last_cents, CAST(n_changes AS BIGINT) AS n_changes
-             |FROM r WHERE rn = 1 AND op = 'U'""".stripMargin)
+      Some(CdcOracleSql)
     ),
 
     // EXCHANGE REUSE — the diamond-plan shuffle dedup: a per-user rollup

@@ -860,15 +860,9 @@ object StorageQueries {
         require(!master.matches("""local\[[0-9*]+\]"""),
           s"task-retry gate needs a master with task retries (local[N,2]); got $master")
         val failShard = 3
-        val failedTasks = new java.util.concurrent.atomic.AtomicLong(0L)
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (e.reason != org.apache.spark.Success) { failedTasks.incrementAndGet(): Unit }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-          val landed = ShardExport(docs, "write_retry_shards", 8, col("doc_id"), ".tfrecord") {
+        val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+        val (landed, ends) = RelationalQueries.withTaskEnds(spark)(_.failed.get() > 0L) {
+          ShardExport(docs, "write_retry_shards", 8, col("doc_id"), ".tfrecord") {
             (out, it) =>
               val tc = org.apache.spark.TaskContext.get()
               val plant = tc.attemptNumber() == 0 && tc.partitionId() == failShard
@@ -882,16 +876,11 @@ object StorageQueries {
               }
               n
           }
-          // the listener bus is async — wait (bounded) for the planted
-          // failure's task-end event to drain, as the spill gates do
-          val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-          while (failedTasks.get() == 0L && System.nanoTime() < deadline)
-            Thread.sleep(50)
-          require(failedTasks.get() >= 1L,
-            s"the planted first-attempt failure never fired (failed tasks = " +
-            s"${failedTasks.get()}) — nothing was retried, the gate grades nothing")
-          docPayloadDigests(landed.shards).localCheckpoint(eager = true)
-        } finally spark.sparkContext.removeSparkListener(listener)
+        }
+        require(ends.failed.get() >= 1L,
+          s"the planted first-attempt failure never fired (failed tasks = " +
+          s"${ends.failed.get()}) — nothing was retried, the gate grades nothing")
+        docPayloadDigests(landed.shards).localCheckpoint(eager = true)
       },
       Some(docPayloadOracleSql)
     ),

@@ -171,29 +171,16 @@ object Streaming {
 
     override def handleInputRows(
         userId: Long, rows: Iterator[Event], tv: TimerValues): Iterator[Session] = {
-      val sorted = rows.toSeq.sortBy(_.ts.getTime)
-      var cur = if (st.exists()) Some(st.get()) else None
-      val prevDeadline = cur.map(_.last + SessionGapMs)
-      val closed = Seq.newBuilder[Session]
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.last <= SessionGapMs =>
-            cur = Some(s.copy(last = t, n = s.n + 1, total = s.total + e.value))
-          case Some(s) =>
-            closed += Session(userId, new Timestamp(s.start), new Timestamp(s.last), s.n, s.total)
-            cur = Some(SessionState(t, t, 1L, e.value))
-          case None =>
-            cur = Some(SessionState(t, t, 1L, e.value))
-        }
-      }
+      val prev = if (st.exists()) Some(st.get()) else None
+      val prevDeadline = prev.map(_.last + SessionGapMs)
+      val (cur, closed) = foldSessions(userId, rows, prev)
       cur.foreach { s =>
         st.update(s)
         val deadline = s.last + SessionGapMs
         prevDeadline.filter(_ != deadline).foreach(getHandle.deleteTimer)
         getHandle.registerTimer(deadline)
       }
-      closed.result().iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(
@@ -332,29 +319,39 @@ object Streaming {
       state.remove()
       out.iterator
     } else {
-      val sorted = it.toSeq.sortBy(_.ts.getTime)
-      var cur = state.getOption
-      val closed = Seq.newBuilder[Session]
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        cur match {
-          case Some(s) if t - s.last <= SessionGapMs =>
-            cur = Some(s.copy(last = t, n = s.n + 1, total = s.total + e.value))
-          case Some(s) =>
-            closed += Session(userId, new Timestamp(s.start), new Timestamp(s.last), s.n, s.total)
-            cur = Some(SessionState(t, t, 1L, e.value))
-          case None =>
-            cur = Some(SessionState(t, t, 1L, e.value))
-        }
-      }
+      val (cur, closed) = foldSessions(userId, it, state.getOption)
       cur match {
         case Some(s) =>
           state.update(s)
           onOpen(s)
         case None => state.remove()
       }
-      closed.result().iterator
+      closed.iterator
     }
+
+  /** The gap fold both sessionizer state machines share: one batch of a
+    * user's events, in event-time order, extends the `open` session while
+    * each gap is ≤ [[SessionGapMs]] and closes it at a longer gap. Returns
+    * the session left open and the sessions closed.
+    */
+  private def foldSessions(userId: Long, events: Iterator[Event],
+                           open: Option[SessionState]): (Option[SessionState], Seq[Session]) = {
+    var cur = open
+    val closed = Seq.newBuilder[Session]
+    events.toSeq.sortBy(_.ts.getTime).foreach { e =>
+      val t = e.ts.getTime
+      cur match {
+        case Some(s) if t - s.last <= SessionGapMs =>
+          cur = Some(s.copy(last = t, n = s.n + 1, total = s.total + e.value))
+        case Some(s) =>
+          closed += Session(userId, new Timestamp(s.start), new Timestamp(s.last), s.n, s.total)
+          cur = Some(SessionState(t, t, 1L, e.value))
+        case None =>
+          cur = Some(SessionState(t, t, 1L, e.value))
+      }
+    }
+    (cur, closed.result())
+  }
 
   /** Streaming exact dedup of a document stream: one row per normalized
     * content hash, duplicates arriving within the watermark horizon

@@ -26,28 +26,31 @@ object Materializer {
     * get_create_function_as_sql.sql:13-17 with BigQuery `OPTIONS(description)`
     * expressed as Spark `COMMENT`.
     */
-  def createFunctionSql(spec: UdfSpec, database: Option[String] = None, temporary: Boolean = false): String = {
-    val temp = if (temporary) "TEMPORARY " else ""
-    val qualified = database.filter(_ => !temporary).map(d => s"$d.").getOrElse("") + spec.name
-    val comment =
-      if (spec.description.nonEmpty && !temporary) s"\n  COMMENT '${escape(spec.description)}'" else ""
-    s"""CREATE OR REPLACE ${temp}FUNCTION $qualified(${spec.params.map(_.ddl).mkString(", ")})
-       |  RETURNS ${spec.returnType}$comment
-       |  RETURN ${spec.body}""".stripMargin
-  }
+  def createFunctionSql(spec: UdfSpec, database: Option[String] = None, temporary: Boolean = false): String =
+    functionDdl(spec.name, spec.params, s"RETURNS ${spec.returnType}", spec.body,
+      spec.description, database, temporary)
 
   /** `CREATE OR REPLACE FUNCTION … RETURNS TABLE` DDL for a TVF — port of
     * get_create_table_function_as_sql.sql:11-15. No output schema is declared;
     * Spark infers it from the body, like BigQuery.
     */
-  def createTableFunctionSql(spec: TvfSpec, database: Option[String] = None, temporary: Boolean = false): String = {
+  def createTableFunctionSql(spec: TvfSpec, database: Option[String] = None, temporary: Boolean = false): String =
+    functionDdl(spec.name, spec.params, "RETURNS TABLE", spec.query,
+      spec.description, database, temporary)
+
+  /** The one DDL shape behind both generators: a temporary function is
+    * never database-qualified and carries no `COMMENT`.
+    */
+  private def functionDdl(name: String, params: Seq[Param], returns: String, body: String,
+                          description: String, database: Option[String],
+                          temporary: Boolean): String = {
     val temp = if (temporary) "TEMPORARY " else ""
-    val qualified = database.filter(_ => !temporary).map(d => s"$d.").getOrElse("") + spec.name
+    val qualified = database.filter(_ => !temporary).map(d => s"$d.").getOrElse("") + name
     val comment =
-      if (spec.description.nonEmpty && !temporary) s"\n  COMMENT '${escape(spec.description)}'" else ""
-    s"""CREATE OR REPLACE ${temp}FUNCTION $qualified(${spec.params.map(_.ddl).mkString(", ")})
-       |  RETURNS TABLE$comment
-       |  RETURN ${spec.query}""".stripMargin
+      if (description.nonEmpty && !temporary) s"\n  COMMENT '${escape(description)}'" else ""
+    s"""CREATE OR REPLACE ${temp}FUNCTION $qualified(${params.map(_.ddl).mkString(", ")})
+       |  $returns$comment
+       |  RETURN $body""".stripMargin
   }
 
   /** Port of the reference's materialization lifecycle
@@ -79,12 +82,9 @@ object Materializer {
       temporary: Boolean = true,
       preHooks: Seq[String] = Nil,
       postHooks: Seq[String] = Nil
-  ): Unit = {
-    database.filter(_ => !temporary).foreach { db =>
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
-    }
-    materialize(spark, createFunctionSql(spec, database, temporary), spec.name, preHooks, postHooks)
-  }
+  ): Unit =
+    materializeIn(spark, createFunctionSql(spec, database, temporary), spec.name,
+      database, temporary, preHooks, postHooks)
 
   def materializeTableFunction(
       spark: SparkSession,
@@ -93,11 +93,20 @@ object Materializer {
       temporary: Boolean = true,
       preHooks: Seq[String] = Nil,
       postHooks: Seq[String] = Nil
-  ): Unit = {
+  ): Unit =
+    materializeIn(spark, createTableFunctionSql(spec, database, temporary), spec.name,
+      database, temporary, preHooks, postHooks)
+
+  /** [[materialize]] after creating the target database of a persistent
+    * function.
+    */
+  private def materializeIn(spark: SparkSession, ddl: String, name: String,
+                            database: Option[String], temporary: Boolean,
+                            preHooks: Seq[String], postHooks: Seq[String]): Unit = {
     database.filter(_ => !temporary).foreach { db =>
       spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
     }
-    materialize(spark, createTableFunctionSql(spec, database, temporary), spec.name, preHooks, postHooks)
+    materialize(spark, ddl, name, preHooks, postHooks)
   }
 
   /** Escape `s` for a single-quoted Spark SQL string literal. */

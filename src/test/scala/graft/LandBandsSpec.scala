@@ -82,4 +82,22 @@ class LandBandsSpec extends SparkTestBase {
     graft.queries.StreamingQueries.landBands(df, 2, "spec_land_cache", "sfB"): Unit
     assert(b1.isFile && !canary.exists, "key change must wipe and re-land all bands")
   }
+
+  test("a feed lands exactly its band count of files, and its rows total the input — time and hash banding") {
+    import graft.queries.StreamingQueries.Feed
+    val rows = (s: org.apache.spark.sql.SparkSession, _: String) =>
+      s.range(0, 500).select(col("id"), expr("timestamp_millis(1700000000000 + id * 7919)").as("ts"))
+    for (feed <- Seq(Feed.byTime("spec_feed_time", 3)(rows),
+                     Feed.byHash("spec_feed_hash", 5, col("id"))(rows))) {
+      val landed = feed.land(spark, "spec")
+      val bands = new java.io.File(landed.dir).listFiles()
+        .map(_.getName).filter(_.endsWith(".parquet")).sorted.toSeq
+      assert(bands == (0 until feed.bands).map(i => f"b$i%04d.parquet"),
+        s"${feed.name}: expected ${feed.bands} band files, got $bands")
+      assert(landed.schema == rows(spark, "spec").schema, s"${feed.name}: source schema")
+      assert(spark.read.parquet(landed.dir).count() == 500L,
+        s"${feed.name}: the landed bands must hold every input row exactly once")
+      assert(spark.read.parquet(landed.dir).distinct().count() == 500L, feed.name)
+    }
+  }
 }

@@ -49,4 +49,20 @@ class StreamGateSpec extends SparkTestBase {
     assert(sink.count() == 40L && sink.distinct().count() == 40L)
     assert(spark.streams.active.isEmpty)
   }
+
+  test("a lifecycle that must commit but adds no sink rows fails, naming the gate") {
+    import graft.queries.StreamingQueries.Feed
+    // every row in band 0: band 1 lands as an empty file
+    val landed = Feed.banded("spec_idle_feed", 2)(
+      (s, _) => s.range(0, 10).withColumn("__band", org.apache.spark.sql.functions.lit(0)))
+      .land(spark, "spec")
+    val gate = new StreamGate("spec_idle")
+    gate.runBands(landed, 0 to 0, mustCommit = true)(identity)
+    val e = intercept[IllegalArgumentException] {
+      gate.runBands(landed, 1 to 1, mustCommit = true)(identity)
+    }
+    assert(e.getMessage.contains("spec_idle") && e.getMessage.contains("lifecycle #2"), e.getMessage)
+    assert(spark.read.parquet(gate.sink).count() == 10L)
+    assert(spark.streams.active.isEmpty)
+  }
 }
