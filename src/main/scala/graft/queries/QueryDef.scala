@@ -12,3 +12,12 @@ final case class QueryDef(
     build: (SparkSession, String) => DataFrame,
     oracle: Option[String]
 )
+
+/** A gate's input lacks the volume its checks need, so running it would
+  * grade nothing. A gate with a volume precondition checks it up front and
+  * throws this, naming the gate and the reason, before any graded work.
+  * Verify and Bench count it as a failure like any other throw;
+  * `tools.ScaleStress` lists the gate under `"skipped"` with [[reason]].
+  */
+final class UnmetPrecondition(val gate: String, val reason: String)
+    extends IllegalStateException(s"$gate precondition unmet: $reason")

@@ -1247,6 +1247,10 @@ object RelationalQueries {
           .agg(countDistinct(col("user_id")).as("k"), count(lit(1)).as("n")).head
         val (nKeys, nRows) = (stats.getLong(0), stats.getLong(1))
         val fallbackAt = math.max(16L, nKeys / 8)
+        if (nKeys <= fallbackAt)
+          throw new UnmetPrecondition("q_agg_spill",
+            s"the fallback leg needs more than $fallbackAt distinct user_id keys " +
+            s"to pass its threshold; the data has $nKeys")
         val forceSpillAt = math.max(256L, nRows / 32 / 8)
         def agg(): DataFrame = Tables.events(spark, dir)
           .select(col("user_id"), Money.cents(col("value")).as("cents"))

@@ -2388,6 +2388,17 @@ object StorageQueries {
         val tgtU = target("parquet_pageidx_unsorted")
         val fact = Tables.events(spark, dir)
           .select(col("event_id"), col("user_id"), col("event_type"))
+        // each landing's two files hold one event_id parity each; the
+        // page-row limit alone cuts a file of more than 3 pages' rows into
+        // the >= 4 pages per chunk the index checks below need
+        val pageRows = 512
+        val halves = fact.groupBy(pmod(col("event_id"), lit(2))).count()
+          .collect().map(_.getLong(1))
+        val smallest = if (halves.length < 2) 0L else halves.min
+        if (smallest <= 3L * pageRows)
+          throw new UnmetPrecondition("q_parquet_page_skip",
+            s"each event_id parity needs more than ${3 * pageRows} events to fill 4 " +
+            s"pages of $pageRows rows per chunk; the smaller one has $smallest")
         def land(tgt: String, sorted: Boolean): Unit = {
           val base = fact.repartition(2, pmod(col("event_id"), lit(2)))
           // the unsorted twin must be GENUINELY scrambled: the source
@@ -2400,7 +2411,7 @@ object StorageQueries {
            else base.sortWithinPartitions(xxhash64(col("event_id"))))
             .write.mode("overwrite")
             .option("parquet.page.size", (4 * 1024).toString)
-            .option("parquet.page.row.count.limit", "512")
+            .option("parquet.page.row.count.limit", pageRows.toString)
             .parquet(tgt)
         }
         land(tgtS, sorted = true)

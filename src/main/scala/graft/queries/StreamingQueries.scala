@@ -388,23 +388,40 @@ object StreamingQueries {
       ("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") +: extra: _*)(body)
 
-  /** Stateful-shuffle partition count for the streaming gates, scoped per
-    * query. The state partition count is pinned into the checkpoint at
-    * first run, so a production stream SIZES it explicitly to expected
-    * state volume — it is not a knob the session's batch default should
-    * leak into. Here state is 10⁴-rows-grain and every state partition
-    * costs fixed per-batch work (delta-file create + commit + maintenance
-    * across TWO stores for the join), so the session's 32 batch partitions
-    * pay 4× the file ops for zero parallelism benefit — measured on the
-    * interval join at sf0.1: 30.4 s at 32 partitions vs 6.6 s at 8 on a
-    * high-I/O-latency host (and 8 still spreads across 8 cores). At 100 TB
-    * the same sizing exercise just lands on a bigger number.
+  /** Stateful-shuffle partition count for the streaming gates on a session
+    * with `slots` task slots (`sparkContext.defaultParallelism`): one wave,
+    * capped at 8. The count is pinned into the checkpoint at first run, so
+    * a production stream sizes it explicitly to expected state volume; it
+    * is not a knob the session's batch default should leak into.
+    *
+    * Every state partition is one task with a fixed cost per micro-batch:
+    * it loads, writes and commits its store's delta file (two stores for a
+    * join) through the checksummed checkpoint file manager. That cost is
+    * file I/O, not CPU: a stateful task at sf0.01 ran ~190 ms of wall time
+    * for ~25 ms of CPU. So a stage with more partitions than slots runs a
+    * second wave of the same latency. Warm medians of the window-counts /
+    * CDC / dedup gates on a 4-slot session, hashes identical at every
+    * count: 8 partitions 5.2 / 2.7 / 1.9 s, 4 partitions 3.4 / 1.45 /
+    * 1.3 s, 2 partitions 3.9 / 2.0 / 1.5 s, 1 partition 4.0 / 2.1 / 1.7 s.
+    * The cap keeps the old sizing for large sessions: the session's 32
+    * batch partitions paid 4× the file ops for no parallelism benefit, as
+    * measured on the interval join at sf0.1 (30.4 s at 32 partitions vs
+    * 6.6 s at 8 on a 32-thread, high-I/O-latency host). At 100 TB the same
+    * sizing exercise lands on a bigger number.
     */
-  private val StreamShufflePartitions = "8"
+  private[graft] def streamShufflePartitions(slots: Int): Int = math.min(8, slots)
 
-  private def withStreamParts[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
+  /** [[streamShufflePartitions]] for `spark`'s task slots. */
+  private[graft] def streamShufflePartitions(spark: SparkSession): Int =
+    streamShufflePartitions(spark.sparkContext.defaultParallelism)
+
+  /** Runs `body` with [[streamShufflePartitions]] as the session's shuffle
+    * partition count, which a stateful query's first start writes into its
+    * checkpoint.
+    */
+  private[graft] def withStreamParts[A](spark: SparkSession)(body: => A): A =
     graft.GraftSession.withConfs(spark,
-      "spark.sql.shuffle.partitions" -> StreamShufflePartitions)(body)
+      "spark.sql.shuffle.partitions" -> streamShufflePartitions(spark).toString)(body)
 
   /** "Files arrive": copy a band range from a landed dir into a live
     * arrival (landing-zone) dir, preserving the deterministic mtimes — the
@@ -1920,8 +1937,8 @@ object StreamingQueries {
     // batch run; what holds for ANY order is the theorem, and the grade
     // exposes exactly the batch q_heavy_hitters consequence — every term
     // with exact count > N/(k+1) must appear in the summary (`ok` pinned
-    // TRUE by the oracle). Terms shard BY TERM HASH across 8 state
-    // partitions ([[Streaming.mgSketch]]): each shard folds the classic
+    // TRUE by the oracle). Terms shard BY TERM HASH into 8 keyed
+    // shards ([[Streaming.mgSketch]]): each shard folds the classic
     // O(k) counter update across the four hash-banded micro-batches, and
     // because a term's entire stream lives in one shard, the plain union
     // of shard summaries is a valid global summary with the full N/(k+1)
@@ -2422,35 +2439,38 @@ object StreamingQueries {
 
     // STATE PARTITION COUNT IS PINNED BY THE CHECKPOINT (round-14) — the
     // operational contract every production restart relies on and the
-    // premise of this harness's own StreamShufflePartitions sizing note:
+    // premise of this harness's own streamShufflePartitions sizing note:
     // a stateful operator's shuffle-partition count is written into the
     // checkpoint at FIRST start, and every later lifecycle uses it no
     // matter what the session conf says (state rows live in partition-
     // keyed store instances; honoring a new conf would orphan state).
-    // Lifecycle 1 starts the CDC LWW fold at 8 partitions; lifecycle 2
-    // resumes under a session conf of 32 — the engine must still run the
-    // state operator at 8 (require'd from StateOperatorProgress
-    // .numShufflePartitions in BOTH lifecycles' progress) and the
-    // two-lifecycle snapshot must hash-match the shared batch CDC oracle
-    // (orphaned or re-hashed state would lose/duplicate keys).
+    // Lifecycle 1 starts the CDC LWW fold at streamShufflePartitions
+    // (never above 8); lifecycle 2 resumes under a session conf of 32 —
+    // the engine must still run the state operator at the pinned count
+    // (require'd from StateOperatorProgress.numShufflePartitions in BOTH
+    // lifecycles' progress) and the two-lifecycle snapshot must
+    // hash-match the shared batch CDC oracle (orphaned or re-hashed state
+    // would lose/duplicate keys).
     QueryDef(
       "q_streaming_partitions_pinned",
       (spark, dir) => withStreamParts(spark) {
         import spark.implicits._
         val land = CdcFeed.land(spark, dir)
         val gate = new StreamGate("parts_pin")
+        val pinned = streamShufflePartitions(spark)
         def runOnce(bands: Range, tag: String): Unit = {
           val parts = gate.runBands(land, bands, 3, StreamGate.Update)(
               src => Streaming.cdcState(src.as[Streaming.CdcChange]).toDF())
             .recentProgress.toSeq
             .flatMap(_.stateOperators.toSeq).map(_.numShufflePartitions).distinct
-          require(parts == Seq(StreamShufflePartitions.toLong),
+          require(parts == Seq(pinned.toLong),
             s"$tag: the state operator must run at the checkpoint-pinned " +
-            s"$StreamShufflePartitions partitions; progress reported $parts")
+            s"$pinned partitions; progress reported $parts")
         }
         runOnce(0 to 1, "lifecycle #1 (pins the count)")
         // the restart happens under a DIFFERENT session conf — the
-        // checkpointed count must win over it
+        // checkpointed count must win over it (32 is above the rule's cap,
+        // so it differs from the pinned count on every session)
         graft.GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> "32") {
           runOnce(2 to 3, "lifecycle #2 (conf says 32)")
         }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, Harness, SparkEntry, Verify}
+import graft.queries.UnmetPrecondition
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scale-stress rig: measures how the dedup/ANN/text paths' wall time grows
@@ -15,7 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the base size); super-linear beyond the slack means a quadratic term
   * crept into a path that claims to be linear. A query that throws is named
   * with its cause in the final line's "failed" map; the remaining queries
-  * are still graded, and the run then exits 1.
+  * are still graded, and the run then exits 1. A query whose input is below
+  * its declared volume precondition ([[graft.queries.UnmetPrecondition]])
+  * is named with the reason in the "skipped" map instead, is not graded,
+  * and does not fail the run.
   *
   * Usage: runMain graft.tools.ScaleStress [baseDir] [factor] [workDir]
   * (defaults: /root/testdata/sf0.1, 10, /tmp/graft_scale_stress)
@@ -452,15 +456,22 @@ object ScaleStress {
       (targets ++ normTargets.map(_._1)).flatMap(n => Seq(n -> baseDir, n -> workDir))
     val times = scala.collection.mutable.LinkedHashMap(
       cells.map(c => c -> Vector.empty[Double]): _*)
-    // name → cause of its first throw; the query's remaining cells are
-    // skipped and it is not graded
+    // name → cause of its first throw, or → reason of its unmet volume
+    // precondition; either way the query's remaining cells are skipped and
+    // it is not graded
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val skipped = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def attempt[A](name: String)(body: => A): Option[A] =
-      if (failures.contains(name)) None
-      else try Some(body) catch { case e: Throwable =>
-        System.err.println(s"[scale-stress] $name failed: ${e.getMessage}")
-        failures(name) = e.toString
-        None
+      if (failures.contains(name) || skipped.contains(name)) None
+      else try Some(body) catch {
+        case p: UnmetPrecondition =>
+          System.err.println(s"[scale-stress] $name skipped: ${p.reason}")
+          skipped(name) = p.reason
+          None
+        case e: Throwable =>
+          System.err.println(s"[scale-stress] $name failed: ${e.getMessage}")
+          failures(name) = e.toString
+          None
       }
     // evidence is STREAMED (the graft.Bench lesson): one line per completed
     // (cell, rep) measurement, so a run killed mid-flight — big-factor runs
@@ -476,7 +487,7 @@ object ScaleStress {
       System.out.flush()
     }
     def best(dir: String, name: String): Double = times((name, dir)).min
-    val rows = targets.filterNot(failures.contains).map { name =>
+    val rows = targets.filterNot(n => failures.contains(n) || skipped.contains(n)).map { name =>
       val tBase = best(baseDir, name)
       val tScaled = best(workDir, name)
       val ratio = tScaled / tBase
@@ -502,11 +513,13 @@ object ScaleStress {
           s""""us_per_cand_scaled":${perScaled * 1e6},"pass":$ok}""")
       }
     }
+    skipped.foreach { case (name, reason) => println(s"[scale-stress] $name SKIPPED: $reason") }
     failures.foreach { case (name, cause) => println(s"[scale-stress] $name FAILED: $cause") }
     val allOk = failures.isEmpty && (rows ++ normRows).forall(_._1)
     println(s"""{"metric":"scale_stress","factor":$factor,"slack":$Slack,"base":"$baseDir",""" +
       s""""docs":$nDocs,"vectors":$nVecs,"pass":$allOk,""" +
       s""""queries":{${(rows ++ normRows).map(_._2).mkString(",")}},""" +
+      s""""skipped":${Verify.failuresJson(skipped)},""" +
       s""""failed":${Verify.failuresJson(failures)}}""")
     spark.stop()
     if (!allOk) sys.exit(1)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.functions.col
 
 class GraftSessionSpec extends SparkTestBase {
 
@@ -65,6 +66,36 @@ class GraftSessionSpec extends SparkTestBase {
     val before = compiled.getCount
     run(1)
     assert(compiled.getCount - before == 0, "re-running the first query recompiled its class")
+  }
+
+  test("a local session turns artifact isolation off") {
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
+  }
+
+  test("a second stateful stream run on a fresh gate compiles no new classes") {
+    import graft.queries.StreamingQueries.{StreamGate, withStreamParts}
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    // each start runs on a fresh clone of the session
+    def statefulRun(): Unit = withStreamParts(spark) {
+      val gate = new StreamGate("spec_reuse")
+      spark.range(0, 40).repartition(1).write.mode("append").parquet(gate.arrival)
+      gate.run(StreamGate.source(spark, spark.range(1).schema, gate.arrival)
+        .groupBy((col("id") % 7).as("k")).count(), StreamGate.Update): Unit
+    }
+    statefulRun()
+    val before = compiled.getCount
+    statefulRun()
+    assert(compiled.getCount - before == 0, "the second stream run recompiled its classes")
+  }
+
+  test("a query rerun in a new session compiles no new classes") {
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
+    def run(s: org.apache.spark.sql.SparkSession): Unit =
+      s.range(0, 100, 1, 4).selectExpr("id % 11 AS k").groupBy("k").count().collect(): Unit
+    run(spark)
+    val before = compiled.getCount
+    run(spark.newSession())
+    assert(compiled.getCount - before == 0, "the new session recompiled the query's classes")
   }
 
   test("q_bucketed_join leaves the session conf as it found it") {

@@ -21,6 +21,14 @@ class HarnessSpec extends SparkTestBase {
       .exists(t => String.valueOf(t.getMessage).contains("planted")))
   }
 
+  test("a gate below its volume precondition throws UnmetPrecondition naming the reason") {
+    Seq("q_agg_spill" -> "distinct user_id keys", "q_parquet_page_skip" -> "event_id parity")
+      .foreach { case (name, why) =>
+        val e = intercept[graft.queries.UnmetPrecondition](SparkEntry.queries(name)(spark, sf))
+        assert(e.gate == name && e.reason.contains(why), e.getMessage)
+      }
+  }
+
   test("subset ignores blank entries, and an all-blank value means no filter") {
     assert(Harness.subset(Some("a, ,b"), "spec").contains(Set("a", "b")))
     assert(Harness.subset(Some(""), "spec").isEmpty)

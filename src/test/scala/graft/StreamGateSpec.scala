@@ -1,7 +1,9 @@
 package graft
 
+import graft.queries.StreamingQueries
 import graft.queries.StreamingQueries.StreamGate
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** The streaming-gate runner's lifecycle contract: a failing lifecycle
   * surfaces its cause and tears the stream down, and repeated runs on one
@@ -63,6 +65,21 @@ class StreamGateSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("spec_idle") && e.getMessage.contains("lifecycle #2"), e.getMessage)
     assert(spark.read.parquet(gate.sink).count() == 10L)
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("a stateful run's state operator runs at the partition rule for the session's slots") {
+    val gate = new StreamGate("spec_parts")
+    arrive(gate.arrival, 0, 40)
+    // the session's batch count differs, so only the rule can produce the count
+    val parts = GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> "3") {
+      StreamingQueries.withStreamParts(spark) {
+        gate.run(StreamGate.source(spark, schema, gate.arrival)
+          .groupBy((col("id") % 5).as("k")).count(), StreamGate.Update)
+      }
+    }.recentProgress.toSeq.flatMap(_.stateOperators.toSeq).map(_.numShufflePartitions).distinct
+    val rule = StreamingQueries.streamShufflePartitions(spark)
+    assert(parts == Seq(rule.toLong), s"rule=$rule progress=$parts")
     assert(spark.streams.active.isEmpty)
   }
 }
