@@ -20,29 +20,39 @@ import org.apache.spark.sql.SparkSession
   * Query builds never set it themselves. `SPARK_GRAFT_CPUS` is read only by
   * [[cpus]], which sizes every main's session.
   *
-  * [[local]] also sizes Spark's generated-class cache
-  * ([[CodegenCacheEntries]]). That is a static conf, not policy: Spark reads
-  * it once per JVM, when `CodeGenerator` is first used, so it must be set
-  * when the first session in the JVM is built and [[tune]] cannot set it.
-  * A JVM whose first session is built elsewhere, such as
-  * `tools.PersistenceMain`'s Hive builder, keeps Spark's default of 100. On
-  * a cluster it is a spark-submit conf, and it sizes the driver's cache and
-  * each executor's.
+  * [[staticConfs]] holds the settings Spark reads only when a session or
+  * the first generated class is built, so [[tune]] cannot set them. [[local]]
+  * applies them, and so does `tools.PersistenceMain`, which keeps its own
+  * builder only because it needs a Hive catalog over its own metastore and
+  * warehouse. On a cluster they are spark-submit confs. There are three:
   *
-  * [[local]] also turns session artifact isolation off
-  * (`spark.sql.artifact.isolation.enabled=false`), so every session in the
-  * JVM shares the executor's generated classes. The codegen cache is keyed
-  * by (context class loader, source). With isolation on, Spark's
-  * `ArtifactManager` tags each execution's tasks with its session's UUID,
-  * and the executor gives each UUID its own class loader. A streaming query
-  * runs on a clone of its session with a fresh UUID on every start, as does
-  * any `newSession()`, so each stream run recompiled byte-identical
-  * task-side classes: 20, 14 and 6 classes per warm run of the window
-  * counts, CDC and dedup gates, and 0 with isolation off. Isolation only
-  * separates artifacts a session adds (`addArtifact`, `addJar`), and the
-  * engine adds none. It is a session-creation conf with the same caveat as
-  * the cache size: `tools.PersistenceMain`'s Hive builder keeps Spark's
-  * default.
+  * Spark's generated-class cache size ([[CodegenCacheEntries]]). Spark reads
+  * it once per JVM, when `CodeGenerator` is first used, so it must be set
+  * when the first session in the JVM is built. On a cluster it sizes the
+  * driver's cache and each executor's.
+  *
+  * Session artifact isolation off (`spark.sql.artifact.isolation.enabled`),
+  * so every session in the JVM shares the executor's generated classes. The
+  * codegen cache is keyed by (context class loader, source). With isolation
+  * on, Spark's `ArtifactManager` tags each execution's tasks with its
+  * session's UUID, and the executor gives each UUID its own class loader. A
+  * streaming query runs on a clone of its session with a fresh UUID on every
+  * start, as does any `newSession()`, so each stream run recompiled
+  * byte-identical task-side classes: 20, 14 and 6 classes per warm run of
+  * the window counts, CDC and dedup gates, and 0 with isolation off.
+  * Isolation only separates artifacts a session adds (`addArtifact`,
+  * `addJar`), and the engine adds none.
+  *
+  * The local filesystem ([[graft.io.LocalFs]]) for `file:` paths, through
+  * both Hadoop's `FileSystem` and its `FileContext`. Without Hadoop's native
+  * library the stock one forks `chmod` for every file it creates and
+  * `readlink` for every `FileContext` rename, ~7–8 ms each; the engine's
+  * does both in the JVM. A warm run of the window counts, CDC and dedup gates
+  * forked about 670, 300 and 285 commands, and forks none with it. Hadoop's
+  * `FileSystem` cache is keyed by scheme and user, not by conf, so a JVM
+  * whose first `file:` lookup used another conf keeps that filesystem for
+  * `FileSystem` callers; `FileContext`, which the checkpoint manager uses,
+  * has no such cache.
   */
 object GraftSession {
 
@@ -115,16 +125,22 @@ object GraftSession {
     * retry.
     */
   def local(threads: Int, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+    val spark = staticConfs(SparkSession.builder())
       .master(s"local[$threads,2]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
-      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)
   }
+
+  /** `builder` with the engine's static confs (see the object's doc): the
+    * codegen cache size, artifact isolation off and the local filesystem.
+    */
+  def staticConfs(builder: SparkSession.Builder): SparkSession.Builder =
+    (Seq("spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+      "spark.sql.artifact.isolation.enabled" -> "false") ++ graft.io.LocalFs.confs)
+      .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
 }

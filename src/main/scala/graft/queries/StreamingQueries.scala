@@ -397,11 +397,16 @@ object StreamingQueries {
     * Every state partition is one task with a fixed cost per micro-batch:
     * it loads, writes and commits its store's delta file (two stores for a
     * join) through the checksummed checkpoint file manager. That cost is
-    * file I/O, not CPU: a stateful task at sf0.01 ran ~190 ms of wall time
-    * for ~25 ms of CPU. So a stage with more partitions than slots runs a
-    * second wave of the same latency. Warm medians of the window-counts /
-    * CDC / dedup gates on a 4-slot session, hashes identical at every
-    * count: 8 partitions 5.2 / 2.7 / 1.9 s, 4 partitions 3.4 / 1.45 /
+    * not CPU: a stateful task at sf0.01 ran ~190 ms of wall time for ~25 ms
+    * of CPU. Most of the gap was not the I/O either, but Hadoop's local
+    * filesystem forking a `chmod` for each file it created and a `readlink`
+    * for each rename, ~7–8 ms per command; [[graft.io.LocalFs]] makes both
+    * calls in the JVM. What is left per task is the number of files and the
+    * checkpoint-checksum futures that write them. A stage with more
+    * partitions than slots still runs a second wave of that latency. Warm
+    * medians of the window-counts / CDC / dedup gates on a 4-slot session
+    * with the forking filesystem, hashes identical at every count:
+    * 8 partitions 5.2 / 2.7 / 1.9 s, 4 partitions 3.4 / 1.45 /
     * 1.3 s, 2 partitions 3.9 / 2.0 / 1.5 s, 1 partition 4.0 / 2.1 / 1.7 s.
     * The cap keeps the old sizing for large sessions: the session's 32
     * batch partitions paid 4× the file ops for no parallelism benefit, as

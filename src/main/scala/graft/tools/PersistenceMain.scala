@@ -49,7 +49,7 @@ object PersistenceMain {
   }
 
   private def session(warehouse: String): SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.GraftSession.staticConfs(SparkSession.builder())
       .master("local[4]")
       .appName("graft-persistence")
       .config("spark.sql.shuffle.partitions", "4")

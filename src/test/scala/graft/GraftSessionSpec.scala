@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.StreamingQueries.{StreamGate, withStreamParts}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.col
 
@@ -72,20 +73,53 @@ class GraftSessionSpec extends SparkTestBase {
     assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
+  /** One stateful stream lifecycle on a fresh gate, over `batches`
+    * micro-batches; each start runs on a fresh clone of the session.
+    * Returns the gate.
+    */
+  private def statefulRun(batches: Int = 1): StreamGate = withStreamParts(spark) {
+    val gate = new StreamGate("spec_reuse")
+    spark.range(0, 40).repartition(batches).write.mode("append").parquet(gate.arrival)
+    gate.run(StreamGate.source(spark, spark.range(1).schema, gate.arrival, maxFilesPerTrigger = 1)
+      .groupBy((col("id") % 7).as("k")).count(), StreamGate.Update)
+    gate
+  }
+
   test("a second stateful stream run on a fresh gate compiles no new classes") {
-    import graft.queries.StreamingQueries.{StreamGate, withStreamParts}
     val compiled = CodegenMetrics.METRIC_COMPILATION_TIME
-    // each start runs on a fresh clone of the session
-    def statefulRun(): Unit = withStreamParts(spark) {
-      val gate = new StreamGate("spec_reuse")
-      spark.range(0, 40).repartition(1).write.mode("append").parquet(gate.arrival)
-      gate.run(StreamGate.source(spark, spark.range(1).schema, gate.arrival)
-        .groupBy((col("id") % 7).as("k")).count(), StreamGate.Update): Unit
-    }
     statefulRun()
     val before = compiled.getCount
     statefulRun()
     assert(compiled.getCount - before == 0, "the second stream run recompiled its classes")
+  }
+
+  test("file: resolves to the engine's local filesystem through FileSystem and FileContext") {
+    import org.apache.hadoop.fs.{FileContext, FileSystem}
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new java.net.URI("file:///")
+    // newInstance: FileSystem.get's cache is keyed by scheme and user, not conf
+    val fs = FileSystem.newInstance(root, conf)
+    try assert(fs.isInstanceOf[graft.io.ForklessLocalFileSystem], fs.getClass.getName)
+    finally fs.close()
+    val afs = FileContext.getFileContext(root, conf).getDefaultFileSystem
+    assert(afs.isInstanceOf[graft.io.ForklessLocalFs], afs.getClass.getName)
+  }
+
+  test("a stateful stream run starts fewer threads than its checkpoint has files") {
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    def files(dir: String): Long = {
+      val all = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try all.filter(java.nio.file.Files.isRegularFile(_)).count() finally all.close()
+    }
+    statefulRun(batches = 3)
+    // each forked shell command starts one stderr-reader thread; Spark's
+    // cached pools may refill during any one run, so two runs are counted
+    val runs = Seq.fill(2) {
+      val before = threads.getTotalStartedThreadCount
+      val gate = statefulRun(batches = 3)
+      (threads.getTotalStartedThreadCount - before, files(gate.ckpt))
+    }
+    assert(runs.exists { case (started, n) => started < n }, s"(threads started, checkpoint files): $runs")
   }
 
   test("a query rerun in a new session compiles no new classes") {
