@@ -208,21 +208,7 @@ object Dedup {
   def hamming64Sql(loA: String, hiA: String, loB: String, hiB: String): String =
     s"CAST(bit_count(xor($loA, $loB)) + bit_count(xor($hiA, $hiB)) AS BIGINT)"
 
-  /** Byte-wise blocking keys for SimHash: 4 bands of 8 bits. Two fingerprints
-    * within Hamming distance d < 4 must agree on at least one whole byte
-    * (pigeonhole), so joining on any equal (band, byte) has perfect recall
-    * for d ≤ 3 and high recall beyond.
-    */
-  def simhashBands(sh: Column): Column =
-    array((0 until 4).map(b => shiftright(sh, 8 * b).bitwiseAND(lit(255L))): _*)
-
-  def simhashBandsSql(sh: String): String =
-    (0 until 4).map(b => s"(($sh >> ${8 * b}) & 255)").mkString("[", ", ", "]")
-
   /** Hamming distance between two fingerprints. */
   def hamming(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b)).cast("long")
-
-  def hammingSql(a: String, b: String): String =
-    s"CAST(bit_count(xor($a, $b)) AS BIGINT)"
 }

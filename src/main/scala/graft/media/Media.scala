@@ -215,11 +215,6 @@ object Media {
   /** Frame stride in bytes for the fake fixed-size frame layout. */
   val FrameBytes: Int = 32
 
-  /** Max dimension the resize demo scales down to (shared by the Spark
-    * call and the oracle SQL so the two can't drift).
-    */
-  val ResizeMaxDim: Int = 128
-
   /** Derive the media table from `documents`: payload = utf-8 bytes of the
     * text (an opaque stand-in for real image/audio bytes), media_type and
     * dimensions deterministic functions of doc_id. This is the *plumbing*

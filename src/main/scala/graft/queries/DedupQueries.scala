@@ -200,7 +200,7 @@ object DedupQueries {
 
   /** Est-jaccard ≥ 0.5 pairs over the full 128-perm signature. A 32-perm
     * prefix estimate measured within noise of full width with identical
-    * emitted pairs (tools/minhash_prefix_compare_r08.log), so the
+    * emitted pairs (`git show 97f784c:tools/minhash_prefix_compare_r08.log`), so the
     * lower-variance full width stays.
     */
   private[graft] def minhashPairsSpark(spark: org.apache.spark.sql.SparkSession,
@@ -264,7 +264,7 @@ object DedupQueries {
     * destroys cross-replica shingles — component structure is
     * scale-invariant: D(scaled) = D(base), |edges| ×factor ⇒ expected
     * ratio ≈ factor before fixed overhead. Measured 6.17× at ×100
-    * (scale_stress_x100_r07.log) = overhead-dominated, consistent. A
+    * (`git show 97f784c:tools/scale_stress_x100_r07.log`) = overhead-dominated, consistent. A
     * future super-linear ratio therefore means D grew (banding surfacing
     * long chains — check dedup_minhash_recall) or a sweep stopped being
     * edge-linear, not "CC is like that".

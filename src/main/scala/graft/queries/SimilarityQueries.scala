@@ -646,7 +646,7 @@ object SimilarityQueries {
     * (vec_id, cid, rk) for each vector's `keep` nearest refined centroids.
     * Shared by `ann_ivf_topk` (retrieval probing) and `dedup_semantic`
     * (pair blocking); the SQL twin is [[ivfAssignCtes]]. One iteration,
-    * measured (tools/ivf_lloyd_compare_r07.log): extra Lloyd iterations
+    * measured (`git show 97f784c:tools/ivf_lloyd_compare_r07.log`): extra Lloyd iterations
     * do NOT move the frontier on this corpus (recall@10 0.90→0.87→0.86 at
     * sf0.01, 0.98→0.98→0.95 at sf0.1, candidate fraction flat ~0.25), so
     * the cheaper single iteration wins.

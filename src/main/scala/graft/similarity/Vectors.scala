@@ -86,16 +86,6 @@ object Vectors {
   def finitePositiveSql(x: String): String =
     s"(isfinite($x) AND $x > CAST(0 AS DOUBLE))"
 
-  /** Cosine similarity given precomputed norms (precompute them per row —
-    * it keeps the pair-stage arithmetic identical on both sides and avoids
-    * recomputing the reduction per pair).
-    */
-  def cosineFrom(dotAb: Column, normA: Column, normB: Column): Column =
-    dotAb / (normA * normB)
-
-  def cosineFromSql(dotAb: String, normA: String, normB: String): String =
-    s"($dotAb / ($normA * $normB))"
-
   /** Signed dot with hyperplane p (plane entries are ±1, so this is an exact
     * signed sum of vector elements).
     */

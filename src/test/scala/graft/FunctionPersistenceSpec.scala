@@ -14,7 +14,7 @@ import org.apache.spark.sql.AnalysisException
   * The full cold-restart story (new JVM-equivalent: stop the SparkContext,
   * rebuild against the same Derby metastore) lives in
   * [[graft.tools.PersistenceMain]] — it cannot run in-suite because the
-  * suites share one SparkContext. Evidence: tools/persistence_restart_r11.log.
+  * suites share one SparkContext. Evidence: `git show 97f784c:tools/persistence_restart_r11.log`.
   */
 class FunctionPersistenceSpec extends SparkTestBase {
 

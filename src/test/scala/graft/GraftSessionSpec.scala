@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.StreamingQueries.{StreamGate, withStreamParts}
+import graft.queries.StreamingQueries.StreamGate
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions.col
 
@@ -77,7 +77,7 @@ class GraftSessionSpec extends SparkTestBase {
     * micro-batches; each start runs on a fresh clone of the session.
     * Returns the gate.
     */
-  private def statefulRun(batches: Int = 1): StreamGate = withStreamParts(spark) {
+  private def statefulRun(batches: Int = 1): StreamGate = {
     val gate = new StreamGate("spec_reuse")
     spark.range(0, 40).repartition(batches).write.mode("append").parquet(gate.arrival)
     gate.run(StreamGate.source(spark, spark.range(1).schema, gate.arrival, maxFilesPerTrigger = 1)

@@ -1,13 +1,21 @@
 package graft
 
-import graft.queries.StreamingQueries
-import graft.queries.StreamingQueries.StreamGate
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
-/** The streaming-gate runner's lifecycle contract: a failing lifecycle
-  * surfaces its cause and tears the stream down, and repeated runs on one
-  * gate resume from its checkpoint.
+import graft.queries.StreamingQueries
+import graft.queries.StreamingQueries.{Feed, StreamGate}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, count, expr, lit, max}
+import org.apache.spark.sql.graftbridge.StateStoreProbe
+
+/** The streaming-gate runner's contract: a failing lifecycle surfaces its
+  * cause and tears the stream down, repeated runs on one gate resume from
+  * its checkpoint, the first start pins the state partition rule, the
+  * sink reads back with the schema the stream wrote, and a run leaves no
+  * state store loaded.
   */
 class StreamGateSpec extends SparkTestBase {
 
@@ -53,7 +61,6 @@ class StreamGateSpec extends SparkTestBase {
   }
 
   test("a lifecycle that must commit but adds no sink rows fails, naming the gate") {
-    import graft.queries.StreamingQueries.Feed
     // every row in band 0: band 1 lands as an empty file
     val landed = Feed.banded("spec_idle_feed", 2)(
       (s, _) => s.range(0, 10).withColumn("__band", org.apache.spark.sql.functions.lit(0)))
@@ -68,18 +75,110 @@ class StreamGateSpec extends SparkTestBase {
     assert(spark.streams.active.isEmpty)
   }
 
+  /** The state operators' partition counts in a lifecycle's progress. */
+  private def stateParts(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[Long] =
+    q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq).map(_.numShufflePartitions).distinct
+
+  private def keyCounts(gate: StreamGate) =
+    gate.run(StreamGate.source(spark, schema, gate.arrival)
+      .groupBy((col("id") % 5).as("k")).count(), StreamGate.Update)
+
   test("a stateful run's state operator runs at the partition rule for the session's slots") {
     val gate = new StreamGate("spec_parts")
     arrive(gate.arrival, 0, 40)
     // the session's batch count differs, so only the rule can produce the count
-    val parts = GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> "3") {
-      StreamingQueries.withStreamParts(spark) {
-        gate.run(StreamGate.source(spark, schema, gate.arrival)
-          .groupBy((col("id") % 5).as("k")).count(), StreamGate.Update)
-      }
-    }.recentProgress.toSeq.flatMap(_.stateOperators.toSeq).map(_.numShufflePartitions).distinct
+    val first = GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> "3")(keyCounts(gate))
     val rule = StreamingQueries.streamShufflePartitions(spark)
-    assert(parts == Seq(rule.toLong), s"rule=$rule progress=$parts")
+    assert(stateParts(first) == Seq(rule.toLong), s"rule=$rule progress=${stateParts(first)}")
+    // a second lifecycle restores the count its checkpoint pinned
+    arrive(gate.arrival, 40, 80)
+    val second = GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> "32")(keyCounts(gate))
+    assert(stateParts(second) == Seq(rule.toLong), s"rule=$rule progress=${stateParts(second)}")
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("a stateful run leaves none of its state stores loaded") {
+    val gate = new StreamGate("spec_unload")
+    arrive(gate.arrival, 0, 40)
+    val q = keyCounts(gate)
+    val ckpt = new Path(gate.ckpt)
+    val stateRoot = new Path(ckpt.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(ckpt), "state")
+    val parts = stateParts(q)
+    assert(parts.size == 1 && parts.head > 0, s"progress=$parts")
+    val loaded = (0 until parts.head.toInt).filter(StateStoreProbe.isLoaded(stateRoot.toString, _, q.runId))
+    assert(loaded.isEmpty, s"state partitions still loaded after the run: $loaded")
+  }
+
+  /** A gate whose `landing` lifecycle lands (bigint, timestamp_ntz,
+    * string) rows over two micro-batches: an [[StreamGate.Update]] landing
+    * aggregates them per string key.
+    */
+  private def landedGate(tag: String, landing: StreamGate.Landing): StreamGate = {
+    val gate = new StreamGate(tag)
+    arrive(gate.arrival, 0, 40); arrive(gate.arrival, 40, 80)
+    val rows = StreamGate.source(spark, schema, gate.arrival, 1)
+      .select(col("id"), expr("CAST(timestamp_millis(id * 1000) AS TIMESTAMP_NTZ)").as("ts"),
+              expr("CAST(id % 7 AS STRING)").as("s"))
+    gate.run(if (landing == StreamGate.Update)
+               rows.groupBy(col("s")).agg(count(lit(1)).as("n"), max(col("ts")).as("last_ts"))
+             else rows, landing)
+    gate
+  }
+
+  test("a gate's rows read its Append and Update sinks as the inferring read does") {
+    for (landing <- Seq(StreamGate.Append, StreamGate.Update)) {
+      val gate = landedGate(s"spec_rows_${landing.mode}", landing)
+      val inferred = spark.read.parquet(gate.sink)
+      assert(gate.rows.schema == inferred.schema, landing)
+      assert(gate.rows.columns.contains("batch") == (landing == StreamGate.Update), gate.rows.columns.toSeq)
+      val (got, want) = (Harness.evaluate(spark)(gate.rows), Harness.evaluate(spark)(inferred))
+      assert(got.rows > 0 && (got.rows, got.hash) == (want.rows, want.hash), s"$landing: $got vs $want")
+    }
+  }
+
+  /** Spark jobs started while `body` runs. A marker job runs after it, and
+    * the listener bus delivers one listener's events in order, so once the
+    * marker's start is seen every earlier start has been counted.
+    */
+  private def jobsStartedBy(body: => Any): Int = {
+    val marker = s"spec-jobs-marker-${System.nanoTime()}"
+    val starts = new AtomicInteger(0)
+    val seen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) seen.countDown()
+        else if (seen.getCount > 0) starts.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(marker)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(seen.await(30, TimeUnit.SECONDS), "the marker job's start never reached the listener")
+      starts.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("building a gate's rows starts no Spark job; the inferring read starts one") {
+    val gate = landedGate("spec_rows_jobs", StreamGate.Append)
+    assert(jobsStartedBy(gate.rows) == 0)
+    assert(jobsStartedBy(spark.read.parquet(gate.sink)) == 1)
+  }
+
+  test("a must-commit first lifecycle that lands nothing fails as degenerate, naming the gate") {
+    // band 0 holds no rows and lands as an empty file; band 1 holds them all
+    val landed = Feed.banded("spec_empty_feed", 2)((s, _) => s.range(0, 10).withColumn("__band", lit(1)))
+      .land(spark, "spec")
+    // nothing arriving leaves the sink with its commit log and no data file
+    for ((tag, bands) <- Seq("spec_no_band" -> (0 until 0), "spec_empty_band" -> (0 to 0))) {
+      val gate = new StreamGate(tag)
+      val e = intercept[IllegalArgumentException] {
+        gate.runBands(landed, bands, mustCommit = true)(identity)
+      }
+      assert(e.getMessage.contains(tag) && e.getMessage.contains("lifecycle #1 committed no sink rows"),
+        e.getMessage)
+    }
     assert(spark.streams.active.isEmpty)
   }
 }
