@@ -100,4 +100,28 @@ class LandBandsSpec extends SparkTestBase {
       assert(spark.read.parquet(landed.dir).distinct().count() == 500L, feed.name)
     }
   }
+
+  test("a landed feed lands again without building its rows: no Spark job, the same schema") {
+    import graft.queries.StreamingQueries.Feed
+    // Tables.events infers the parquet schema, a job, whenever its rows are built
+    val feed = Feed.byHash("spec_feed_jobs", 2, col("event_id"))(Tables.events)
+    val first = feed.land(spark, sf)
+    assert(first.schema == Tables.events(spark, sf).schema)
+    val again = SparkEvents.during(spark)(feed.land(spark, sf))
+    assert(again.jobs == 0, s"${again.jobs} jobs on a cache hit")
+    assert(feed.land(spark, sf) == first)
+  }
+
+  test("a landing marker without a schema re-lands") {
+    import spark.implicits._
+    val df = Seq((1L, 0), (2L, 1)).toDF("v", "__band")
+    val land = graft.queries.StreamingQueries.landBands(df, 2, "spec_land_noschema", "sfA")
+    val marker = new java.io.File(land, "_LANDED")
+    val canary = new java.io.File(land, "_canary")
+    java.nio.file.Files.write(canary.toPath, Array[Byte](1)): Unit
+    java.nio.file.Files.write(marker.toPath, "sfA|2".getBytes("UTF-8")): Unit
+    graft.queries.StreamingQueries.landBands(df, 2, "spec_land_noschema", "sfA"): Unit
+    assert(!canary.exists, "a marker without a schema line must re-land")
+    assert(graft.queries.StreamingQueries.landedSchema(land) == df.drop("__band").schema)
+  }
 }

@@ -142,6 +142,104 @@ class ReferencePipelineSpec extends SparkTestBase {
     spark.sql("DROP TABLE test_datamart")
   }
 
+  /** The sf0.01 data, beside the suite's sf0.001. */
+  private val sf01 = sf.stripSuffix("sf0.001") + "sf0.01"
+
+  /** (rows, hash) of a forced evaluation, as `Harness.evaluate` gives them. */
+  private def answer(df: => org.apache.spark.sql.DataFrame): (Long, Long) = {
+    val e = Harness.evaluate(spark)(df)
+    (e.rows, e.hash)
+  }
+
+  private val injections = Seq(
+    """x\') UNION ALL SELECT CAST(column1 AS BIGINT), parse_datetime(column2) FROM test_table --""",
+    "a'b")
+
+  test("a prepared call answers exactly as the query text with the id bound as :id") {
+    val ids = Seq("13", "7", "10000001", "", "013", "+13", " 13", "十三", ReferencePipeline.IdMarker) ++ injections
+    for (id <- ids) {
+      val prepared = answer(ReferencePipeline.datamart(spark, sf, id))
+      val text = answer(spark.sql(ReferencePipeline.DatamartSql, Map("id" -> id)))
+      assert(prepared == text, s"id '$id'")
+    }
+    assert(answer(ReferencePipeline.datamart(spark, sf, "13"))._1 > 0)
+  }
+
+  test("a changed runtime conf re-prepares: the call's analyzed plan is the text path's") {
+    def plans(id: String) = (ReferencePipeline.datamart(spark, sf, id).queryExecution.analyzed.canonicalized,
+      spark.sql(ReferencePipeline.DatamartSql, Map("id" -> id)).queryExecution.analyzed.canonicalized)
+    ReferencePipeline.datamart(spark, sf, "13").collect()
+    val (before, _) = plans("13")
+    val flipped = (!spark.conf.get("spark.sql.ansi.enabled").toBoolean).toString
+    GraftSession.withConfs(spark, "spark.sql.ansi.enabled" -> flipped) {
+      val (call, text) = plans("13")
+      assert(call == text)
+      assert(call != before, "toggling ANSI mode did not change the analyzed plan")
+    }
+    val (call, text) = plans("7")
+    assert(call == text)
+  }
+
+  /** The files of the copy the registered `test_table` view reads, with their mtimes. */
+  private def copyFiles(s: org.apache.spark.sql.SparkSession = spark): Map[String, Long] =
+    s.table("test_table").inputFiles.map { f =>
+      val p = new Path(f)
+      f -> p.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(p).getModificationTime
+    }.toMap
+
+  test("the clustered copy holds exactly the source's rows") {
+    for (dir <- Seq(sf, sf01)) {
+      ReferencePipeline.register(spark, dir)
+      assert(copyFiles().keys.forall(!_.contains("events.parquet")), "test_table does not read the copy")
+      assert(answer(spark.table("test_table")) == answer(ReferencePipeline.testTable(spark, dir)), dir)
+    }
+  }
+
+  test("a call pushes its id to the copy's scan and reads fewer rows than the source holds") {
+    val dir = sf01
+    val df = ReferencePipeline.datamart(spark, dir, "13")
+    assert(df.queryExecution.executedPlan.toString.contains("EqualTo(id,13)"),
+      df.queryExecution.executedPlan.toString)
+    val sourceRows = Tables.events(spark, dir).count()
+    val seen = SparkEvents.during(spark)(df.collect())
+    assert(seen.recordsRead > 0 && seen.recordsRead < sourceRows / 2,
+      s"read ${seen.recordsRead} of $sourceRows source rows")
+  }
+
+  test("re-registration reuses the written copy: no job, same files and mtimes") {
+    ReferencePipeline.register(spark, sf)
+    val files = copyFiles()
+    assert(files.nonEmpty)
+    ReferencePipeline.testTable(spark, sf).createOrReplaceTempView("test_table")
+    assert(SparkEvents.during(spark)(ReferencePipeline.register(spark, sf)).jobs == 0)
+    assert(copyFiles() == files)
+    val fresh = spark.newSession()
+    assert(SparkEvents.during(fresh)(ReferencePipeline.register(fresh, sf)).jobs == 0)
+    assert(copyFiles(fresh) == files)
+  }
+
+  test("another time zone or a touched source file writes a new copy") {
+    ReferencePipeline.register(spark, sf)
+    val utc = copyFiles().keySet
+    GraftSession.withConfs(spark, "spark.sql.session.timeZone" -> "America/Los_Angeles") {
+      ReferencePipeline.register(spark, sf)
+      assert(copyFiles().keySet.intersect(utc).isEmpty)
+      assert(answer(spark.table("test_table")) == answer(ReferencePipeline.testTable(spark, sf)))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("spec_events_")
+    try {
+      val src = dir.resolve("events.parquet")
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"), src)
+      ReferencePipeline.register(spark, dir.toString)
+      val first = copyFiles().keySet
+      assert(src.toFile.setLastModified(src.toFile.lastModified() + 60000L))
+      val fresh = spark.newSession()
+      assert(SparkEvents.during(fresh)(ReferencePipeline.register(fresh, dir.toString)).jobs > 0)
+      assert(copyFiles(fresh).keySet.intersect(first).isEmpty)
+      assert(column1(ReferencePipeline.datamart(fresh, dir.toString, "13")) == expected(sf, 13))
+    } finally graft.queries.StorageQueries.deleteRecursively(dir.toFile)
+  }
+
   test("type-conflict guard: existing view with the function's name raises") {
     import spark.implicits._
     Seq(1).toDF("x").createOrReplaceTempView("conflicted_name")

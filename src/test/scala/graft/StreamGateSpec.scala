@@ -1,12 +1,8 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.queries.StreamingQueries
 import graft.queries.StreamingQueries.{Feed, StreamGate}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, expr, lit, max}
 import org.apache.spark.sql.graftbridge.StateStoreProbe
@@ -136,34 +132,10 @@ class StreamGateSpec extends SparkTestBase {
     }
   }
 
-  /** Spark jobs started while `body` runs. A marker job runs after it, and
-    * the listener bus delivers one listener's events in order, so once the
-    * marker's start is seen every earlier start has been counted.
-    */
-  private def jobsStartedBy(body: => Any): Int = {
-    val marker = s"spec-jobs-marker-${System.nanoTime()}"
-    val starts = new AtomicInteger(0)
-    val seen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker)) seen.countDown()
-        else if (seen.getCount > 0) starts.incrementAndGet(): Unit
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription(marker)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(seen.await(30, TimeUnit.SECONDS), "the marker job's start never reached the listener")
-      starts.get
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("building a gate's rows starts no Spark job; the inferring read starts one") {
     val gate = landedGate("spec_rows_jobs", StreamGate.Append)
-    assert(jobsStartedBy(gate.rows) == 0)
-    assert(jobsStartedBy(spark.read.parquet(gate.sink)) == 1)
+    assert(SparkEvents.during(spark)(gate.rows).jobs == 0)
+    assert(SparkEvents.during(spark)(spark.read.parquet(gate.sink)).jobs == 1)
   }
 
   test("a must-commit first lifecycle that lands nothing fails as degenerate, naming the gate") {
