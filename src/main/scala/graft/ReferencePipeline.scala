@@ -1,16 +1,14 @@
 package graft
 
 import graft.functions.BqFunctions
-import graft.queries.StorageQueries
+import graft.queries.Landing
 import graft.udf._
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.{CatalogBridge, PlanBridge}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import java.lang.ref.WeakReference
 
@@ -120,11 +118,6 @@ object ReferencePipeline {
     */
   private val CopyFiles = 2
 
-  /** The columns the copy holds, all strings as in `testTable`, so the
-    * view reads it without a schema-inference job.
-    */
-  private val TestTableSchema = StructType(Seq("id", "column1", "column2").map(StructField(_, StringType)))
-
   /** The text of the datamart query (the reference's models/datamart/test_datamart.sql:1-5). */
   private[graft] val DatamartSql =
     """SELECT column1, datetime
@@ -145,9 +138,10 @@ object ReferencePipeline {
     * The source is read from a copy of [[testTable]] clustered by `id`
     * ([[clusteredCopy]]): the reference's `test_table` is a table, and the
     * TVF's `WHERE id = filter_id` then reaches the scan as a pushed filter
-    * that row-group statistics answer. The copy is keyed to the source's
-    * file listing and the session time zone, and written once per process
-    * for each key; re-registrations reuse it.
+    * that row-group statistics answer. The copy is a landing, written once
+    * per process for each source listing and session time zone;
+    * re-registrations read it back with its recorded schema, and start no
+    * Spark job.
     *
     * A later call skips all of this while the registration holds: the
     * session still has the exact catalog instances it created for this
@@ -166,7 +160,7 @@ object ReferencePipeline {
   private def registration(spark: SparkSession, sfDir: String): Registration =
     Registration.Lock.synchronized {
       Registration.of(spark).filter(_.holds(spark, sfDir)).getOrElse {
-        spark.read.schema(TestTableSchema).parquet(clusteredCopy(spark, sfDir))
+        clusteredCopy(spark, sfDir).read(spark)
           .createOrReplaceTempView("test_table")
         Materializer.materializeFunction(spark, parseDatetimeSpec, temporary = true)
         Materializer.materializeTableFunction(spark, testTableFunctionSpec, temporary = true)
@@ -179,35 +173,20 @@ object ReferencePipeline {
 
   private val MarkerLiteral = Literal(IdMarker)
 
-  /** The directory of `testTable(spark, sfDir)` written as parquet sorted
-    * by `id` into [[CopyFiles]] files of [[CopyRowGroupBytes]] row groups.
-    * It lives under the process's sink root, named by a hash of what
-    * `testTable` reads: the source's file listing (path, length, mtime of
-    * each file) and the session time zone, which `date_format` renders
-    * `column2` in. A copy is written to a temp dir, moved into place, then
-    * marked complete; a directory without its marker is written again.
+  /** `testTable(spark, sfDir)` written as parquet sorted by `id` into
+    * [[CopyFiles]] files of [[CopyRowGroupBytes]] row groups, through the
+    * [[graft.queries.Landing]] keyed by what `testTable` reads: the source's
+    * file listing and the session time zone, which `date_format` renders
+    * `column2` in.
     */
-  private def clusteredCopy(spark: SparkSession, sfDir: String): String = {
-    val src = new Path(s"$sfDir/events.parquet")
-    val files = src.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(src, true)
-    val listing = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
-      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").toSeq.sorted
-    val key = (listing :+ spark.conf.get("spark.sql.session.timeZone")).mkString("\n")
-    val hash = java.security.MessageDigest.getInstance("SHA-256").digest(key.getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
-    val dir = new java.io.File(StorageQueries.target(s"test_table_$hash"))
-    val marker = new java.io.File(dir, "_CLUSTERED")
-    if (!marker.isFile) {
-      val tmp = new java.io.File(dir.getPath + "_tmp")
-      StorageQueries.deleteRecursively(tmp)
-      StorageQueries.deleteRecursively(dir)
-      testTable(spark, sfDir).repartitionByRange(CopyFiles, col("id")).sortWithinPartitions("id")
-        .write.option("parquet.block.size", CopyRowGroupBytes.toLong).parquet(tmp.getPath)
-      java.nio.file.Files.move(tmp.toPath, dir.toPath)
-      java.nio.file.Files.write(marker.toPath, key.getBytes("UTF-8")): Unit
+  private def clusteredCopy(spark: SparkSession, sfDir: String): Landing.Landed =
+    Landing(spark, "test_table", Seq(s"$sfDir/events.parquet"),
+        spark.conf.get("spark.sql.session.timeZone")).orWrite { tmp =>
+      val rows = testTable(spark, sfDir)
+      rows.repartitionByRange(CopyFiles, col("id")).sortWithinPartitions("id")
+        .write.option("parquet.block.size", CopyRowGroupBytes.toLong).parquet(tmp)
+      rows.schema
     }
-    dir.getPath
-  }
 
   /** What one registration made: the catalog's own instances of the UDF
     * and the TVF, the runtime SQL conf it prepared under, and the prepared

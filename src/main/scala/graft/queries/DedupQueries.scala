@@ -75,12 +75,13 @@ object DedupQueries {
     * table: the LSH emitter, both CC propagators, the incremental banding
     * pass, and the recall grader's estimate arm. A 100 TB pipeline writes
     * exactly this stage to a signatures table once; here, whoever computes
-    * it first in a process lands it beside the other sink dirs.
+    * it first in a process lands it through [[signatureLanding]].
     * `recompute = true` callers (dedup_minhash_lsh, whose GATE is the
     * signing itself) always compute fresh — landing only when the landing
     * is stale — so its bench reps stay a pure measurement of the signature
-    * pipeline; `recompute = false` callers read the landing when its key
-    * (input dir + shingle/permutation-family version) matches.
+    * pipeline; `recompute = false` callers read the landing back, with no
+    * Spark job, while one is in place for the corpus and the shingle and
+    * permutation family.
     *
     * Compute shape (unchanged from rounds 12-14): repartition before the
     * shingle+perm map — the documents table is one small parquet file →
@@ -92,80 +93,17 @@ object DedupQueries {
     */
   private[graft] def landedSignatures(spark: org.apache.spark.sql.SparkSession,
                                       dir: String,
-                                      recompute: Boolean): org.apache.spark.sql.DataFrame = {
-    landedOrCompute(spark, "dedup_signatures_land",
-      s"$dir|k=$ShingleK|perms=$MinhashPerms|sig-v1", forceRecompute = recompute) {
+                                      recompute: Boolean): org.apache.spark.sql.DataFrame =
+    signatureLanding(spark, dir).rows(spark, forceRecompute = recompute) {
       Dedup.shingleHashSets(
           Tables.documents(spark, dir).repartition(spark.sparkContext.defaultParallelism),
           ShingleK)
         .select(col("doc_id"), Dedup.minhashSignature(col("hs"), MinhashPerms).as("sig"))
     }
-  }
 
-  /** Per-landing-name JVM locks: two same-process landers racing the same
-    * name serialize on compute+land, so the second observes the first's
-    * marker and reuses instead of clobbering a write in progress. The
-    * cross-PROCESS race is out of scope by contract: two JVMs overwriting
-    * the same landing dir interleave Spark's overwrite-delete with the
-    * other's part writes (failure mode: a mixed-generation landing whose
-    * count no longer matches either marker — the count check then forces
-    * a recompute, so the table served is never wrong, but the work is
-    * wasted). Production topology is one driver per landing namespace.
-    */
-  private val landingLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** The land-once protocol shared by [[landedSignatures]] and
-    * [[clusterLabels]]: the marker (at `<name>_MARKER`) records the cache
-    * key AND the landed row count, so a stale key, a deleted landing, or
-    * a PARTIALLY deleted landing (some part files gone, one left) all
-    * recompute instead of serving a wrong table — the count check is
-    * parquet-footer-only. `forceRecompute = true` callers always compute
-    * fresh (their gate IS the computation) but still re-land when the
-    * landing is stale, so reuse callers stay warm. The marker lands via
-    * temp-file + ATOMIC_MOVE, so a reader never parses a half-written
-    * marker; keys must be newline-free (the marker format is
-    * `key \n rowCount` — an embedded newline would shift the parse and
-    * permanently defeat freshness).
-    */
-  private[graft] def landedOrCompute(spark: org.apache.spark.sql.SparkSession,
-                                     name: String, key: String, forceRecompute: Boolean)
-                                    (compute: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    require(!key.exists(c => c == '\n' || c == '\r'),
-      s"landing key for '$name' embeds a newline — it would corrupt the marker parse: ${key.replace("\n", "\\n").replace("\r", "\\r")}")
-    val lock = landingLocks.computeIfAbsent(name, _ => new Object)
-    lock.synchronized {
-      val tgt = StorageQueries.target(name)
-      val marker = new java.io.File(StorageQueries.target(name + "_MARKER"))
-      def markerLines: Option[(String, Long)] =
-        if (!marker.isFile) None
-        else new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
-          .split("\n", 2) match {
-            case Array(k, n) => scala.util.Try((k, n.trim.toLong)).toOption
-            case _           => None
-          }
-      def landingIntact(expectedRows: Long): Boolean = {
-        val files = Option(new java.io.File(tgt).listFiles()).getOrElse(Array.empty)
-        files.exists(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) &&
-          scala.util.Try(spark.read.parquet(tgt).count()).toOption.contains(expectedRows)
-      }
-      val fresh = markerLines.exists { case (k, n) => k == key && landingIntact(n) }
-      if (!forceRecompute && fresh) return spark.read.parquet(tgt)
-      val df = compute
-      if (!fresh) {
-        marker.delete(): Unit
-        df.write.mode("overwrite").parquet(tgt)
-        val landedRows = spark.read.parquet(tgt).count()
-        val tmp = new java.io.File(marker.getParentFile,
-          marker.getName + s".tmp-${java.lang.Thread.currentThread().getId}")
-        java.nio.file.Files.write(tmp.toPath, s"$key\n$landedRows".getBytes("UTF-8"))
-        java.nio.file.Files.move(tmp.toPath, marker.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-        spark.read.parquet(tgt)
-      } else df
-    }
-  }
+  /** The [[Landing]] of `dir`'s minhash signatures, versioned by how they are computed. */
+  private[graft] def signatureLanding(spark: org.apache.spark.sql.SparkSession, dir: String): Landing =
+    Landing(spark, "dedup_signatures_land", Seq(dir), s"k=$ShingleK", s"perms=$MinhashPerms", "sig-v1")
 
   /** (signatures, candidate pairs) behind `dedup_minhash_lsh` (shared by
     * `dedup_clusters`) — stages exposed so the scale rig can re-grade the
@@ -477,20 +415,18 @@ object DedupQueries {
     * labels, and a 100 TB pipeline materializes exactly this stage to
     * storage anyway (a multi-consumer intermediate between the dedup pass
     * and every downstream curation step). Whoever computes it first in a
-    * process lands it beside the other sink dirs; `reuseLanding = true`
-    * callers (the curation pipeline) read the landing when its key — the
-    * input dir plus an algorithm version — matches, and recompute + land
-    * otherwise. `reuseLanding = false` callers (dedup_clusters itself,
-    * whose GATE is the propagation) always recompute, landing only when
-    * the landing is stale so its steady-state bench reps stay a pure
-    * measurement of the CC sweep.
+    * process lands it through [[clusterLanding]]; `reuseLanding = true`
+    * callers (the curation pipeline) read the landing back, with no Spark
+    * job, while one is in place for the corpus and algorithm version.
+    * `reuseLanding = false` callers (dedup_clusters itself, whose GATE is
+    * the propagation) always recompute, landing only when the landing is
+    * stale so its steady-state bench reps stay a pure measurement of the
+    * CC sweep.
     */
   private[graft] def clusterLabels(spark: org.apache.spark.sql.SparkSession,
                                    dir: String,
-                                   reuseLanding: Boolean): org.apache.spark.sql.DataFrame = {
-    // key version: bump with any minhash/banding change
-    landedOrCompute(spark, "dedup_clusters_land", s"$dir|cc-v1",
-      forceRecompute = !reuseLanding) {
+                                   reuseLanding: Boolean): org.apache.spark.sql.DataFrame =
+    clusterLanding(spark, dir).rows(spark, forceRecompute = !reuseLanding) {
       val labels = propagateMinLabels(
         minhashPairsSpark(spark, dir, reuseSigLanding = true)
           .select(col("doc_a"), col("doc_b")))
@@ -498,7 +434,10 @@ object DedupQueries {
         .join(labels, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
     }
-  }
+
+  /** The [[Landing]] of `dir`'s cluster labels, versioned by the minhash and banding. */
+  private[graft] def clusterLanding(spark: org.apache.spark.sql.SparkSession, dir: String): Landing =
+    Landing(spark, "dedup_clusters_land", Seq(dir), "cc-v1")
 
   private[queries] def clusterAssignments(spark: org.apache.spark.sql.SparkSession,
                                           dir: String): org.apache.spark.sql.DataFrame = {

@@ -149,7 +149,8 @@ object ParityQueries {
         Tables.embeddings(spark, dir)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
           .createOrReplaceTempView("graft_sqlfn_emb")
-        spark.sql(
+        // the result is analyzed against the views, so the views can go
+        try spark.sql(
           """SELECT d.doc_id,
             |       simhash32(d.hs) AS simhash_lo,
             |       md5(concat_ws(',', transform(minhash_signature(d.hs), x -> CAST(x AS STRING)))) AS minhash_digest,
@@ -157,6 +158,7 @@ object ParityQueries {
             |FROM (SELECT doc_id, array_distinct(h32_array(shn)) AS hs
             |      FROM graft_sqlfn_docs) d
             |JOIN graft_sqlfn_emb e ON d.doc_id = e.vec_id""".stripMargin)
+        finally Seq("graft_sqlfn_docs", "graft_sqlfn_emb").foreach(spark.catalog.dropTempView)
       },
       Some {
         val mh = Dedup.minhashSignatureSql("hs") // default width, as the 1-arg SQL builder

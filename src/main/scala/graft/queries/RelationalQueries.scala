@@ -1027,29 +1027,15 @@ object RelationalQueries {
           // the skewed fact as a 16-file table, so the scan has 16
           // mappers and the hot reduce partition is splittable at mapper
           // granularity — the shape any real multi-file table has.
-          // Landed ONCE per (process, sfDir) — the content is a
-          // deterministic function of the input, and re-writing it every
-          // bench rep would time harness landing, not the join (the
-          // landBands marker pattern; written LAST so a crashed landing
-          // never looks complete). The landing dir is KEYED by the input
-          // dir so ScaleStress's interleaved base/scaled reps each keep
-          // their own landing instead of alternately evicting the other's
-          // (a full 16-file re-land inside every timed rep — avoidable
-          // noise in a timing-ratio-graded query)
-          val factDir = StorageQueries.target(
-            s"skew_fact_land_${Integer.toHexString(dir.hashCode)}")
-          val marker = new java.io.File(factDir, "_LANDED_KEY")
-          if (!(marker.isFile &&
-                new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == dir)) {
+          // Landed once per input: re-writing it every bench rep would
+          // time harness landing, not the join
+          val ev = Landing(spark, "skew_fact_land", Seq(dir)).parquet {
             Tables.events(spark, dir)
               .select(when(pmod(col("user_id"), lit(4)) < 2, lit(1L))
                         .otherwise(col("user_id")).as("user_id"),
                       col("value"))
               .repartition(16)
-              .write.mode("overwrite").parquet(factDir)
-            java.nio.file.Files.write(marker.toPath, dir.getBytes("UTF-8")): Unit
-          }
-          val ev = spark.read.parquet(factDir)
+          }.read(spark)
           val dim = Tables.customer(spark, dir)
             .select(col("c_custkey").as("user_id"),
                     concat(lit("seg"), pmod(col("c_custkey"), lit(5))).as("segment"))

@@ -285,7 +285,8 @@ object SemiStructuredQueries {
       "q_variant_explode",
       (spark, dir) => {
         Tables.events(spark, dir).createOrReplaceTempView("variant_explode_src")
-        spark.sql(
+        // the result is analyzed against the view, so the view can go
+        try spark.sql(
           """SELECT ve.key AS prop_key,
             |       COUNT(*) AS n,
             |       MIN(variant_get(ve.value, '$', 'long')) AS min_v,
@@ -293,6 +294,7 @@ object SemiStructuredQueries {
             |FROM variant_explode_src ev,
             |LATERAL variant_explode(parse_json(ev.props)) ve
             |GROUP BY 1""".stripMargin)
+        finally spark.catalog.dropTempView("variant_explode_src")
       },
       Some("""SELECT k AS prop_key, COUNT(*) AS n,
              |       MIN(CAST(json_extract(props, '$.' || k) AS BIGINT)) AS min_v,

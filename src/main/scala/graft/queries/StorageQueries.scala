@@ -255,6 +255,18 @@ object StorageQueries {
       s"(≤ $MaxMetadataGrainRows rows, got $n); repartition the plan or " +
       s"aggregate to a bounded grain before the window")
 
+  /** `q_rebalance_write`'s fact, landed once per input as 16 files: the
+    * events with the planted hot write key `wkey`.
+    */
+  private[graft] def rebalanceFact(spark: org.apache.spark.sql.SparkSession, dir: String): Landing.Landed =
+    Landing(spark, "rebalance_fact", Seq(dir)).parquet {
+      Tables.events(spark, dir)
+        .select(when(pmod(col("user_id"), lit(4)) < 2, lit(1L))
+                  .otherwise(pmod(col("user_id"), lit(16))).as("wkey"),
+                col("event_id"), col("value"))
+        .repartition(16)
+    }
+
   val defs: Seq[QueryDef] = Seq(
 
     // partitioned parquet sink + partition-pruned re-read, oracle-checked:
@@ -1125,13 +1137,15 @@ object StorageQueries {
                   Money.cents(col("o_totalprice")).as("price_cents"))
           .where(col("o_orderstatus") =!= "P")
           .createOrReplaceTempView("v_orders_filtered")
-        spark.sql("""
+        // the result is analyzed against the view, so the view can go
+        try spark.sql("""
           SELECT o_orderstatus,
                  COUNT(*) AS n_orders,
                  CAST(SUM(price_cents) AS BIGINT) AS total_cents,
                  CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_customers
           FROM v_orders_filtered
           GROUP BY o_orderstatus""")
+        finally spark.catalog.dropTempView("v_orders_filtered")
       },
       Some(s"""SELECT o_orderstatus, COUNT(*) AS n_orders,
               |       CAST(SUM(${Money.centsSql("o_totalprice")}) AS BIGINT) AS total_cents,
@@ -1575,28 +1589,17 @@ object StorageQueries {
     QueryDef(
       "q_scan_split",
       (spark, dir) => {
-        // land ONCE per (process, input dir) — the skew gate's _LANDED_KEY
-        // marker pattern: the landing is a deterministic function of the
-        // input, and re-writing it every bench rep would time harness
-        // landing, not the split-read contract under grade. Re-land only
-        // when the key OR the single-file invariant no longer holds.
-        val tgt = target(s"scan_split_land_${Integer.toHexString(dir.hashCode)}")
-        def listDataFiles(): Array[java.io.File] =
-          Option(new java.io.File(tgt).listFiles()).getOrElse(Array.empty)
-            .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        val marker = new java.io.File(tgt, "_LANDED_KEY")
-        if (!(marker.isFile &&
-              new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == dir &&
-              listDataFiles().length == 1)) {
+        // landed once per input: re-writing it every bench rep would time
+        // harness landing, not the split-read contract under grade
+        val landed = Landing(spark, "scan_split_land", Seq(dir)).parquet {
           graft.Tables.lineitem(spark, dir)
             .select(col("l_orderkey"), col("l_returnflag"),
                     col("l_quantity").cast(LongType).as("qty"),
                     Money.cents(col("l_extendedprice")).as("price_cents"))
             .repartition(1)
-            .write.mode("overwrite").parquet(tgt)
-          java.nio.file.Files.write(marker.toPath, dir.getBytes("UTF-8")): Unit
         }
-        val dataFiles = listDataFiles()
+        val dataFiles = Option(new java.io.File(landed.dir).listFiles()).getOrElse(Array.empty)
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
         require(dataFiles.length == 1,
           s"scan-split grade needs ONE data file, landed ${dataFiles.length}")
         val bytes = dataFiles.head.length()
@@ -1605,7 +1608,7 @@ object StorageQueries {
         val (nSplit, out) = GraftSession.withConfs(spark,
           "spark.sql.files.maxPartitionBytes" -> maxBytes.toString,
           "spark.sql.files.openCostInBytes" -> "0") {
-          val df = spark.read.parquet(tgt)
+          val df = landed.read(spark)
           (df.rdd.getNumPartitions,
            df.groupBy(col("l_returnflag"))
              .agg(count(lit(1)).cast(LongType).as("n_rows"),
@@ -1619,7 +1622,7 @@ object StorageQueries {
         val nWhole = GraftSession.withConfs(spark,
           "spark.sql.files.maxPartitionBytes" -> (bytes * 2).toString,
           "spark.sql.files.openCostInBytes" -> bytes.toString) {
-          spark.read.parquet(tgt).rdd.getNumPartitions
+          landed.read(spark).rdd.getNumPartitions
         }
         require(nWhole == 1,
           s"with the split threshold above the file size the single file must " +
@@ -1967,27 +1970,13 @@ object StorageQueries {
     QueryDef(
       "q_rebalance_write",
       (spark, dir) => {
-        // land once per input dir (base and scaled stress corpora get
-        // distinct targets so alternating reps don't thrash re-landing)
-        val factDir = target(s"rebalance_fact_${Integer.toHexString(dir.hashCode)}")
-        val marker = new java.io.File(factDir, "_LANDED_KEY")
-        if (!(marker.isFile &&
-              new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == dir)) {
-          Tables.events(spark, dir)
-            .select(when(pmod(col("user_id"), lit(4)) < 2, lit(1L))
-                      .otherwise(pmod(col("user_id"), lit(16))).as("wkey"),
-                    col("event_id"), col("value"))
-            .repartition(16)
-            .write.mode("overwrite").parquet(factDir)
-          java.nio.file.Files.write(marker.toPath, dir.getBytes("UTF-8")): Unit
-        }
         GraftSession.withConfs(spark,
           "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2048",
           "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
           "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1024",
           "spark.sql.files.maxPartitionBytes" -> "16384",
           "spark.sql.adaptive.optimizeSkewsInRebalancePartitions.enabled" -> "true") {
-          val reb = spark.read.parquet(factDir).hint("rebalance", col("wkey"))
+          val reb = rebalanceFact(spark, dir).read(spark).hint("rebalance", col("wkey"))
           // AQE finalizes at runtime: execute (the checkpoint also feeds
           // the audit + write, so the shuffle runs once), then inspect
           val ck = reb.localCheckpoint(eager = true)
@@ -2046,25 +2035,20 @@ object StorageQueries {
     QueryDef(
       "q_nested_pruning",
       (spark, dir) => {
-        val tgt = target(s"nested_docs_${Integer.toHexString(dir.hashCode)}")
-        val marker = new java.io.File(tgt, "_LANDED_KEY")
-        if (!(marker.isFile &&
-              new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == dir)) {
+        val docs = Landing(spark, "nested_docs", Seq(dir)).parquet {
           Tables.documents(spark, dir)
             .select(col("doc_id"), col("text"),
                     struct(col("lang"), col("source"),
                            struct(col("n_chars"),
                                   substring(col("text"), 1, 1).as("head_char")).as("stats"))
                       .as("meta"))
-            .write.mode("overwrite").parquet(tgt)
-          java.nio.file.Files.write(marker.toPath, dir.getBytes("UTF-8")): Unit
         }
         // both on by default since 3.0/3.1 — pinned so a default flip
         // fails loudly here instead of silently widening every scan
         GraftSession.withConfs(spark,
           "spark.sql.optimizer.nestedSchemaPruning.enabled" -> "true",
           "spark.sql.optimizer.nestedPredicatePushdown.supportedFileSources" -> "parquet,orc") {
-          val q = spark.read.parquet(tgt)
+          val q = docs.read(spark)
             .where(col("meta.stats.n_chars") > 120)
             .groupBy(col("meta.lang").as("lang"))
             .agg(count(lit(1)).as("n_docs"),
@@ -2117,18 +2101,15 @@ object StorageQueries {
     QueryDef(
       "q_jsonl_corrupt",
       (spark, dir) => {
-        val tgt = target(s"jsonl_corrupt_${Integer.toHexString(dir.hashCode)}")
-        val marker = new java.io.File(tgt, "_LANDED_KEY")
-        if (!(marker.isFile &&
-              new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == dir)) {
+        val tgt = Landing(spark, "jsonl_corrupt", Seq(dir)).orWrite { tmp =>
           val line = to_json(struct(col("doc_id"), col("source"), col("lang"), col("text")))
-          Tables.documents(spark, dir)
+          val lines = Tables.documents(spark, dir)
             .select(when(pmod(col("doc_id"), lit(37)) === 0,
                          line.substr(lit(1), length(line) - 2))
                       .otherwise(line).as("value"))
-            .write.mode("overwrite").text(tgt)
-          java.nio.file.Files.write(marker.toPath, dir.getBytes("UTF-8")): Unit
-        }
+          lines.write.text(tmp)
+          lines.schema
+        }.dir
         val schema = StructType(Seq(
           StructField("doc_id", LongType), StructField("source", StringType),
           StructField("lang", StringType), StructField("text", StringType),

@@ -29,6 +29,16 @@ class HarnessSpec extends SparkTestBase {
       }
   }
 
+  test("the queries that register temp views leave the session's temp views as they were") {
+    def tempViews: Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    for (name <- Seq("q_view_model", "q_variant_explode", "q_sql_functions")) {
+      assert(Harness.evaluate(spark)(SparkEntry.queries(name)(spark, sf)).rows > 0, name)
+      assert(tempViews == before, s"$name left temp views behind: ${tempViews -- before}")
+    }
+  }
+
   test("subset ignores blank entries, and an all-blank value means no filter") {
     assert(Harness.subset(Some("a, ,b"), "spec").contains(Set("a", "b")))
     assert(Harness.subset(Some(""), "spec").isEmpty)

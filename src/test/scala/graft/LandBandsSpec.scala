@@ -21,10 +21,10 @@ class LandBandsSpec extends SparkTestBase {
     // v encodes its band (v / 1000), so batch contents identify bands
     val df = (0 until nBands).flatMap(b => (0 until 50).map(i => (b * 1000L + i, b)))
       .toDF("v", "__band")
-    val land = graft.queries.StreamingQueries.landBands(df, nBands, "spec_land_order", "spec")
+    val land = graft.queries.StreamingQueries.landBands(spark, df, nBands, "spec_land_order", "spec").dir
 
     // the landed files must carry strictly increasing mtimes in band order
-    // (_LANDED is the land-once cache marker; hidden from Spark's listing)
+    // (_LANDED is the landing's marker; hidden from Spark's listing)
     val files = new java.io.File(land).listFiles()
       .filterNot(_.getName.startsWith("_")).sortBy(_.getName)
     assert(files.map(_.getName).toSeq == (0 until nBands).map(i => f"b$i%04d.parquet"),
@@ -56,7 +56,9 @@ class LandBandsSpec extends SparkTestBase {
     import spark.implicits._
     val df = (0 until 2).flatMap(b => (0 until 5).map(i => (b * 10L + i, b)))
       .toDF("v", "__band")
-    val land = graft.queries.StreamingQueries.landBands(df, 2, "spec_land_cache", "sfA")
+    def landBands(sfDir: String): String =
+      graft.queries.StreamingQueries.landBands(spark, df, 2, "spec_land_cache", sfDir).dir
+    val land = landBands("sfA")
     val b1 = new java.io.File(land, "b0001.parquet")
     assert(b1.isFile)
     // a canary distinguishes a cache hit (dir untouched, canary survives)
@@ -66,21 +68,25 @@ class LandBandsSpec extends SparkTestBase {
     java.nio.file.Files.write(canary.toPath, Array[Byte](1)): Unit
     // same key with all bands intact: a pure cache hit returns without
     // re-landing
-    val land2 = graft.queries.StreamingQueries.landBands(df, 2, "spec_land_cache", "sfA")
+    val land2 = landBands("sfA")
     assert(land2 == land && canary.isFile, "same key must be a no-op cache hit")
     // delete one band, then call again with the SAME key: the marker alone
     // is not enough — a hit must see all n band files, so the gap forces a
     // full re-land instead of silently streaming a partial feed
     assert(b1.delete())
-    val land3 = graft.queries.StreamingQueries.landBands(df, 2, "spec_land_cache", "sfA")
+    val land3 = landBands("sfA")
     assert(land3 == land && b1.isFile, "missing band on a marker hit must re-land")
     assert(!canary.exists, "a re-land must start from a wiped dir")
-    // a different key (sf switch) must invalidate a STRUCTURALLY COMPLETE
-    // landing: all bands intact, canary planted — only the key comparison
-    // can force this re-land, so a key-check regression fails here
+    // a different key (sf switch) must not be served a STRUCTURALLY
+    // COMPLETE landing of the other key: all bands intact, canary planted —
+    // only the key can send this call elsewhere, so a key regression fails
+    // here
     java.nio.file.Files.write(canary.toPath, Array[Byte](1)): Unit
-    graft.queries.StreamingQueries.landBands(df, 2, "spec_land_cache", "sfB"): Unit
-    assert(b1.isFile && !canary.exists, "key change must wipe and re-land all bands")
+    val landB = landBands("sfB")
+    assert(landB != land && !new java.io.File(landB, "_canary").exists,
+      "key change must land all bands afresh")
+    assert((0 until 2).forall(i => new java.io.File(landB, f"b$i%04d.parquet").isFile))
+    assert(landBands("sfA") == land && canary.isFile, "the first key keeps its own landing")
   }
 
   test("a feed lands exactly its band count of files, and its rows total the input — time and hash banding") {
@@ -115,13 +121,15 @@ class LandBandsSpec extends SparkTestBase {
   test("a landing marker without a schema re-lands") {
     import spark.implicits._
     val df = Seq((1L, 0), (2L, 1)).toDF("v", "__band")
-    val land = graft.queries.StreamingQueries.landBands(df, 2, "spec_land_noschema", "sfA")
+    val land = graft.queries.StreamingQueries.landBands(spark, df, 2, "spec_land_noschema", "sfA").dir
     val marker = new java.io.File(land, "_LANDED")
     val canary = new java.io.File(land, "_canary")
     java.nio.file.Files.write(canary.toPath, Array[Byte](1)): Unit
-    java.nio.file.Files.write(marker.toPath, "sfA|2".getBytes("UTF-8")): Unit
-    graft.queries.StreamingQueries.landBands(df, 2, "spec_land_noschema", "sfA"): Unit
+    // the marker's key line alone
+    val keyLine = new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").split("\n").head
+    java.nio.file.Files.write(marker.toPath, keyLine.getBytes("UTF-8")): Unit
+    val again = graft.queries.StreamingQueries.landBands(spark, df, 2, "spec_land_noschema", "sfA")
     assert(!canary.exists, "a marker without a schema line must re-land")
-    assert(graft.queries.StreamingQueries.landedSchema(land) == df.drop("__band").schema)
+    assert(again.dir == land && again.schema == df.drop("__band").schema)
   }
 }
