@@ -7,8 +7,23 @@ import org.apache.spark.sql.functions.{col, struct}
 /** The query-run steps the dev mains share: Bench and tools.ScaleStress time
   * queries with [[evaluate]], and Bench, Verify and tools.ScaleStress read
   * their `*_ONLY` subset filters with [[subset]].
+  *
+  * Harness owns the session's cache. A query build persists and unpersists
+  * only what it creates and never clears the cache (the contract in
+  * [[graft.queries.QueryDef]]), so every main builds and evaluates each
+  * query inside [[scope]]: Bench and tools.ScaleStress through [[evaluate]],
+  * Verify around its write and tools.PlanDump around its explain.
   */
 private[graft] object Harness {
+
+  /** Clear the cache, run `body`, and clear the cache again, after a throw
+    * too, so no earlier cache entry serves `body` and none it leaves behind
+    * bleeds into the next run.
+    */
+  def scope[A](spark: SparkSession)(body: => A): A = {
+    spark.catalog.clearCache()
+    try body finally spark.catalog.clearCache()
+  }
 
   /** One forced evaluation: wall seconds of build + evaluation, the row
     * count, and the xor of the per-row hashes (0, the xor identity, for an
@@ -16,23 +31,18 @@ private[graft] object Harness {
     */
   final case class Evaluation(seconds: Double, rows: Long, hash: Long)
 
-  /** Clear cache → build → `count(*)` and `bit_xor(xxhash64(struct(*)))`
-    * over ALL output columns → clear cache. The hash is what forces every
-    * projection: a bare `.count()` lets Spark prune each one the count does
-    * not need, timing a different (cheaper) plan. The cache is cleared after
-    * a throw too, so a failed query's persisted intermediates cannot bleed
-    * into the next one.
+  /** Build → `count(*)` and `bit_xor(xxhash64(struct(*)))` over ALL output
+    * columns, inside [[scope]]. The hash is what forces every projection: a
+    * bare `.count()` lets Spark prune each one the count does not need,
+    * timing a different (cheaper) plan.
     */
-  def evaluate(spark: SparkSession)(build: => DataFrame): Evaluation = {
-    spark.catalog.clearCache()
-    try {
-      val t0 = System.nanoTime()
-      val df = build
-      val r = df.select(struct(df.columns.map(col).toIndexedSeq: _*).as("s"))
-        .selectExpr("count(*) AS n", "bit_xor(xxhash64(s)) AS h")
-        .head()
-      Evaluation((System.nanoTime() - t0) / 1e9, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    } finally spark.catalog.clearCache()
+  def evaluate(spark: SparkSession)(build: => DataFrame): Evaluation = scope(spark) {
+    val t0 = System.nanoTime()
+    val df = build
+    val r = df.select(struct(df.columns.map(col).toIndexedSeq: _*).as("s"))
+      .selectExpr("count(*) AS n", "bit_xor(xxhash64(s)) AS h")
+      .head()
+    Evaluation((System.nanoTime() - t0) / 1e9, r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
   /** A dev-only `*_ONLY` subset filter: the comma-separated names in `value`,
@@ -66,18 +76,17 @@ private[graft] object Harness {
   * left BENCH_r0{6,7}.json with parsed:null despite rc 0.
   *
   * Methodology (each query, each repetition):
-  *   - caches cleared BEFORE (queries persist intermediates internally) and
-  *     AFTER (so query N's leftover cache/GC pressure can't bleed into
-  *     query N+1) — the r1/r2 numbers swung up to 60× on identical code
-  *     from exactly that interference;
   *   - forced evaluation is [[Harness.evaluate]]: `count(*)` and
-  *     `bit_xor(xxhash64(struct(*)))` over ALL output columns;
-  *   - up to `reps` repetitions (default 3; heavyweight composite queries are
-  *     capped at 2 — their rep-to-rep variance is dominated by fixed setup
-  *     such as streaming state-store init and CC sweep scheduling, so the
-  *     third rep buys noise, not signal), reporting the MIN over completed
-  *     reps PLUS the full per-rep array, so a noisy host is visible in the
-  *     artifact itself;
+  *     `bit_xor(xxhash64(struct(*)))` over ALL output columns, inside
+  *     [[Harness.scope]], which clears the cache BEFORE and AFTER each rep
+  *     (the cache contract in [[graft.queries.QueryDef]]: builds persist
+  *     their own intermediates but never clear the cache), so query N's
+  *     leftover cache/GC pressure can't bleed into query N+1 — the r1/r2
+  *     numbers swung up to 60× on identical code from exactly that
+  *     interference;
+  *   - `reps` repetitions of every query (default 3), reporting the MIN
+  *     over completed reps PLUS the full per-rep array, so a noisy host is
+  *     visible in the artifact itself;
   *   - repetitions run round-robin ACROSS queries (rep 1 of every query,
   *     then rep 2 of every query, …) so one contention window degrades at
   *     most one rep of each query instead of every rep of a few;
@@ -104,36 +113,6 @@ private[graft] object Harness {
   *   SPARK_GRAFT_BENCH_ONLY=q_price_moments sbt "runMain graft.Bench"
   */
 object Bench {
-  /** Composite queries whose cost is dominated by fixed per-rep setup
-    * (streaming state-store spin-up, iterative CC sweeps, multi-retrieval
-    * recall grading) — capped at 2 reps; a third identical setup cycle adds
-    * wall-clock without sharpening the min.
-    */
-  private val HeavyComposites: Set[String] = Set(
-    "q_curation_pipeline", "dedup_clusters", "q_streaming_sessionize",
-    "ann_recall", "ann_quantized_recall", "ann_ivf_topk", "q_approx_quantiles",
-    "dedup_fuzzy_recall", "dedup_semantic", "dedup_minhash_recall",
-    "q_streaming_click_attribution", "q_streaming_left_outer",
-    "q_streaming_sessionize_timeout", "q_streaming_sessionize_tws",
-    "q_streaming_restart_tws", "q_triangles",
-    "ann_ivfpq_recall", "q_streaming_restart_outer",
-    // round-12 setup-dominated gates (state-store lifecycles, ANALYZE
-    // sweeps, forced-spill landings) — same cap criterion as the rest
-    "q_streaming_late_drop", "q_streaming_join_late_drop", "q_window_spill",
-    "q_cbo_broadcast", "q_cbo_join_reorder", "q_aqe_broadcast_convert",
-    // round-13 setup-dominated gates: two-lifecycle restarts (changelog,
-    // liststate, mapstate) and the double-stateful pipeline
-    "q_streaming_restart_changelog", "q_streaming_cdc_mapstate",
-    "q_streaming_attribution_liststate", "q_streaming_join_then_window",
-    "q_streaming_dedup_horizon",
-    // round-14 setup-dominated gates: the TTL gate is three Trigger.Once
-    // lifecycles around a mandatory 7.2 s TTL sleep; the redelivery gate
-    // is two lifecycles with a planted failure between them
-    "q_streaming_cdc_ttl", "q_streaming_foreach_retry",
-    // round-15 two-lifecycle gates (explicit deploy/restart boundaries) —
-    // same fixed-setup-dominated criterion
-    "q_state_time_travel", "q_streaming_state_evolution")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
@@ -189,8 +168,6 @@ object Bench {
     val only = Harness.subset(sys.env.get("SPARK_GRAFT_BENCH_ONLY"), "bench")
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    def repsFor(name: String): Int =
-      if (HeavyComposites.contains(name)) math.min(reps, 2) else reps
 
     val wall0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - wall0) / 1e9
@@ -275,19 +252,17 @@ object Bench {
     }
 
     for (r <- 1 to reps; (name, fn) <- named) {
-      if (r <= repsFor(name)) {
-        // rep 1 always runs (every query gets one observation); later reps
-        // are sacrificed first when the wall-clock budget runs out
-        if (r == 1 || elapsed < budgetSec) {
-          times(name) = times(name) :+ once(name, fn)
-          System.err.println(
-            f"[bench] $name rep $r/${repsFor(name)}: ${times(name).last}%.2fs (cumulative ${elapsed}%.0fs of budget ${budgetSec}%.0fs)")
-          emit(partial = true)
-        } else if (!budgetExhausted) {
-          budgetExhausted = true
-          System.err.println(
-            f"[bench] budget ${budgetSec}%.0fs exhausted at ${elapsed}%.0fs — skipping remaining reps (rep-1 coverage is complete)")
-        }
+      // rep 1 always runs (every query gets one observation); later reps
+      // are sacrificed first when the wall-clock budget runs out
+      if (r == 1 || elapsed < budgetSec) {
+        times(name) = times(name) :+ once(name, fn)
+        System.err.println(
+          f"[bench] $name rep $r/$reps: ${times(name).last}%.2fs (cumulative ${elapsed}%.0fs of budget ${budgetSec}%.0fs)")
+        emit(partial = true)
+      } else if (!budgetExhausted) {
+        budgetExhausted = true
+        System.err.println(
+          f"[bench] budget ${budgetSec}%.0fs exhausted at ${elapsed}%.0fs — skipping remaining reps (rep-1 coverage is complete)")
       }
     }
     emit(partial = false)

@@ -37,7 +37,9 @@ object Verify {
       // last shuffle onto one task; repartition inserts an exchange so the
       // query itself keeps its parallelism
       try {
-        fn(spark, sfDir).repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        Harness.scope(spark) {
+          fn(spark, sfDir).repartition(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
         None
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

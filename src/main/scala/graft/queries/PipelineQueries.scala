@@ -202,7 +202,6 @@ object PipelineQueries {
     QueryDef(
       "q_curation_pipeline",
       (spark, dir) => {
-        spark.catalog.clearCache()
         // quality filter then representative-per-cluster among survivors;
         // the cluster landing is computed once per process by whichever
         // of dedup_clusters / this pipeline runs first (see
@@ -255,7 +254,6 @@ object PipelineQueries {
     QueryDef(
       "q_decontaminate",
       (spark, dir) => {
-        spark.catalog.clearCache()
         val hs = graft.dedup.Dedup.shingleHashSets(
           Tables.documents(spark, dir), DecontamK).persist()
         hs.count() // eval + train sides share the shingle cache
@@ -419,7 +417,6 @@ object PipelineQueries {
       "q_pack_sequences",
       (spark, dir) => {
         val B = 4096
-        spark.catalog.clearCache() // queries run sequentially; drop stale persists
         // persist + eager count: the intra-bucket window and the offsets
         // aggregation both consume this — without it the documents scan and
         // the tokenizer regex run twice
@@ -491,7 +488,6 @@ object PipelineQueries {
       "q_export_pipeline",
       (spark, dir) => {
         import spark.implicits._
-        spark.catalog.clearCache()
         // stages 1+2: quality survivors, then the min-doc_id
         // representative per near-dup cluster among them (the shared
         // curation front half)
@@ -663,7 +659,6 @@ object PipelineQueries {
       "q_tokenized_shards",
       (spark, dir) => {
         import spark.implicits._
-        spark.catalog.clearCache()
         val (reps, clusters) = curationReps(spark, dir)
         val (v0, loadedMerges) = landedBpeMerges(spark, dir, "tokshards_bpe_artifact")
         val wids = tokenizerIds(v0, loadedMerges)
@@ -992,7 +987,6 @@ object PipelineQueries {
     QueryDef(
       "q_weighted_sample",
       (spark, dir) => {
-        spark.catalog.clearCache() // queries run sequentially; drop stale persists
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), col("n_chars").cast("long").as("w"))
           .withColumn("bucket", expr(s"doc_id div $WsBucket"))

@@ -6,6 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the equivalent ANSI SQL the driver runs in DuckDB over the same parquet
   * tables. Column aliases MUST match between the two — the driver's compare
   * sorts columns by name before hashing values.
+  *
+  * The cache contract: a build may persist and unpersist what it creates;
+  * it never clears the session's cache and touches no entry it did not
+  * create. Whoever evaluates the query owns the cache: every main runs a
+  * query inside `graft.Harness.scope`, which clears it before and after.
   */
 final case class QueryDef(
     name: String,

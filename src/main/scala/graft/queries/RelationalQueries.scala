@@ -76,6 +76,15 @@ object RelationalQueries {
     * Gates run serially (Verify/Bench/specs); the shared lock makes that
     * assumption ENFORCED — two concurrent scoped mutations of the JVM-global
     * conf would otherwise silently leak into each other's shuffles.
+    *
+    * No session-scoped route exists for its one key,
+    * `spark.shuffle.spill.numElementsForceSpillThreshold` (checked against
+    * the Spark 4.1.2 jars): `UnsafeExternalRowSorter`'s constructor, behind
+    * every `SortExec`, reads it from `SparkEnv.get.conf` and takes no
+    * threshold argument, and SQLConf's spill thresholds
+    * (`spark.sql.{windowExec,sessionWindow,sortMergeJoinExec,
+    * cartesianProductExec}.buffer.spill.threshold`) reach only the window,
+    * join and cartesian row buffers, never that sorter.
     */
   private val sparkEnvConfLock = new Object
   private[graft] def withSparkEnvConfs[A](pairs: (String, String)*)(body: => A): A =

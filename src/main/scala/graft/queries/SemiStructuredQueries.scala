@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.functions.Money
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

@@ -162,6 +162,30 @@ object SimilarityQueries {
     s"""$topkSql
        |SELECT query_id, vec_id, rank, cosine FROM r WHERE rank <= $K""".stripMargin
 
+  /** recall@k of an approximate top-k against the exact one, per query:
+    * `hits` counts the exact top-[[K]] rows the approximation also returned,
+    * and `recall_at_k` = hits / K divides the same two integers on both
+    * engines, so the doubles are bit-identical. [[recallAtKSql]] is its
+    * oracle.
+    */
+  private def recallAtK(exact: DataFrame, approx: DataFrame): DataFrame =
+    exact.select(col("query_id"), col("vec_id"))
+      .join(approx.select(col("query_id"), col("vec_id"), lit(1L).as("hit")),
+            Seq("query_id", "vec_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(col("hit")).as("hits"))
+      .select(col("query_id"), col("hits"),
+              (col("hits").cast("double") / lit(K.toDouble)).as("recall_at_k"))
+
+  /** The SQL of [[recallAtK]] over two CTEs in scope: `bf`, the brute-force
+    * top-k ([[bruteforceSql]]), and `approx`.
+    */
+  private def recallAtKSql(approx: String): String =
+    s"""SELECT b.query_id, CAST(COUNT(a.vec_id) AS BIGINT) AS hits,
+       |       CAST(COUNT(a.vec_id) AS DOUBLE) / CAST($K AS DOUBLE) AS recall_at_k
+       |FROM bf b LEFT JOIN $approx a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
+       |GROUP BY b.query_id""".stripMargin
+
   /** Symmetric int8 quantization levels: q_i = floor(v_i · 127/max|v| + ½),
     * so every component lands in [-127, 127].
     */
@@ -595,7 +619,6 @@ object SimilarityQueries {
     * join-backs all read the signature cache.
     */
   private def lshTopkSpark(spark: SparkSession, dir: String): DataFrame = {
-    spark.catalog.clearCache() // sequential query contract; drop stale persists
     // persist: the signed-projection signature (16 interpreted plane
     // dots per vector) feeds the band explode and two score join-backs
     val n = normed(spark, dir).withColumn("sig", Vectors.lshSignature(col("v"))).persist()
@@ -973,10 +996,7 @@ object SimilarityQueries {
     // corpus; the mean recompute is one posexplode + two-level hash agg.
     QueryDef(
       "ann_ivf_topk",
-      (spark, dir) => {
-        spark.catalog.clearCache() // sequential query contract; drop stale persists
-        ivfTopkSpark(spark, dir)
-      },
+      ivfTopkSpark(_, _),
       Some(ivfTopkSql)
     ),
 
@@ -1002,23 +1022,15 @@ object SimilarityQueries {
     QueryDef(
       "ann_recall",
       (spark, dir) => {
-        // build order matters: lshTopkSpark clearCaches at its start, so it
-        // runs first; ivfTopkSpark then adds its persists WITHOUT clearing,
-        // keeping the signature cache live for the final evaluation
         val lsh = lshTopkSpark(spark, dir)
         val ivf = ivfTopkSpark(spark, dir)
         // NOTE (r17, measured): persisting bf (consumed by both recall
         // legs) bench'd identical — the planner's exchange reuse already
         // shares the brute-force subtree within the one union plan. Left
         // lazy.
-        val bf = topkSpark(spark, dir).select(col("query_id"), col("vec_id"))
+        val bf = topkSpark(spark, dir)
         def recallOf(approx: DataFrame, method: String): DataFrame =
-          bf.join(approx.select(col("query_id"), col("vec_id"), lit(1L).as("hit")),
-                  Seq("query_id", "vec_id"), "left")
-            .groupBy(col("query_id"))
-            .agg(count(col("hit")).as("hits"))
-            .select(lit(method).as("method"), col("query_id"), col("hits"),
-                    (col("hits").cast("double") / lit(K.toDouble)).as("recall_at_k"))
+          recallAtK(bf, approx).select(lit(method).as("method"), col("*"))
         recallOf(lsh, "lsh").unionByName(recallOf(ivf, "ivf"))
       },
       Some {
@@ -1030,19 +1042,10 @@ object SimilarityQueries {
            |),
            |ivfq AS (
            |$ivfTopkSql
-           |),
-           |rec AS (
-           |  SELECT 'lsh' AS method, b.query_id, COUNT(a.vec_id) AS hits
-           |  FROM bf b LEFT JOIN lshq a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-           |  GROUP BY b.query_id
-           |  UNION ALL
-           |  SELECT 'ivf' AS method, b.query_id, COUNT(a.vec_id) AS hits
-           |  FROM bf b LEFT JOIN ivfq a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-           |  GROUP BY b.query_id
            |)
-           |SELECT method, query_id, CAST(hits AS BIGINT) AS hits,
-           |       CAST(hits AS DOUBLE) / CAST($K AS DOUBLE) AS recall_at_k
-           |FROM rec""".stripMargin
+           |SELECT 'lsh' AS method, * FROM (${recallAtKSql("lshq")})
+           |UNION ALL
+           |SELECT 'ivf' AS method, * FROM (${recallAtKSql("ivfq")})""".stripMargin
       }
     ),
 
@@ -1057,16 +1060,7 @@ object SimilarityQueries {
     // retrieval, and the recall arithmetic independently.
     QueryDef(
       "ann_quantized_recall",
-      (spark, dir) => {
-        spark.catalog.clearCache() // sequential query contract
-        val qz = quantTopkSpark(spark, dir).select(col("query_id"), col("vec_id"))
-        val bf = topkSpark(spark, dir).select(col("query_id"), col("vec_id"))
-        bf.join(qz.withColumn("hit", lit(1L)), Seq("query_id", "vec_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(col("hit")).as("hits"))
-          .select(col("query_id"), col("hits"),
-                  (col("hits").cast("double") / lit(K.toDouble)).as("recall_at_k"))
-      },
+      (spark, dir) => recallAtK(topkSpark(spark, dir), quantTopkSpark(spark, dir)),
       Some {
         s"""WITH bf AS (
            |$bruteforceSql
@@ -1074,10 +1068,7 @@ object SimilarityQueries {
            |qz AS (
            |$quantTopkSql
            |)
-           |SELECT b.query_id, CAST(COUNT(a.vec_id) AS BIGINT) AS hits,
-           |       CAST(COUNT(a.vec_id) AS DOUBLE) / CAST($K AS DOUBLE) AS recall_at_k
-           |FROM bf b LEFT JOIN qz a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-           |GROUP BY b.query_id""".stripMargin
+           |${recallAtKSql("qz")}""".stripMargin
       }
     ),
 
@@ -1094,16 +1085,7 @@ object SimilarityQueries {
     // the measured recall itself, reported per query.
     QueryDef(
       "ann_pq_recall",
-      (spark, dir) => {
-        spark.catalog.clearCache() // sequential query contract
-        val pq = pqTopkSpark(spark, dir)
-        val bf = topkSpark(spark, dir).select(col("query_id"), col("vec_id"))
-        bf.join(pq.withColumn("hit", lit(1L)), Seq("query_id", "vec_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(col("hit")).as("hits"))
-          .select(col("query_id"), col("hits"),
-                  (col("hits").cast("double") / lit(K.toDouble)).as("recall_at_k"))
-      },
+      (spark, dir) => recallAtK(topkSpark(spark, dir), pqTopkSpark(spark, dir)),
       Some {
         s"""WITH bf AS (
            |$bruteforceSql
@@ -1111,10 +1093,7 @@ object SimilarityQueries {
            |pq AS (
            |$pqTopkSql
            |)
-           |SELECT b.query_id, CAST(COUNT(a.vec_id) AS BIGINT) AS hits,
-           |       CAST(COUNT(a.vec_id) AS DOUBLE) / CAST($K AS DOUBLE) AS recall_at_k
-           |FROM bf b LEFT JOIN pq a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-           |GROUP BY b.query_id""".stripMargin
+           |${recallAtKSql("pq")}""".stripMargin
       }
     ),
 
@@ -1138,14 +1117,7 @@ object SimilarityQueries {
     QueryDef(
       "ann_ivfpq_recall",
       (spark, dir) => {
-        spark.catalog.clearCache() // sequential query contract
-        val pq = ivfpqTopkSpark(spark, dir)
-        val bf = topkSpark(spark, dir).select(col("query_id"), col("vec_id"))
-        val out = bf.join(pq.withColumn("hit", lit(1L)), Seq("query_id", "vec_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(col("hit")).as("hits"))
-          .select(col("query_id"), col("hits"),
-                  (col("hits").cast("double") / lit(K.toDouble)).as("recall_at_k"))
+        val out = recallAtK(topkSpark(spark, dir), ivfpqTopkSpark(spark, dir))
           .localCheckpoint(eager = true)
         val mean = out.agg(avg(col("recall_at_k"))).head().getDouble(0)
         require(mean >= 0.40,
@@ -1160,10 +1132,7 @@ object SimilarityQueries {
            |pq AS (
            |$ivfpqTopkSql
            |)
-           |SELECT b.query_id, CAST(COUNT(a.vec_id) AS BIGINT) AS hits,
-           |       CAST(COUNT(a.vec_id) AS DOUBLE) / CAST($K AS DOUBLE) AS recall_at_k
-           |FROM bf b LEFT JOIN pq a ON a.query_id = b.query_id AND a.vec_id = b.vec_id
-           |GROUP BY b.query_id""".stripMargin
+           |${recallAtKSql("pq")}""".stripMargin
       }
     ),
 
@@ -1197,7 +1166,6 @@ object SimilarityQueries {
     QueryDef(
       "dedup_embedding_cosine",
       (spark, dir) => {
-        spark.catalog.clearCache()
         val n = normed(spark, dir).persist() // both sides of the pair join
         requireExactPairBudget(n.count())
         n.as("a").join(n.as("b"), col("a.vec_id") < col("b.vec_id"))
@@ -1230,7 +1198,6 @@ object SimilarityQueries {
     QueryDef(
       "dedup_semantic",
       (spark, dir) => {
-        spark.catalog.clearCache() // sequential query contract
         val (n, cand, scored) = semanticStages(spark, dir)
         requireExactPairBudget(n.count()) // bounds the GRADING side only
         val exact = n.as("a").join(n.as("b"), col("a.vec_id") < col("b.vec_id"))

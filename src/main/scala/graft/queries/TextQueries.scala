@@ -666,7 +666,6 @@ object TextQueries {
         import spark.implicits._
         import graft.functions.{Hashing, Udafs}
         val num = (KmvK - 1).toLong * Hashing.H32Max // estimator numerator (k-1)·2³²
-        spark.catalog.clearCache() // queries run sequentially; drop stale persists
         // hash BEFORE the distinct: the shuffle carries (grp, int64), not
         // (grp, shingle string) — ~5× less shuffle volume. The "exact"
         // grading reference is therefore distinct-HASH cardinality, which
@@ -1044,7 +1043,6 @@ object TextQueries {
     QueryDef(
       "text_repeated_spans",
       (spark, dir) => {
-        spark.catalog.clearCache()
         val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
         // ONE persisted shingle stage feeding both passes. The persist is a
         // materialization barrier BEFORE the explodes — exploding a

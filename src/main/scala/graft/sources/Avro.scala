@@ -168,7 +168,7 @@ object Avro {
         if (t.isArray && t.size() == 2 && t.get(0).isTextual &&
             t.get(0).asText() == "null")
           ANullable(simple(t.get(1), fname) match {
-            case n: ANullable => throw new IllegalArgumentException(
+            case _: ANullable => throw new IllegalArgumentException(
               s"field '$fname': nested nullable unions are not Avro")
             case inner => inner
           })
@@ -252,7 +252,7 @@ object Avro {
         val bits = java.lang.Double.doubleToLongBits(x)
         var i = 0; while (i < 8) { out.write(((bits >>> (8 * i)) & 0xff).toInt); i += 1 }
       case (ABoolean, x: Boolean) => out.write(if (x) 1 else 0)
-      case (d @ ADecimal(p, s), x: java.math.BigDecimal) =>
+      case (ADecimal(p, s), x: java.math.BigDecimal) =>
         // the spec's bytes-decimal: two's-complement big-endian unscaled
         // value at EXACTLY the declared scale — a value at another scale
         // is a caller bug, rejected rather than silently rescaled/rounded

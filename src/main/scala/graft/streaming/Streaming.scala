@@ -107,7 +107,7 @@ object Streaming {
         OutputMode.Append(), timeoutConf) {
         (userId: Long, it: Iterator[Event], state: GroupState[SessionState]) =>
           sessionStep(userId, it, state,
-            onOpen = s => if (flushOnTimeout) state.setTimeoutDuration(SessionGapMs))
+            onOpen = _ => if (flushOnTimeout) state.setTimeoutDuration(SessionGapMs))
       }
   }
 

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.ReferencePipeline
-import graft.udf.{Materializer, Param, TvfSpec, UdfSpec}
+import graft.udf.{Materializer, TvfSpec}
 import org.apache.spark.sql.SparkSession
 
 /** Cross-SESSION function persistence, proven by actually restarting: the

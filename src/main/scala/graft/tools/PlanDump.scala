@@ -12,7 +12,10 @@ package graft.tools
   * streaming gates RUN their stream and return the sink readback, so their
   * dumped plan is the readback's — still the honest "what the bench times
   * last", but the stream's own plan is in the checkpoint's offsets/metadata,
-  * not here).
+  * not here). Each build and its explain run inside [[graft.Harness.scope]],
+  * as the bench's evaluation does (the cache contract in
+  * [[graft.queries.QueryDef]]), so a dumped plan shows the build's own
+  * persisted intermediates and no other query's.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -23,9 +26,10 @@ object PlanDump {
     val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = graft.Harness.scope(spark) {
+        graft.SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      }
       val p = java.nio.file.Paths.get(outDir, s"${name}_$tag.txt")
       java.nio.file.Files.write(p, plan.getBytes("UTF-8"))
       println(s"PLAN $name -> $p")

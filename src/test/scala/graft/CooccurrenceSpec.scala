@@ -13,7 +13,6 @@ class CooccurrenceSpec extends SparkTestBase {
       assert(n12 <= math.min(df1, df2), "joint doc count cannot exceed either marginal")
       assert(fx >= 0L)
     }
-    spark.catalog.clearCache()
   }
 
   test("cooccurrence: pmi_fx is the exact integer fixed-point ratio") {
@@ -24,6 +23,5 @@ class CooccurrenceSpec extends SparkTestBase {
       assert(fx == (n12 * nd * 1000000L) / (df1 * df2),
              "pmi_fx must be (n12*N*10^6) div (df1*df2) exactly")
     }
-    spark.catalog.clearCache()
   }
 }

@@ -13,7 +13,6 @@ class EventsAnalyticsSpec extends SparkTestBase {
       assert(ret == nActive.toDouble / size.toDouble, "retention is the exact ratio")
       if (offset == 0) assert(nActive == size, "every cohort member is active in week 0")
     }
-    spark.catalog.clearCache()
   }
 
   test("retention cohorts: cohort sizes partition the purchasing-user population") {
@@ -24,7 +23,6 @@ class EventsAnalyticsSpec extends SparkTestBase {
       .select("user_id").distinct().count()
     assert(perCohort.values.sum == purchasers,
            "summed cohort sizes must equal the distinct purchasing users")
-    spark.catalog.clearCache()
   }
 
   test("funnel: stage counts are monotone non-increasing and fractions consistent") {
@@ -34,7 +32,6 @@ class EventsAnalyticsSpec extends SparkTestBase {
     assert(n(0) >= n(1) && n(1) >= n(2), "each stage can only lose users")
     assert(rows(2).getDouble(3) == n(2).toDouble / n(0).toDouble,
            "conv_from_first is the exact purchase/view ratio")
-    spark.catalog.clearCache()
   }
 
   test("MAD outliers: the rule is live and consistent with its own counts") {

@@ -15,7 +15,6 @@ class GraphSpec extends SparkTestBase {
       assert(r.getDouble(3) == r.getLong(2).toDouble / (1L << 40).toDouble,
              "rank is exactly rank_fx / 2^40")
     }
-    spark.catalog.clearCache()
   }
 
   test("pagerank mass: integer floors only ever lose mass, never create it") {
@@ -25,7 +24,6 @@ class GraphSpec extends SparkTestBase {
     val rows = SparkEntry.queries("q_pagerank")(spark, sf).collect()
     val topMass = rows.map(_.getLong(2)).sum
     assert(topMass <= (1L << 40), "top-20 mass alone must stay under the total budget")
-    spark.catalog.clearCache()
   }
 
   test("triangles: counts satisfy the orientation invariants") {
@@ -37,7 +35,6 @@ class GraphSpec extends SparkTestBase {
     // an undirected edge set can't exceed n(n-1)/2
     assert(tris <= wedges, "every triangle closes a wedge")
     assert(edges <= nodes * (nodes - 1) / 2, "simple-graph edge bound")
-    spark.catalog.clearCache()
   }
 
   test("triangles: matches the unoriented closed-triple count on a planted graph") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.{col, lit, raise_error}
+import org.apache.spark.storage.StorageLevel
 
 class HarnessSpec extends SparkTestBase {
 
@@ -37,6 +38,26 @@ class HarnessSpec extends SparkTestBase {
       assert(Harness.evaluate(spark)(SparkEntry.queries(name)(spark, sf)).rows > 0, name)
       assert(tempViews == before, s"$name left temp views behind: ${tempViews -- before}")
     }
+  }
+
+  test("a query build leaves the caller's cache alone") {
+    // builds that persist and count intermediates of their own while
+    // building; ann_lsh_topk covers lshTopkSpark, which ann_recall shares
+    val builds = Seq(
+      "dedup_minhash_lsh", "dedup_containment", "dedup_clusters", "dedup_clusters_star",
+      "dedup_simhash", "dedup_incremental", "dedup_minhash_recall", "dedup_ngram_jaccard",
+      "q_pagerank", "q_triangles", "q_bfs_levels",
+      "q_curation_pipeline", "q_decontaminate", "q_pack_sequences", "q_export_pipeline",
+      "q_tokenized_shards", "q_weighted_sample",
+      "q_kmv_overlap", "text_repeated_spans",
+      "ann_lsh_topk", "ann_ivf_topk", "ann_quantized_recall", "ann_pq_recall",
+      "ann_ivfpq_recall", "dedup_embedding_cosine", "dedup_semantic")
+    val sentinel = spark.range(1000).persist()
+    sentinel.count()
+    try builds.foreach { name =>
+      SparkEntry.queries(name)(spark, sf)
+      assert(sentinel.storageLevel != StorageLevel.NONE, s"building $name dropped the caller's cache")
+    } finally sentinel.unpersist()
   }
 
   test("subset ignores blank entries, and an all-blank value means no filter") {

@@ -19,7 +19,6 @@ class InvertedIndexSpec extends SparkTestBase {
              s"$term: doc ids must be strictly increasing")
       assert(entries.forall(_._2 >= 1), s"$term: every posting has tf >= 1")
     }
-    spark.catalog.clearCache()
   }
 
   test("inverted index: bucketed assembly equals a direct per-term build") {
@@ -38,6 +37,5 @@ class InvertedIndexSpec extends SparkTestBase {
       assert(r.getString(3) == direct(r.getString(0)),
              s"${r.getString(0)}: segmented concat must equal the unsegmented postings")
     }
-    spark.catalog.clearCache()
   }
 }

@@ -165,7 +165,6 @@ class PlanSpec extends SparkTestBase {
            s"blocked pair path must stay equi-join:\n$plan")
     assert(!plan.contains("CartesianProduct"),
            s"nothing in the pipeline may plan a true cartesian:\n$plan")
-    spark.catalog.clearCache() // semanticStages persists its intermediates
   }
 
   test("pair-stage dot product stays inside whole-stage codegen") {

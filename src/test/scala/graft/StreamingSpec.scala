@@ -270,7 +270,6 @@ class StreamingSpec extends SparkTestBase {
     val nEvents = Tables.events(spark, sf).count()
     assert(out.map(_.getLong(2)).sum == nEvents,
            "summed window counts must equal the full event count (no window lost to the watermark)")
-    spark.catalog.clearCache()
   }
 
   test("stream-stream click attribution honors the interval boundaries") {
